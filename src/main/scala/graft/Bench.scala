@@ -4,28 +4,39 @@ import org.apache.spark.sql.functions._
 
 object Bench {
 
+  /** Runs each named step on its own: a step that throws is named on
+    * stderr and the remaining steps still run (stdout is left to the
+    * caller's JSON lines). Returns the failed steps' names.
+    */
+  private[graft] def runSteps(steps: Seq[(String, () => Any)]): Seq[String] =
+    steps.flatMap { case (name, body) =>
+      try { body(); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup step $name failed: $e")
+        Some(name)
+      }
+    }
+
   /** JIT + one-time layout warmup shared by Bench, KeyTime, and any other
     * timing tool: runs the flagship query once, then builds the amortized
     * layout artifacts (partitioned/bucketed copies, streaming slice cut,
     * ANN indexes, graph edge cache, dedup signature index, DSv2 topic) so
     * the first timed query measures the QUERY. Single source of truth —
     * a tool with its own copy of this list goes cold the next time a
-    * warm cache is added.
+    * warm cache is added. Every step runs through [[runSteps]].
     */
   def warmup(spark: SparkSession, sfDir: String): Unit = {
-    try { SparkEntry.entry(spark).count(); () }
-    catch { case _: Throwable => () }
-    try {
-      graft.operators.LayoutCache.partitionedLineitem(spark, sfDir)
-      graft.operators.LayoutCache.zorderedLineitem(spark, sfDir)
-      graft.operators.LayoutCache.bucketedTables(spark, sfDir)
-      graft.operators.Streaming.prepareInputs(spark, sfDir)
-      graft.operators.Similarity.warmIndexes(spark, sfDir)
-      graft.operators.Pipeline.warmGraph(spark, sfDir)
-      graft.operators.Dedup.warmDedup(spark, sfDir)
-      graft.operators.DsV2.topic(spark, sfDir)
-      ()
-    } catch { case _: Throwable => () }
+    import graft.operators.{Dedup, DsV2, LayoutCache, Pipeline, Similarity, Streaming}
+    runSteps(Seq(
+      "entry" -> (() => SparkEntry.entry(spark).count()),
+      "layout.partitioned" -> (() => LayoutCache.partitionedLineitem(spark, sfDir)),
+      "layout.zordered" -> (() => LayoutCache.zorderedLineitem(spark, sfDir)),
+      "layout.bucketed" -> (() => LayoutCache.bucketedTables(spark, sfDir)),
+      "stream_inputs" -> (() => Streaming.prepareInputs(spark, sfDir)),
+      "ann_index" -> (() => Similarity.warmIndexes(spark, sfDir)),
+      "graph_cache" -> (() => Pipeline.warmGraph(spark, sfDir)),
+      "dedup_index" -> (() => Dedup.warmDedup(spark, sfDir)),
+      "dsv2_topic" -> (() => DsV2.topic(spark, sfDir))))
     // JIT/codegen breadth pass (r16): the reversed-order A/B proved the
     // first ~2 execution deciles of every fresh-JVM sweep pay a 1.3-1.7x
     // premium that follows POSITION, not key identity — C2 compilation
@@ -37,19 +48,13 @@ object Bench {
     // classes. Streaming keys are excluded (each runs a real
     // microbatch lifecycle — seconds of wall for little shared JIT,
     // and they execute late in the sweep anyway, past the ramp).
-    try {
-      val tiny = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
-      if (java.nio.file.Files.isDirectory(tiny) &&
-        tiny.toString != sfDir) {
-        val t = tiny.toString
-        SparkEntry.queries.toSeq.sortBy(_._1)
-          .filterNot(_._1.startsWith("stream_"))
-          .foreach { case (_, fn) =>
-            try { fn(spark, t).queryExecution.toRdd.count(); () }
-            catch { case _: Throwable => () }
-          }
-      }
-    } catch { case _: Throwable => () }
+    val tiny = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
+    if (java.nio.file.Files.isDirectory(tiny) && tiny.toString != sfDir)
+      runSteps(SparkEntry.queries.toSeq.sortBy(_._1)
+        .filterNot(_._1.startsWith("stream_"))
+        .map { case (k, fn) =>
+          s"jit:$k" -> (() => fn(spark, tiny.toString).queryExecution.toRdd.count())
+        })
   }
 
   /** Cross-round comparability ledger (ADVICE r14): keys whose

@@ -3316,12 +3316,13 @@ package object api {
         // counting per m attaches each label to the edge set with the
         // node-row label frame as the join's build side (shuffle_hash —
         // sort-merge would sort the Σdeg edge stream per round), and
-        // AQE's exchange reuse runs the adjacency shuffle once across
-        // all rounds (r18; was join-on-m + a sort+row_number window per
-        // round). The per-node argmax ((cnt desc, label asc)) is a
-        // single codegen long-min: pack = label − cnt·2^40 orders by
-        // (−cnt, label) lexicographically, and label = pack & (2^40−1)
-        // recovers the winner — min(struct(…)) plans as a SortAggregate,
+        // the static ReuseExchange rule runs the adjacency shuffle once
+        // across all rounds — quietRounds turns AQE off here (r18; was
+        // join-on-m + a sort+row_number window per round). The per-node
+        // argmax ((cnt desc, label asc)) is a single codegen long-min:
+        // pack = label − cnt·2^40 orders by (−cnt, label)
+        // lexicographically, and label = pack & (2^40−1) recovers the
+        // winner — min(struct(…)) plans as a SortAggregate,
         // the packed long stays a hash aggregate. Contract (same as the
         // triangle census ord packing): node ids in [0, 2^40), degrees
         // below 2^23.

@@ -44,6 +44,23 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       sp.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The session's AQE advisory partition size in bytes: the partition
+    * size AQE coalesces small shuffle partitions towards.
+    */
+  def advisoryPartitionBytes(sp: org.apache.spark.sql.SparkSession): Long =
+    sqlConf(sp).getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
+  /** The session's `spark.sql.files.openCostInBytes`: Spark's estimate of
+    * the bytes a task scans in the time it takes to open one file. A file
+    * split is never smaller, so a file this size scans in one task.
+    */
+  def fileOpenCostBytes(sp: org.apache.spark.sql.SparkSession): Long =
+    sqlConf(sp).filesOpenCostInBytes
+
+  private def sqlConf(sp: org.apache.spark.sql.SparkSession) =
+    sp.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
   /** Expose the strategies a SparkSessionExtensions instance would install
     * (private[sql]) so specs can assert GraftExtensions' planner wiring
     * without building a second session in the test JVM.

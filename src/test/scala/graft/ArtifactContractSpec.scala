@@ -160,4 +160,15 @@ class ArtifactContractSpec extends AnyFunSuite {
       Files.readString(f).split("\n").toSeq)
     assert(rc == 0, s"persisted bench artifact violates the contract:\n$out")
   }
+
+  test("Bench.warmup's steps fail one at a time: each failure is named, " +
+    "later steps still run") {
+    var ran = Seq.empty[String]
+    def ok(n: String): (String, () => Any) = n -> (() => { ran :+= n })
+    def bad(n: String): (String, () => Any) =
+      n -> (() => throw new IllegalStateException(n))
+    val failed = Bench.runSteps(Seq(ok("a"), bad("b"), ok("c"), bad("d"), ok("e")))
+    assert(failed == Seq("b", "d"))
+    assert(ran == Seq("a", "c", "e"))
+  }
 }

@@ -271,7 +271,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // tuning detail. Counts are on the pre-execution physical plan.
     // Every registry query ends in an orderBy for oracle determinism —
     // that range exchange is part of the budget (drop it in production
-    // use and each budget shrinks by one).
+    // use and each budget shrinks by one). The plans are the keys' own
+    // `run` frames, before the registry's final-sort policy
+    // (SparkEntry.oneTaskFinalSort) may trade that exchange for a
+    // one-task sort, so every budget keeps its meaning.
     val budgets = Map(
       "project_compute" -> 1,   // map-side projection + final sort
       "filter_compound" -> 1,   // pushdown filter + final sort
@@ -334,8 +337,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
                                 // once); size-histogram agg + two
                                 // 1-row/3-row SinglePartition steps +
                                 // final sort — never a key-set sort
+    val byName = SparkEntry.allQueries.map(q => q.name -> q).toMap
     budgets.foreach { case (name, maxEx) =>
-      val p = plan(name)
+      val p = byName(name).run(spark, sf0001).queryExecution.executedPlan.toString
       // Shuffle exchanges only: BroadcastExchange moves a dim table to
       // every executor by design and ReusedExchange is free.
       val n = "Exchange (hash|range|SinglePartition|roundrobin)".r
@@ -469,5 +473,85 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     val p = plan("ml_gbdt_stump")
     assert(p.contains("Window"), "cumulative split sums need the window")
     assert(!p.contains("doc_id"), "id column must be pruned from the scan")
+  }
+
+  test("final sort: a small scan-fed input sorts in one task") {
+    // sort_global sorts a projection of the orders scan, estimated below
+    // spark.sql.files.openCostInBytes at sf0.001: no sampling job, no
+    // range shuffle, and a scan that small is one task per file anyway.
+    val p = plan("sort_global")
+    assert(!p.toLowerCase.contains("rangepartitioning"), p)
+    assert(p.contains("Coalesce 1"), p)
+  }
+
+  test("final sort: a small input behind a shuffle sorts in one task") {
+    // agg_group's sort input is a hash aggregate over a parquet scan: the
+    // coalesce folds only the post-aggregate stage into the sort's task,
+    // and the scan below the aggregate's shuffle keeps its tasks.
+    val p = plan("agg_group")
+    assert(!p.toLowerCase.contains("rangepartitioning"), p)
+    assert(p.contains("Coalesce 1"), p)
+    assert(p.contains("Exchange hashpartitioning"), p)
+  }
+
+  test("final sort: an input Spark cannot estimate keeps the range exchange") {
+    // udf_foreign_pipe re-enters from an RDD, whose size estimate is
+    // Long.MaxValue: the sort must stay a distributed range sort.
+    val p = plan("udf_foreign_pipe")
+    assert(p.toLowerCase.contains("rangepartitioning"), p)
+    assert(!p.contains("Coalesce 1"), p)
+  }
+
+  test("final sort: a scan that picks its own partitions keeps the range " +
+    "exchange") {
+    // scan_dsv2_seek aggregates a key-grouped V2 scan with no shuffle in
+    // between; the source, not the file size, decides its tasks.
+    val p = plan("scan_dsv2_seek")
+    assert(p.toLowerCase.contains("rangepartitioning"), p)
+    assert(!p.contains("Coalesce 1"), p)
+  }
+
+  test("final sort: the bound is the AQE advisory size behind a shuffle, " +
+    "the file open cost over a scan") {
+    // Each key sorts in one task at sf0.001 (cases above); shrinking its
+    // own bound below the estimate brings the range exchange back, and
+    // shrinking the other bound does not.
+    def rangeSorted(key: String, conf: String): Boolean = {
+      val prior = spark.conf.getOption(conf)
+      spark.conf.set(conf, "1")
+      try plan(key).toLowerCase.contains("rangepartitioning")
+      finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+    }
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val openCost = "spark.sql.files.openCostInBytes"
+    assert(rangeSorted("agg_group", advisory))
+    assert(!rangeSorted("agg_group", openCost))
+    assert(rangeSorted("sort_global", openCost))
+    assert(!rangeSorted("sort_global", advisory))
+  }
+
+  test("final sort: rows made by a generator keep the range exchange") {
+    // explode is estimated at its input's size whatever it emits, so the
+    // estimate does not bound the sort's input.
+    def finalSort(select: String): String =
+      SparkEntry.oneTaskFinalSort(spark.sql(
+        s"SELECT $select AS v FROM VALUES (1L), (2L), (3L) AS t(id) ORDER BY v"))
+        .queryExecution.executedPlan.toString
+    val plain = finalSort("id")
+    assert(plain.contains("Coalesce 1"), plain)
+    val exploded = finalSort("explode(sequence(0L, id))")
+    assert(exploded.toLowerCase.contains("rangepartitioning"), exploded)
+  }
+
+  test("final sort: the rewrite is idempotent") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val once = SparkEntry.queries("agg_group")(spark, sf0001)
+    val plan1 = once.queryExecution.analyzed
+    assert(SparkEntry.rootSort(plan1).exists(_._1.child match {
+      case Repartition(1, false, _) => true
+      case _ => false
+    }), plan1.treeString)
+    val plan2 = SparkEntry.oneTaskFinalSort(once).queryExecution.analyzed
+    assert(plan2 == plan1, s"second rewrite changed the plan:\n$plan2")
   }
 }

@@ -24,6 +24,19 @@ class RegistrySmokeSpec extends AnyFunSuite with SparkFixture {
       // Deterministic smoke: the query must execute without throwing.
       val n = df.count()
       assert(n >= 0)
+      // The registry funnel may sort in one partition instead of through
+      // a range exchange (SparkEntry.oneTaskFinalSort); an oracle-bearing
+      // sorted result must keep its rows and their order. Stream and sink
+      // keys are skipped: they cannot run twice.
+      if (q.oracle.nonEmpty && !q.name.startsWith("stream_") &&
+        !q.name.startsWith("sink_") &&
+        SparkEntry.rootSort(df.queryExecution.analyzed).nonEmpty) {
+        val raw = df.collect().toSeq
+        val funnel = SparkEntry.queries(q.name)(spark, sf0001).collect().toSeq
+        assert(funnel == raw, s"${q.name}: registry rows differ from q.run's " +
+          s"at row ${funnel.zip(raw).indexWhere { case (a, b) => a != b }} " +
+          s"(${funnel.size} vs ${raw.size} rows)")
+      }
     }
   }
 }
