@@ -17,17 +17,18 @@ object Bench {
       }
     }
 
-  /** JIT + one-time layout warmup shared by Bench, KeyTime, and any other
-    * timing tool: runs the flagship query once, then builds the amortized
-    * layout artifacts (partitioned/bucketed copies, streaming slice cut,
-    * ANN indexes, graph edge cache, dedup signature index, DSv2 topic) so
-    * the first timed query measures the QUERY. Single source of truth —
-    * a tool with its own copy of this list goes cold the next time a
-    * warm cache is added. Every step runs through [[runSteps]].
+  /** JIT + one-time layout warmup shared by Bench and `Probe time`:
+    * runs the flagship query once, then builds the amortized layout
+    * artifacts (partitioned/bucketed copies, streaming slice cut, ANN
+    * indexes, graph edge cache, dedup signature index, DSv2 topic) so the
+    * first timed query measures the QUERY. Single source of truth — a
+    * tool with its own copy of this list goes cold the next time a warm
+    * cache is added. Every step runs through [[runSteps]]; returns the
+    * names of the steps that failed.
     */
-  def warmup(spark: SparkSession, sfDir: String): Unit = {
+  def warmup(spark: SparkSession, sfDir: String): Seq[String] = {
     import graft.operators.{Dedup, DsV2, LayoutCache, Pipeline, Similarity, Streaming}
-    runSteps(Seq(
+    val failed = runSteps(Seq(
       "entry" -> (() => SparkEntry.entry(spark).count()),
       "layout.partitioned" -> (() => LayoutCache.partitionedLineitem(spark, sfDir)),
       "layout.zordered" -> (() => LayoutCache.zorderedLineitem(spark, sfDir)),
@@ -49,12 +50,14 @@ object Bench {
     // microbatch lifecycle — seconds of wall for little shared JIT,
     // and they execute late in the sweep anyway, past the ramp).
     val tiny = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
-    if (java.nio.file.Files.isDirectory(tiny) && tiny.toString != sfDir)
-      runSteps(SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot(_._1.startsWith("stream_"))
-        .map { case (k, fn) =>
-          s"jit:$k" -> (() => fn(spark, tiny.toString).queryExecution.toRdd.count())
-        })
+    failed ++ (
+      if (java.nio.file.Files.isDirectory(tiny) && tiny.toString != sfDir)
+        runSteps(SparkEntry.queries.toSeq.sortBy(_._1)
+          .filterNot(_._1.startsWith("stream_"))
+          .map { case (k, fn) =>
+            s"jit:$k" -> (() => fn(spark, tiny.toString).queryExecution.toRdd.count())
+          })
+      else Nil)
   }
 
   /** Cross-round comparability ledger (ADVICE r14): keys whose
@@ -182,119 +185,106 @@ object Bench {
       (prior.exists(p => wall > math.max(2.0, 3 * p)) &&
         wall > 3 * (cpu / cores))
 
+  /** Compact plan-class tag for one physical plan string: shuffle-Exchange
+    * count plus cartesian / nested-loop flags (`"e3"`, `"e1,bnlj"`,
+    * `"e0,cart"`). Bench embeds this per key in its artifact so
+    * accepted-demo status (e.g. join_theta_range's by-design BNLJ) is
+    * machine-readable instead of verdict folklore (VERDICT r10 task 8).
+    */
+  def planClass(plan: String): String = {
+    val n = "Exchange (hash|range|SinglePartition|roundrobin)".r
+      .findAllIn(plan).length
+    val flags = Seq(
+      if (plan.contains("CartesianProduct")) Some("cart") else None,
+      if (plan.contains("BroadcastNestedLoopJoin")) Some("bnlj") else None
+    ).flatten
+    (s"e$n" +: flags).mkString(",")
+  }
+
+  /** One timed attempt at one key, priced as in [[KeyRes]] (rows = -1
+    * when the key threw). `cpuCounted` snapshots process CPU at the
+    * counted boundary so the retime valve's wall-vs-cpu/cores comparison
+    * uses the SAME window as the counted wall it judges — cpu measured
+    * across the whole attempt includes the untimed full-output re-run,
+    * which inflates cpu/cores and can under-trigger the
+    * descheduled-signature arm (ADVICE r14).
+    */
+  private[graft] case class Attempt(
+      counted: Double, full: Double, cpu: Double, rows: Long,
+      planTag: String, cpuCounted: Double)
+
+  /** Times one attempt at one key. The plan-class tag (VERDICT r10 task
+    * 8) is read INSIDE the attempt, after the timing captures: count()
+    * already forced executedPlan, so the read is string work only — and
+    * critically, the frame reference is NOT retained afterwards. Run 1 of
+    * r13 kept all 348 frames alive for an after-loop census and measured
+    * a monotone late-run drift (execution-order decile median ratios
+    * 1.0 → 1.45 vs priors): localCheckpointed frames pin block-manager
+    * memory until their reference is GC'd, so holding every frame
+    * accumulates the whole run's checkpoint blocks. Dropping the frame
+    * per-key lets the ContextCleaner reclaim as the run proceeds. A key
+    * that throws is named on stderr.
+    */
+  private[graft] def attempt(spark: SparkSession, sfDir: String,
+      name: String, fn: (SparkSession, String) => DataFrame): Attempt = {
+    val c0 = cpuNow(); val t0 = System.nanoTime()
+    try {
+      val frame = fn(spark, sfDir)
+      val tb = System.nanoTime() // construction (incl. side effects)
+      val n = frame.count()
+      val tc = System.nanoTime() // counted pricing ends here
+      val cc = cpuNow()
+      frame.queryExecution.toRdd.count() // every output column, re-run
+      val tf = System.nanoTime()
+      val tag =
+        try planClass(frame.queryExecution.executedPlan.toString)
+        catch { case _: Throwable => "unplannable" }
+      Attempt((tc - t0) / 1e9, ((tb - t0) + (tf - tc)) / 1e9,
+        (cpuNow() - c0) / 1e9, n, tag, (cc - c0) / 1e9)
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        val c = (cpuNow() - c0) / 1e9
+        Attempt((System.nanoTime() - t0) / 1e9, 0.0, c, -1L, "error", c)
+    }
+  }
+
+  /** The full forward sweep: every registry key in name order, timed
+    * after [[warmup]]. Iterating on a subset of keys, or in another
+    * order, is `graft.Probe time`.
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // exploit DSv2-reported key-grouped layouts (graft-log partition
-      // clustering) — skips the Exchange for partition-keyed aggregates
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Warm up JIT/codegen + file-listing caches on the tiniest SF so the
     // first timed query doesn't absorb one-time session costs.
-    warmup(spark, sfDir)
+    val warmupFailed = warmup(spark, sfDir)
     val calibration = calibrate(spark)
     val priors = loadPriors()
-    // Test hook for the marker path itself: GRAFT_BENCH_BREAK_KEY=<key>
-    // makes that key throw, so a scratch run can prove a crashing key
-    // lands in `errors` (not a fast-looking number) without a code edit.
-    val breakKey = sys.env.get("GRAFT_BENCH_BREAK_KEY")
-    // (counted, full, cpu, rows, planTag) for one attempt at one key.
-    // The plan-class tag (Exchange count + cartesian/BNLJ flags,
-    // VERDICT r10 task 8) is read INSIDE the attempt, after the timing
-    // captures: count() already forced executedPlan, so the read is
-    // string work only — and critically, the frame reference is NOT
-    // retained afterwards. Run 1 of r13 kept all 348 frames alive for
-    // an after-loop census and measured a monotone late-run drift
-    // (execution-order decile median ratios 1.0 → 1.45 vs priors):
-    // localCheckpointed frames pin block-manager memory until their
-    // reference is GC'd, so holding every frame accumulates the whole
-    // run's checkpoint blocks. Dropping the frame per-key lets the
-    // ContextCleaner reclaim as the run proceeds.
-    // Tuple: (counted, full, cpuFull, rows, planTag, cpuCounted).
-    // cpuCounted snapshots process CPU at the counted boundary (tc) so
-    // the retime valve's wall-vs-cpu/cores comparison uses the SAME
-    // window as the counted wall it judges — cpu measured across the
-    // whole attempt includes the untimed full-output re-run, which
-    // inflates cpu/cores and can under-trigger the descheduled-signature
-    // arm (ADVICE r14). cpuFull stays in the artifact as the honest
-    // whole-key compute record.
-    def attempt(name: String,
-        fn: (SparkSession, String) => DataFrame)
-        : (Double, Double, Double, Long, String, Double) = {
-      val c0 = cpuNow(); val t0 = System.nanoTime()
-      try {
-        if (breakKey.contains(name))
-          throw new RuntimeException("deliberately broken for marker test")
-        val frame = fn(spark, sfDir)
-        val tb = System.nanoTime() // construction (incl. side effects)
-        val n = frame.count()
-        val tc = System.nanoTime() // counted pricing ends here
-        val cc = cpuNow()
-        frame.queryExecution.toRdd.count() // every output column, re-run
-        val tf = System.nanoTime()
-        val tag =
-          try PlanAudit.planClass(frame.queryExecution.executedPlan.toString)
-          catch { case _: Throwable => "unplannable" }
-        ((tc - t0) / 1e9, ((tb - t0) + (tf - tc)) / 1e9,
-          (cpuNow() - c0) / 1e9, n, tag, (cc - c0) / 1e9)
-      } catch {
-        case _: Throwable =>
-          val c = (cpuNow() - c0) / 1e9
-          ((System.nanoTime() - t0) / 1e9, 0.0, c, -1L, "error", c)
-      }
-    }
     // Stable timing order (map iteration order is hash-dependent).
     // Per key: seconds AND row count; a crashing key records rows=-1 and
     // lands in `errors` instead of wearing a fast-looking number (the r8
     // sink_retention artifact confusion — VERDICT r9 task 7). Zero rows
     // from an oracle-bearing key is equally suspect: the oracle WILL have
     // rows, so the driver compare would fail — surface it in the artifact.
-    // Local-iteration hook: GRAFT_BENCH_ONLY=k1,k2 times just those keys
-    // (the driver never sets it — official artifacts always price the
-    // full map; totals from a filtered run are NOT comparable).
-    val only: Option[Set[String]] =
-      sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // Fail fast on typo'd filter keys: a misspelled GRAFT_BENCH_ONLY used
-    // to silently time zero keys and print an empty-looking artifact
-    // (ADVICE r14) — an unknown key is a harness usage error, not data.
-    only.foreach { f =>
-      val unknown = f -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"GRAFT_BENCH_ONLY names unknown keys: ${unknown.toSeq.sorted
-          .mkString(", ")}")
-    }
-    // Diagnostic hook (r16 drift A/B): GRAFT_BENCH_REVERSE=1 times the
-    // keys in REVERSE name order. If a regression follows execution
-    // POSITION (early-sweep slow phase) rather than key identity, the
-    // reversed sweep moves it onto different keys — the discriminator
-    // between "this key got slower" and "the first minutes of any sweep
-    // run slow". The driver never sets it; official artifacts are always
-    // forward-ordered (same pricing as every prior round).
-    val reverse = sys.env.get("GRAFT_BENCH_REVERSE").contains("1")
-    val ordered0 = SparkEntry.queries.toSeq.sortBy(_._1)
-    val timed = (if (reverse) ordered0.reverse else ordered0)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val timed = SparkEntry.queries.toSeq.sortBy(_._1)
       .zipWithIndex
       .map { case ((name, fn), idx) =>
-        val a1 = attempt(name, fn)
-        if (a1._4 != -1L &&
-          shouldRetime(a1._1, a1._6, priors.get(name), cpus.toInt)) {
+        val a1 = attempt(spark, sfDir, name, fn)
+        if (a1.rows != -1L &&
+          shouldRetime(a1.counted, a1.cpuCounted, priors.get(name),
+            Session.cpus)) {
           System.err.println(
-            f"[bench] RETIME $name: ${a1._1}%.1f s counted, " +
-              f"counted-window cpu ${a1._6}%.1f s (prior median " +
+            f"[bench] RETIME $name: ${a1.counted}%.1f s counted, " +
+              f"counted-window cpu ${a1.cpuCounted}%.1f s (prior median " +
               f"${priors.get(name).fold("none")(p => f"$p%.2f s")}, " +
               f"10x threshold ${retimeThreshold(priors.get(name))}%.1f s) " +
               "— rerunning once")
-          val a2 = attempt(name, fn)
-          (KeyRes(name, a2._1, a2._2, a2._3, a2._4, idx, Some(a1._1)),
-            a2._5)
-        } else (KeyRes(name, a1._1, a1._2, a1._3, a1._4, idx, None), a1._5)
+          val a2 = attempt(spark, sfDir, name, fn)
+          (KeyRes(name, a2.counted, a2.full, a2.cpu, a2.rows, idx,
+            Some(a1.counted)), a2.planTag)
+        } else (KeyRes(name, a1.counted, a1.full, a1.cpu, a1.rows, idx, None),
+          a1.planTag)
       }
     // Drift stamp (VERDICT r15 task 1): re-run the calibration probe at
     // sweep END. The r15 official artifact embedded up to ~19% of ambient
@@ -313,19 +303,7 @@ object Bench {
     val planClasses = timed.map { case (r, tag) => (r.name, tag) }
     val lines = artifactLines(
       results, planClasses, calibration, sfDir, Scratch.divertedKeys,
-      calibrationEnd)
-    // A filtered run's totals cover only the subset — stamp the stdout
-    // artifact so a human reading it later can tell (the driver never
-    // sets the filter, so official artifacts never carry this line).
-    only.foreach { f =>
-      println(s"""{"metric":"filtered","filtered":${f.toSeq.sorted
-        .map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}""")
-    }
-    // A reversed run's totals are order-diagnostic, never official —
-    // stamp it, and skip the full-sweep file write below for the same
-    // reason a filtered run skips it.
-    if (reverse)
-      println(s"""{"metric":"reversed","reversed":true,"sf":"$sfDir"}""")
+      calibrationEnd, warmupFailed)
     lines.foreach(println)
     // The stdout tail is a 2000-char window, so the FULL per-key map can
     // never be guaranteed to survive it — persist the complete artifact
@@ -333,14 +311,12 @@ object Bench {
     // cross-round comparisons never depend on the tail. `.jsonl`: the
     // file is one JSON object per line, not one JSON document (ADVICE
     // r14 — tooling that trusted the old .json extension threw "Extra
-    // data"). Filtered runs skip the write entirely: a partial artifact
-    // in the full-sweep file's place is indistinguishable from a full
-    // sweep to a later reader.
-    if (only.isEmpty && !reverse)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_LOCAL_LAST.jsonl"),
-        lines.mkString("", "\n", "\n"))
-      catch { case _: Throwable => () }
+    // data").
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get("BENCH_LOCAL_LAST.jsonl"),
+      lines.mkString("", "\n", "\n"))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] BENCH_LOCAL_LAST.jsonl not written: $e") }
     spark.stop()
   }
 
@@ -380,7 +356,9 @@ object Bench {
       // end-of-sweep calibration probe (VERDICT r15 task 1). Defaults to
       // the start value so synthetic/spec callers that don't model drift
       // read as a zero-drift sweep.
-      calibrationEnd: Double = -1.0): Seq[String] = {
+      calibrationEnd: Double = -1.0,
+      // warmup steps that threw (names from [[warmup]]); rows line only
+      warmupFailed: Seq[String] = Seq.empty): Seq[String] = {
     val calibEnd = if (calibrationEnd > 0) calibrationEnd else calibration
     val (errors, suspectZero) = issues(results)
     val total = results.map(_.countedSec).sum
@@ -414,7 +392,7 @@ object Bench {
       s"""{"metric":"cpu","cpu":$cp,"sf":"$sfDir"}""",
       s"""{"metric":"full","full":$fl,"sf":"$sfDir"}""",
       s"""{"metric":"retimed","retimed":$ret,"order":$ord,"sf":"$sfDir"}""",
-      s"""{"metric":"rows","rows":$rws,"errors":${strArr(errors)},"suspect_zero":${strArr(suspectZero)},"scratch_diverted":${strArr(diverted)},"sf":"$sfDir"}""",
+      s"""{"metric":"rows","rows":$rws,"errors":${strArr(errors)},"suspect_zero":${strArr(suspectZero)},"scratch_diverted":${strArr(diverted)},"warmup_failed":${strArr(warmupFailed)},"sf":"$sfDir"}""",
       s"""{"metric":"plan_class","plan_class":$pcs,"sf":"$sfDir"}""",
       s"""{"metric":"queries","queries":$qs,"sf":"$sfDir"}""",
       // SCALARS ONLY on the final line: the error/suspect arrays are

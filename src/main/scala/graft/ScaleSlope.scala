@@ -412,24 +412,16 @@ object ScaleSlope {
     // Artifact rows from the vocab-scaling corpus get their own key
     // label: same operator, different (production-regime) workload.
     val labelSuffix = if (vocabScale) "_vocabscale" else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" applies session confs
     // before measurement — e.g. the RocksDB state-store provider for the
     // streaming 100× runs, where state rows reach the millions the
     // HDFS-backed store is documented NOT to be for (BASELINE.md).
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(";").filter(_.contains("=")).foreach { kv =>
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
+        k.trim -> v.trim
       }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(extraConf: _*)
     // Max state-store rows seen across a key's runs at one scale — the
     // number that certifies "state is keyed by users/windows, not raw
     // events" when the 10×/1× state ratio tracks key cardinality.

@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.DoubleType
   *     data-dependent only through nullability — the rewrite keeps the
   *     null-on-zero-norm semantics by only firing for non-nullable input).
   *
-  * Usage: `SparkSession.builder().withExtensions(GraftExtensions(_))` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * Usage: `spark.sql.extensions=graft.functions.GraftExtensions` (e.g. as
+  * a `graft.Session.local` conf pair), or `withExtensions(GraftExtensions(_))`
+  * on a session builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -346,9 +346,9 @@ object Joins extends QueryModule {
     Q(
       "join_bucketed",
       (s, dir) => {
-        LayoutCache.bucketedTables(s, dir)
-        s.table("graft_li_b").hint("merge")
-          .join(s.table("graft_ord_b"),
+        val (li, ord) = LayoutCache.bucketedTables(s, dir)
+        s.table(li).hint("merge")
+          .join(s.table(ord),
             col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n"),

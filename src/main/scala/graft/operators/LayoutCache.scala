@@ -13,11 +13,18 @@ private[graft] object LayoutCache {
 
   private val cache = scala.collection.mutable.Map[String, String]()
 
+  /** Suffix for the scratch dirs and table names of one fixture's
+    * layouts. Each fixture needs its own: `Scratch.fresh` empties the
+    * dir it returns, so two fixtures sharing one path would leave the
+    * first fixture's cache entry pointing at the second one's rows.
+    */
+  private def tag(dir: String): String = f"${dir.hashCode}%08x"
+
   /** lineitem partitioned by l_returnflag; returns the layout path. */
   def partitionedLineitem(s: SparkSession, dir: String): String =
     cache.synchronized {
       cache.getOrElseUpdate(s"part_lineitem:$dir", {
-        val out = Scratch.fresh("layout_part_lineitem")
+        val out = Scratch.fresh(s"layout_part_lineitem_${tag(dir)}")
         Tables.lineitem(s, dir)
           .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
         out
@@ -34,7 +41,7 @@ private[graft] object LayoutCache {
   def zorderedLineitem(s: SparkSession, dir: String): String =
     cache.synchronized {
       cache.getOrElseUpdate(s"zorder_lineitem:$dir", {
-        val out = Scratch.fresh("layout_zorder_lineitem")
+        val out = Scratch.fresh(s"layout_zorder_lineitem_${tag(dir)}")
         import org.apache.spark.sql.functions.col
         graft.api.Layout.zorderBy(Tables.lineitem(s, dir),
             col("l_partkey"), col("l_suppkey"), numFiles = 16)
@@ -43,21 +50,26 @@ private[graft] object LayoutCache {
       })
     }
 
-  /** lineitem + orders as bucketed tables graft_li_b / graft_ord_b. */
-  def bucketedTables(s: SparkSession, dir: String): Unit =
+  /** lineitem + orders as bucketed tables; returns their names
+    * (lineitem's, orders'), which are unique to the fixture dir.
+    */
+  def bucketedTables(s: SparkSession, dir: String): (String, String) =
     cache.synchronized {
+      val (li, ord) = (s"graft_li_b_${tag(dir)}", s"graft_ord_b_${tag(dir)}")
       cache.getOrElseUpdate(s"bucketed:$dir", {
-        val wh = Scratch.fresh("layout_bucketed")
-        s.sql("DROP TABLE IF EXISTS graft_li_b")
-        s.sql("DROP TABLE IF EXISTS graft_ord_b")
-        Tables.lineitem(s, dir).write.mode("overwrite")
+        val lineitem = Tables.lineitem(s, dir)
+        val orders = Tables.orders(s, dir)
+        val wh = Scratch.fresh(s"layout_bucketed_${tag(dir)}")
+        s.sql(s"DROP TABLE IF EXISTS $li")
+        s.sql(s"DROP TABLE IF EXISTS $ord")
+        lineitem.write.mode("overwrite")
           .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$wh/li").saveAsTable("graft_li_b")
-        Tables.orders(s, dir).write.mode("overwrite")
+          .option("path", s"$wh/li").saveAsTable(li)
+        orders.write.mode("overwrite")
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"$wh/ord").saveAsTable("graft_ord_b")
+          .option("path", s"$wh/ord").saveAsTable(ord)
         wh
       })
-      ()
+      (li, ord)
     }
 }

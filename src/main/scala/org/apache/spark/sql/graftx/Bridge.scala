@@ -58,6 +58,14 @@ object Bridge {
   def fileOpenCostBytes(sp: org.apache.spark.sql.SparkSession): Long =
     sqlConf(sp).filesOpenCostInBytes
 
+  /** Block until the listener bus (private[spark]) has delivered every
+    * event posted so far. Spark posts a job's end event before the action
+    * that ran it returns, so after an action and this drain every
+    * listener has seen all of that action's jobs and stages.
+    */
+  def drainListenerBus(sp: org.apache.spark.sql.SparkSession): Unit =
+    sp.sparkContext.listenerBus.waitUntilEmpty()
+
   private def sqlConf(sp: org.apache.spark.sql.SparkSession) =
     sp.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
 

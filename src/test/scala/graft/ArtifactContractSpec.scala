@@ -13,13 +13,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * blinding a future round's verdict. The negative case proves the
   * checker actually discriminates.
   */
-class ArtifactContractSpec extends AnyFunSuite {
+class ArtifactContractSpec extends AnyFunSuite with SparkFixture {
 
   /** Synthetic per-key results shaped like a real run: one normal key per
     * registry entry (reusing the REAL key names so suspect-zero logic sees
     * real oracle membership), plus one crashed key (rows = -1).
     */
-  private def syntheticLines(breakOne: Boolean): Seq[String] = {
+  private def syntheticLines(breakOne: Boolean,
+      warmupFailed: Seq[String] = Seq.empty): Seq[String] = {
     val keys = SparkEntry.queries.keys.toSeq.sorted
     val results = keys.zipWithIndex.map { case (k, i) =>
       Bench.KeyRes(k,
@@ -35,7 +36,7 @@ class ArtifactContractSpec extends AnyFunSuite {
       sfDir = "/root/testdata/sf0.1", diverted = Seq.empty,
       // model a drift-bearing sweep so the contract check sees the r16
       // calibration_end_sec / calibration_drift scalars on the last line
-      calibrationEnd = 0.24)
+      calibrationEnd = 0.24, warmupFailed = warmupFailed)
   }
 
   private def runChecker(lines: Seq[String]): (Int, String) = {
@@ -170,5 +171,66 @@ class ArtifactContractSpec extends AnyFunSuite {
     val failed = Bench.runSteps(Seq(ok("a"), bad("b"), ok("c"), bad("d"), ok("e")))
     assert(failed == Seq("b", "d"))
     assert(ran == Seq("a", "c", "e"))
+  }
+
+  test("failed warmup steps are listed on the rows line as warmup_failed, " +
+    "never on the scalars-only last line") {
+    val lines = syntheticLines(breakOne = false,
+      warmupFailed = Seq("dedup_index", "jit:agg_group"))
+    val rowsLine = lines.find(_.contains("\"metric\":\"rows\"")).get
+    assert(rowsLine.contains(
+      "\"warmup_failed\":[\"dedup_index\",\"jit:agg_group\"]"), rowsLine)
+    assert(!lines.last.contains("warmup_failed"), lines.last)
+    val (rc, out) = runChecker(lines)
+    assert(rc == 0, s"checker rejected a warmup_failed artifact:\n$out")
+    val clean = syntheticLines(breakOne = false)
+    assert(clean.exists(_.contains("\"warmup_failed\":[]")))
+    val mangled = lines.map(_.replace(
+      "\"warmup_failed\":[\"dedup_index\",\"jit:agg_group\"]",
+      "\"warmup_failed\":\"dedup_index\""))
+    val (rc2, out2) = runChecker(mangled)
+    assert(rc2 != 0, "checker must reject a non-list warmup_failed")
+    assert(out2.contains("warmup_failed"), out2)
+  }
+
+  private def probeLines(mode: (String => Unit) => Unit): Seq[String] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    mode(buf += _)
+    buf.toSeq
+  }
+
+  test("Probe plan prints the job lines and the FINAL adaptive plan") {
+    val out = probeLines(Probe.plan(spark, Seq("sort_global"), sf0001, _))
+    assert(out.head.startsWith("=== plan sort_global rows="), out.head)
+    assert(out.exists(_.startsWith("job ")), out.mkString("\n"))
+    // after toRdd.count the frame's own executedPlan is the final one;
+    // after df.count() it would still read isFinalPlan=false
+    assert(out.exists(_.contains("isFinalPlan=true")), out.mkString("\n"))
+  }
+
+  test("Probe census prints one line per key with its jobs, stages and " +
+    "plan class") {
+    val out = probeLines(Probe.census(spark, Seq("agg_group"), sf0001, _))
+    assert(out.size == 1, out)
+    val m = """census agg_group jobs=(\d+) stages=(\d+) plan=e\d+.*""".r
+    out.head match {
+      case m(jobs, _) => assert(jobs.toInt >= 1, out.head)
+      case other => fail(s"unexpected census line: $other")
+    }
+  }
+
+  test("Probe fails on an unknown key before any job runs, naming it") {
+    val modes: Seq[(String, Seq[String] => Unit)] = Seq(
+      "plan" -> (ks => Probe.plan(spark, ks, sf0001, _ => ())),
+      "census" -> (ks => Probe.census(spark, ks, sf0001, _ => ())),
+      "time" -> (ks => Probe.time(spark, ks, sf0001, 1, _ => ())))
+    modes.foreach { case (mode, run) =>
+      val (e, jobs, _) = Probe.schedulerWork(spark) {
+        intercept[IllegalArgumentException](
+          run(Seq("agg_group", "no_such_key")))
+      }
+      assert(e.getMessage.contains("no_such_key"), s"$mode: ${e.getMessage}")
+      assert(jobs == 0, s"$mode ran $jobs jobs before rejecting the key")
+    }
   }
 }

@@ -25,9 +25,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * so `GRAFT_REPEAT_START=<n>` pins the window start index into the
   * sorted eligible list (`GRAFT_REPEAT_START=137 sbt -batch "testOnly
   * graft.RepeatabilitySpec"` re-runs exactly the window that failed —
-  * the failing test name prints the window's [first..last] keys, and
-  * the assertion message now carries the first differing digest-input
-  * JSON lines, so the repro recipe is: pin the start, read the diff).
+  * the test's info line and its assertion message print the window's
+  * start and [first..last] keys, and the assertion message carries the
+  * first differing digest-input JSON lines, so the repro recipe is: pin
+  * the start, read the diff). The window stays out of the test name so
+  * the test keeps one name from day to day.
   */
 class RepeatabilitySpec extends AnyFunSuite with SparkFixture {
 
@@ -62,9 +64,12 @@ class RepeatabilitySpec extends AnyFunSuite with SparkFixture {
     (md.digest().map("%02x".format(_)).mkString, lines.toSeq)
   }
 
-  test(s"20-key rotation window (start=$windowStart) is bit-identical " +
-      s"across two runs [${sample.head}..${sample.last}]" +
-      (if (sys.env.contains("GRAFT_REPEAT_START")) " (pinned)" else "")) {
+  private val window: String =
+    s"start=$windowStart [${sample.head}..${sample.last}]" +
+      (if (sys.env.contains("GRAFT_REPEAT_START")) " (pinned)" else "")
+
+  test("20-key rotation window is bit-identical across two runs") {
+    info(s"window $window")
     val bad = sample.flatMap { k =>
       val (a, la) = digest(k)
       val (b, lb) = digest(k)
@@ -77,6 +82,7 @@ class RepeatabilitySpec extends AnyFunSuite with SparkFixture {
         Some(s"$k: $a != $b — first differing digest input:\n$firstDiff")
       }
     }
-    assert(bad.isEmpty, s"nondeterministic keys:\n${bad.mkString("\n")}")
+    assert(bad.isEmpty,
+      s"nondeterministic keys in window $window:\n${bad.mkString("\n")}")
   }
 }

@@ -104,8 +104,7 @@ class Round15Spec extends AnyFunSuite with SparkFixture {
     assert(out(0).getLong(1) == 4L && out(0).getInt(0) == 1)
   }
 
-  test("Bench.shouldRetime judges the counted window (cpu at tc), and " +
-    "GRAFT_BENCH_ONLY unknown keys fail fast") {
+  test("Bench.shouldRetime judges the counted window (cpu at tc)") {
     // Descheduled signature: wall 9 s ≫ prior 2 s AND ≫ cpu/cores with
     // counted-window cpu 8 s on 32 cores (0.25 s parallel prediction).
     assert(Bench.shouldRetime(9.0, 8.0, Some(2.0), 32))

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stage/job budgets for the ITERATIVE keys — the regression class the
@@ -25,39 +22,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StageBudgetSpec extends AnyFunSuite with SparkFixture {
 
-  /** (jobs, stages) the scheduler ran for one execution of `key`. The
-    * listener bus is async — poll until the counters go quiet rather
-    * than reaching into the private listenerBus API.
-    */
-  private def schedulerWork(key: String): (Int, Int) = {
-    val jobs = new AtomicInteger
-    val stages = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = {
-        // Count first attempts only: a transient task/executor failure on
-        // a loaded machine resubmits the SAME stage with attemptNumber>0,
-        // which is environment noise, not a lineage regression (the bug
-        // class this spec guards re-executes DISTINCT upstream stages).
-        if (ss.stageInfo.attemptNumber() == 0) stages.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SparkEntry.queries(key)(spark, sf0001).count()
-      var last = (-1, -1)
-      var quietFor = 0
-      while (quietFor < 3) {
-        Thread.sleep(100)
-        val now = (jobs.get, stages.get)
-        if (now == last) quietFor += 1 else { quietFor = 0; last = now }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    (jobs.get, stages.get)
-  }
-
   // key -> (max jobs, max stages), ≈1.35× the measured baseline (noted
   // inline; AQE's per-shuffle jobs are included — jobs == stages when
   // every broadcast/checkpoint subtree is fully reused, which is itself
@@ -78,7 +42,11 @@ class StageBudgetSpec extends AnyFunSuite with SparkFixture {
   budgets.foreach { case (key, maxJobs, maxStages) =>
     test(s"$key stays inside its scheduler budget " +
       s"(<=$maxJobs jobs, <=$maxStages stages)") {
-      val (j, s) = schedulerWork(key)
+      // jobs and first-attempt stages of one counted run: the counter
+      // `graft.Probe census` prints
+      val (_, j, s) = Probe.schedulerWork(spark) {
+        SparkEntry.queries(key)(spark, sf0001).count()
+      }
       info(s"$key ran $j jobs / $s stages at sf0.001")
       assert(j <= maxJobs,
         s"$key ran $j jobs (> $maxJobs): a per-round materialization " +

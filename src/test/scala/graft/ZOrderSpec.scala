@@ -106,4 +106,20 @@ class ZOrderSpec extends AnyFunSuite with SparkFixture {
       .select("l_orderkey", "l_linenumber").collect().map(_.toSeq).toSet
     assert(raw == viaLayout && raw.nonEmpty)
   }
+
+  test("each fixture keeps its own layout copies: building sf0.01's after " +
+    "sf0.001's leaves sf0.001's rows in place") {
+    import graft.operators.LayoutCache
+    val rows = Tables.lineitem(spark, sf0001).count()
+    val zorder = LayoutCache.zorderedLineitem(spark, sf0001)
+    val part = LayoutCache.partitionedLineitem(spark, sf0001)
+    val (bucketed, _) = LayoutCache.bucketedTables(spark, sf0001)
+    LayoutCache.zorderedLineitem(spark, sf001)
+    LayoutCache.partitionedLineitem(spark, sf001)
+    LayoutCache.bucketedTables(spark, sf001)
+    assert(Tables.lineitem(spark, sf001).count() != rows)
+    assert(spark.read.parquet(zorder).count() == rows)
+    assert(spark.read.parquet(part).count() == rows)
+    assert(spark.table(bucketed).count() == rows)
+  }
 }

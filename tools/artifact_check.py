@@ -14,7 +14,9 @@ this script) instead of silently blinding a future round's verdict:
     window, and carries value/total_ok/calibration_sec/n_queries/n_errors;
  4. a simulated 2000-char tail still parses that last line intact;
  5. the queries/rows/plan_class maps agree on the key set and its size
-    equals n_queries.
+    equals n_queries;
+ 6. the rows line's `warmup_failed`, when present, lists warmup step names
+    (strings) — it lives there, never on the scalars-only last line.
 
 Exit 0 = contract holds; exit 1 with a reason otherwise.
 """
@@ -110,6 +112,10 @@ def main() -> None:
         fail(f"2000-char tail does not re-parse the total line: {e}")
     if re.get("metric") != "total" or re.get("value") != total["value"]:
         fail("tail-parsed total line disagrees with the full one")
+
+    wf = rows.get("warmup_failed", [])
+    if not (isinstance(wf, list) and all(isinstance(x, str) for x in wf)):
+        fail("rows line `warmup_failed` must be a list of step names")
 
     # Map lines agree on keys; count matches the headline.
     qkeys = set(queries["queries"])

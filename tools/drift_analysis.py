@@ -6,9 +6,13 @@ Usage: python3 tools/drift_analysis.py [--out DRIFT.json] <ref.jsonl> \
 
 For each run, prints the median per-key counted-seconds ratio vs the
 reference, bucketed by the RUN's own execution-order decile. A slow
-first-decile that decays to ~1.0 regardless of WHICH keys run first
-(forward vs GRAFT_BENCH_REVERSE=1 sweeps) is the fingerprint of an
-early-sweep environment/JIT phase rather than a per-key code regression.
+first-decile that decays to ~1.0 regardless of WHICH keys run first is
+the fingerprint of an early-sweep environment/JIT phase rather than a
+per-key code regression. To tell them apart, time the keys in reverse
+name order with `runMain graft.Probe time <reversed key list> <sfDir> 1`
+(recipe in BASELINE.md) and see whether the premium moves to the keys
+that now run first. Older reversed Bench sweeps carry a `reversed` line,
+which this tool reports as `order: reversed`.
 
 With --out, also writes the analysis as a JSON artifact (the per-round
 DRIFT_rNN.json contract, r16 verdict task 5): one record per run with
