@@ -151,6 +151,37 @@ class ArtifactContractSpec extends AnyFunSuite with SparkFixture {
       assert(txt.contains(field), s"DRIFT_r$current.json lacks $field")
   }
 
+  test("round_close_bench.py refuses BENCH_LOCAL_LAST.jsonl as the " +
+    "reference before any sweep starts") {
+    // The sweep overwrites BENCH_LOCAL_LAST.jsonl, so that file as the
+    // reference would be compared with itself (every ratio 1.0). PATH
+    // holds python3 but no sbt, so a tool without the refusal cannot
+    // start a sweep either: it crashes instead, without naming the file.
+    val last = Paths.get("BENCH_LOCAL_LAST.jsonl")
+    assume(Files.exists(last), "no local bench artifact yet — run graft.Bench")
+    val before = Files.readAllBytes(last)
+    val which = new ProcessBuilder("python3", "-c",
+      "import sys; print(sys.executable)").start()
+    val python = new String(which.getInputStream.readAllBytes()).trim
+    assert(which.waitFor() == 0 && python.nonEmpty, "python3 not found")
+    val bin = Files.createTempDirectory("round_close_path")
+    val py3 = Files.createSymbolicLink(bin.resolve("python3"), Paths.get(python))
+    val pb = new ProcessBuilder(py3.toString, "tools/round_close_bench.py",
+      "19", "BENCH_LOCAL_LAST.jsonl")
+    pb.environment().put("PATH", bin.toString)
+    pb.redirectErrorStream(true)
+    val p = pb.start()
+    val out = new String(p.getInputStream.readAllBytes())
+    val rc = p.waitFor()
+    Files.delete(py3)
+    Files.delete(bin)
+    assert(rc != 0, s"the tool accepted the file it overwrites:\n$out")
+    assert(out.contains("BENCH_LOCAL_LAST.jsonl"), out)
+    assert(!out.contains("full bench sweep"), out)
+    assert(java.util.Arrays.equals(before, Files.readAllBytes(last)),
+      "BENCH_LOCAL_LAST.jsonl changed")
+  }
+
   test("BENCH_LOCAL_LAST.jsonl written by the last real bench run (if any) " +
     "also satisfies the contract") {
     // .jsonl since r15: the file is one JSON object per line (ADVICE r14

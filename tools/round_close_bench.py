@@ -13,12 +13,22 @@ reads settled-region ratios from DRIFT_rNN.json instead of re-deriving
 them (BASELINE.md "Round-16 amendment" documents why the settled region,
 not raw totals, is the honest cross-round comparable).
 
+The sweep overwrites BENCH_LOCAL_LAST.jsonl, so <ref.jsonl> must not be
+that file: compared with itself, every ratio reads 1.0 and the drift
+record says nothing. Snapshot the previous round's sweep first —
+  cp BENCH_LOCAL_LAST.jsonl bench_r<round-1>_official.jsonl
+— and pass the copy. A reference that resolves to BENCH_LOCAL_LAST.jsonl
+is refused before the sweep starts.
+
 ArtifactContractSpec pins the presence and shape of the current round's
-DRIFT file once the first sweep of the round has run.
+DRIFT file once the first sweep of the round has run, and pins the
+refusal above.
 """
 import os
 import subprocess
 import sys
+
+LAST = "BENCH_LOCAL_LAST.jsonl"
 
 
 def main() -> int:
@@ -29,6 +39,10 @@ def main() -> int:
     sfdir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     if not os.path.exists(ref):
         sys.exit(f"reference artifact {ref} missing")
+    if os.path.exists(LAST) and os.path.samefile(ref, LAST):
+        sys.exit(f"reference {ref} resolves to {LAST}, which the sweep "
+                 f"overwrites; copy it to bench_r{rnd - 1}_official.jsonl "
+                 "first and pass the copy")
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir)
     print(f"[round_close] full bench sweep at {sfdir} ...", flush=True)
     rc = subprocess.run(
@@ -37,7 +51,7 @@ def main() -> int:
         sys.exit(f"bench sweep failed (exit {rc}); no drift artifact written")
     rc = subprocess.run(
         ["python3", "tools/drift_analysis.py", "--out", f"DRIFT_r{rnd}.json",
-         ref, "BENCH_LOCAL_LAST.jsonl"]).returncode
+         ref, LAST]).returncode
     if rc != 0:
         sys.exit(f"drift analysis failed (exit {rc})")
     print(f"[round_close] wrote DRIFT_r{rnd}.json (ref: {ref})")
