@@ -1,5 +1,9 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
 object Bench {
@@ -139,24 +143,31 @@ object Bench {
     }
 
   /** Prior-round per-key counted medians for the retime valve, read from
-    * BENCH_PRIORS.json in the working directory (the driver runs Bench
-    * from the repo root; the file is a committed copy of the previous
-    * round's queries map). Missing file or key ⇒ no prior ⇒ only the
-    * absolute backstop applies. Parsing is a decimal-pair scrape — the
-    * file is machine-written (`"key":1.234` pairs), no JSON lib needed.
+    * `path`, by default BENCH_PRIORS.json in the working directory (Bench
+    * runs from the repo root; the file is a committed copy of the
+    * previous round's queries map). A missing file means no priors,
+    * named in one stderr line, and only the absolute backstop applies. A
+    * file that is present but unreadable, or holds no pairs, throws: r13
+    * loaded zero priors unnoticed and let a 13.6× stream_static_join blip
+    * through unretimed. Parsing is a decimal-pair scrape — the file is
+    * machine-written (`"key":1.234` pairs), no JSON lib needed.
     */
-  private[graft] def loadPriors(): Map[String, Double] =
-    try {
-      val txt = java.nio.file.Files.readString(
-        java.nio.file.Paths.get("BENCH_PRIORS.json"))
+  private[graft] def loadPriors(
+      path: java.nio.file.Path = java.nio.file.Paths.get("BENCH_PRIORS.json"))
+      : Map[String, Double] =
+    if (!java.nio.file.Files.exists(path)) {
+      System.err.println(s"[bench] no priors: $path not found")
+      Map.empty
+    } else {
+      val txt = java.nio.file.Files.readString(path)
       // \s* after the colon: the priors file is pretty-printed with a
-      // space ("key": 1.234) — the r13 run-1 valve silently loaded ZERO
-      // priors without it and let a 13.6× stream_static_join blip
-      // through unretimed.
+      // space ("key": 1.234)
       val re = """"([A-Za-z0-9_]+)":\s*([0-9]+\.[0-9]+)""".r
-      re.findAllMatchIn(txt)
+      val priors = re.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+      require(priors.nonEmpty, s"$path holds no \"key\": seconds pairs")
+      priors
+    }
 
   /** Retime trigger: a key exceeding 10× its prior-round median (floored
     * at 3 s so sub-second keys don't retime on scheduler noise) is rerun
@@ -185,20 +196,32 @@ object Bench {
       (prior.exists(p => wall > math.max(2.0, 3 * p)) &&
         wall > 3 * (cpu / cores))
 
-  /** Compact plan-class tag for one physical plan string: shuffle-Exchange
+  /** Compact plan-class tag for one physical plan: shuffle-Exchange
     * count plus cartesian / nested-loop flags (`"e3"`, `"e1,bnlj"`,
     * `"e0,cart"`). Bench embeds this per key in its artifact so
     * accepted-demo status (e.g. join_theta_range's by-design BNLJ) is
     * machine-readable instead of verdict folklore (VERDICT r10 task 8).
+    *
+    * Walks the tree: an adaptive plan counts its current plan only (the
+    * final plan once executed, the initial one before), query stages
+    * count the plan they wrap, a reused exchange counts once, and
+    * subqueries count. The string of an executed adaptive plan holds
+    * both the final and the initial plan, so counting in it read every
+    * exchange twice.
     */
-  def planClass(plan: String): String = {
-    val n = "Exchange (hash|range|SinglePartition|roundrobin)".r
-      .findAllIn(plan).length
+  def planClass(plan: SparkPlan): String = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    val all = nodes(plan)
     val flags = Seq(
-      if (plan.contains("CartesianProduct")) Some("cart") else None,
-      if (plan.contains("BroadcastNestedLoopJoin")) Some("bnlj") else None
+      if (all.exists(_.isInstanceOf[CartesianProductExec])) Some("cart") else None,
+      if (all.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec])) Some("bnlj") else None
     ).flatten
-    (s"e$n" +: flags).mkString(",")
+    (s"e${all.count(_.isInstanceOf[ShuffleExchangeExec])}" +: flags).mkString(",")
   }
 
   /** One timed attempt at one key, priced as in [[KeyRes]] (rows = -1
@@ -237,7 +260,7 @@ object Bench {
       frame.queryExecution.toRdd.count() // every output column, re-run
       val tf = System.nanoTime()
       val tag =
-        try planClass(frame.queryExecution.executedPlan.toString)
+        try planClass(frame.queryExecution.executedPlan)
         catch { case _: Throwable => "unplannable" }
       Attempt((tc - t0) / 1e9, ((tb - t0) + (tf - tc)) / 1e9,
         (cpuNow() - c0) / 1e9, n, tag, (cc - c0) / 1e9)

@@ -121,7 +121,7 @@ object Probe {
           val f = fn(spark, sfDir); f.count(); f
         }
         out(s"census $key jobs=$jobs stages=$stages " +
-          s"plan=${Bench.planClass(frame.queryExecution.executedPlan.toString)}")
+          s"plan=${Bench.planClass(frame.queryExecution.executedPlan)}")
       } catch { case e: Throwable => out(s"census $key failed: $e") }
     }
 

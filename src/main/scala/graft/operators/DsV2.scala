@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Scratch, Tables}
+import graft.{Q, QueryModule, Scratch, Tables, Warm}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -28,12 +28,10 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object DsV2 extends QueryModule {
 
-  /** Topic fixture cache: one committed graft-log topic per (JVM, sfDir) —
+  /** Topic fixture: one committed graft-log topic per (JVM, sfDir) —
     * events re-keyed as (partition = user_id mod 4, key = event_id,
     * value = event_type, ts = epoch µs), written once via the V2 writer.
     */
-  private val topicCache = scala.collection.mutable.Map[String, (String, Long)]()
-
   private[graft] def topic(s: SparkSession, dir: String): String =
     topicMeta(s, dir)._1
 
@@ -43,14 +41,11 @@ object DsV2 extends QueryModule {
     * checkpoint+state rewrites (11.5 s at sf0.1 under the old constant).
     */
   private[graft] def topicMeta(s: SparkSession, dir: String): (String, Long) =
-    topicCache.synchronized {
-      topicCache.getOrElseUpdate(dir, {
-        val out = s"${Scratch.fresh(
-          "dsv2_topic_" + dir.replaceAll("[^a-zA-Z0-9.]", "_"))}/log"
-        val lf = logFrame(s, dir)
-        lf.write.format("graft-log").mode("append").save(out)
-        (out, s.read.format("graft-log").load(out).count())
-      })
+    Warm.disk("dsv2_topic", dir) { root =>
+      val out = s"$root/log"
+      val lf = logFrame(s, dir)
+      lf.write.format("graft-log").mode("append").save(out)
+      (out, s.read.format("graft-log").load(out).count())
     }
 
   /** Registry-path trigger size: ~4 micro-batches over the whole topic
@@ -67,26 +62,21 @@ object DsV2 extends QueryModule {
     * `_meta` row counts alone. Offsets follow `row_number OVER (PARTITION
     * BY p ORDER BY event_id % 4, event_id) − 1`.
     */
-  private val seekTopicCache = scala.collection.mutable.Map[String, String]()
-
   private[graft] def seekTopic(s: SparkSession, dir: String): String =
-    seekTopicCache.synchronized {
-      seekTopicCache.getOrElseUpdate(dir, {
-        val out = s"${Scratch.fresh(
-          "dsv2_seek_" + dir.replaceAll("[^a-zA-Z0-9.]", "_"))}/log"
-        (0 until 4).foreach { m =>
-          Tables.events(s, dir)
-            .filter(col("event_id") % 4 === m)
-            .select(pmod(col("user_id"), lit(4)).cast("int").as("partition"),
-              col("event_id").cast("string").as("key"),
-              col("event_type").as("value"),
-              unix_micros(col("ts")).as("ts"))
-            .repartition(4, col("partition"))
-            .sortWithinPartitions(col("partition"), col("key").cast("long"))
-            .write.format("graft-log").mode("append").save(out)
-        }
-        out
-      })
+    Warm.disk("dsv2_seek_topic", dir) { root =>
+      val out = s"$root/log"
+      (0 until 4).foreach { m =>
+        Tables.events(s, dir)
+          .filter(col("event_id") % 4 === m)
+          .select(pmod(col("user_id"), lit(4)).cast("int").as("partition"),
+            col("event_id").cast("string").as("key"),
+            col("event_type").as("value"),
+            unix_micros(col("ts")).as("ts"))
+          .repartition(4, col("partition"))
+          .sortWithinPartitions(col("partition"), col("key").cast("long"))
+          .write.format("graft-log").mode("append").save(out)
+      }
+      out
     }
 
   /** The events table in log shape, one-task-per-partition and key-sorted
@@ -504,19 +494,14 @@ object DsV2 extends QueryModule {
 
   /** Customer dim with the log-partition key as a STORED column — the
     * join_dpp_dsv2 fixture (written once per JVM/sfDir). */
-  private val dppDimCache = scala.collection.mutable.Map[String, String]()
-
   private[graft] def dppDim(s: SparkSession, dir: String): String =
-    dppDimCache.synchronized {
-      dppDimCache.getOrElseUpdate(dir, {
-        val out = s"${Scratch.fresh(
-          "dsv2_dppdim_" + dir.replaceAll("[^a-zA-Z0-9.]", "_"))}/dim"
-        Tables.customer(s, dir)
-          .select(col("c_custkey"), col("c_name"),
-            pmod(col("c_custkey"), lit(4)).cast("int").as("dp"))
-          .write.parquet(out)
-        out
-      })
+    Warm.disk("dsv2_dpp_dim", dir) { root =>
+      val out = s"$root/dim"
+      Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_name"),
+          pmod(col("c_custkey"), lit(4)).cast("int").as("dp"))
+        .write.parquet(out)
+      out
     }
 
   /** Purchase-slice topic: the same events, filtered to purchases, keyed
@@ -524,24 +509,18 @@ object DsV2 extends QueryModule {
     * within partitions) — the co-partitioned second fact the SPJ key
     * joins without a shuffle. Committed once per (JVM, sfDir).
     */
-  private val purchaseTopicCache =
-    scala.collection.mutable.Map[String, String]()
-
   private[graft] def purchaseTopic(s: SparkSession, dir: String): String =
-    purchaseTopicCache.synchronized {
-      purchaseTopicCache.getOrElseUpdate(dir, {
-        val out = s"${Scratch.fresh(
-          "dsv2_purch_" + dir.replaceAll("[^a-zA-Z0-9.]", "_"))}/log"
-        Tables.events(s, dir)
-          .filter(col("event_type") === "purchase")
-          .select(pmod(col("user_id"), lit(4)).cast("int").as("partition"),
-            col("event_id").cast("string").as("key"),
-            col("event_type").as("value"),
-            unix_micros(col("ts")).as("ts"))
-          .repartition(4, col("partition"))
-          .sortWithinPartitions(col("partition"), col("key").cast("long"))
-          .write.format("graft-log").mode("append").save(out)
-        out
-      })
+    Warm.disk("dsv2_purchase_topic", dir) { root =>
+      val out = s"$root/log"
+      Tables.events(s, dir)
+        .filter(col("event_type") === "purchase")
+        .select(pmod(col("user_id"), lit(4)).cast("int").as("partition"),
+          col("event_id").cast("string").as("key"),
+          col("event_type").as("value"),
+          unix_micros(col("ts")).as("ts"))
+        .repartition(4, col("partition"))
+        .sortWithinPartitions(col("partition"), col("key").cast("long"))
+        .write.format("graft-log").mode("append").save(out)
+      out
     }
 }

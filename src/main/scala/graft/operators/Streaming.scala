@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import graft.{Q, QueryModule, Scratch, Tables}
+import graft.{Q, QueryModule, Scratch, Tables, Warm}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -55,31 +55,27 @@ object Streaming extends QueryModule {
   private val eventCols =
     Seq("event_id", "ts", "user_id", "event_type", "value", "props")
 
-  /** Slice-input cache: the 3-file time-ordered cut of `events` is identical
-    * for every streaming query at a given scale dir, so cut once per
-    * (JVM, sfDir) and give each query its own fresh checkpoint.
-    */
-  private val sliceCache = scala.collection.mutable.Map[String, String]()
-
   /** Pre-cut the shared slice input for a scale dir (idempotent). Bench
     * calls this in warmup so the first streaming query's time measures the
     * stream, not the one-time slice materialization.
     */
-  private[graft] def prepareInputs(s: SparkSession, dir: String): Unit =
-    sliceCache.synchronized {
-      sliceCache.getOrElseUpdate(dir, cutSlices(s, dir))
-      ()
-    }
+  private[graft] def prepareInputs(s: SparkSession, dir: String): Unit = {
+    slicesIn(s, dir); ()
+  }
 
-  /** Cut events into 3 time-ordered slice files (cached per sfDir) and a
-    * fresh per-query checkpoint dir. Returns (inputDir, checkpointDir).
+  /** The 3-file time-ordered cut of `events` is identical for every
+    * streaming query at a given scale dir, so it is cut once per
+    * (JVM, sfDir); returns its input dir.
+    */
+  private def slicesIn(s: SparkSession, dir: String): String =
+    Warm.disk("stream_slices", dir)(cutSlices(s, dir, _))
+
+  /** The shared slice input and a fresh per-query checkpoint dir.
+    * Returns (inputDir, checkpointDir).
     */
   private def slices(s: SparkSession, dir: String, key: String): (String, String) = {
     val ckpt = s"${Scratch.fresh(key)}/ckpt"
-    val in = sliceCache.synchronized {
-      sliceCache.getOrElseUpdate(dir, cutSlices(s, dir))
-    }
-    (in, ckpt)
+    (slicesIn(s, dir), ckpt)
   }
 
   /** Start a streaming query and drive it to completion with shuffle
@@ -180,9 +176,7 @@ object Streaming extends QueryModule {
     }
   }
 
-  private def cutSlices(s: SparkSession, dir: String): String = {
-    val root = Scratch.fresh(
-      "slices_" + dir.replaceAll("[^a-zA-Z0-9.]", "_"))
+  private def cutSlices(s: SparkSession, dir: String, root: String): String = {
     val in = s"$root/in"
     Files.createDirectories(Paths.get(in))
     val ev = Tables.events(s, dir)

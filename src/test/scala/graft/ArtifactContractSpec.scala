@@ -130,9 +130,10 @@ class ArtifactContractSpec extends AnyFunSuite with SparkFixture {
     import scala.jdk.CollectionConverters._
     // Current round = latest committed CORRECTNESS round + 1 (the driver
     // commits CORRECTNESS_r{N} when round N closes, so a tree holding
-    // r16 is round 17 in progress). The pin activates once the round's
-    // first full sweep has run via tools/round_close_bench.py — from
-    // then on, a deleted or stale drift artifact fails sbt test.
+    // r16 is round 17 in progress). The pin activates as soon as
+    // CORRECTNESS_r<N-1>.json lands, not when the round's sweep runs: from
+    // then on the test fails until tools/round_close_bench.py has written
+    // DRIFT_r<N>.json, and a deleted or stale drift artifact fails it too.
     val rounds = Files.list(Paths.get(".")).iterator().asScala
       .map(_.getFileName.toString)
       .collect { case s if s.matches("CORRECTNESS_r\\d+\\.json") =>
@@ -262,6 +263,36 @@ class ArtifactContractSpec extends AnyFunSuite with SparkFixture {
       }
       assert(e.getMessage.contains("no_such_key"), s"$mode: ${e.getMessage}")
       assert(jobs == 0, s"$mode ran $jobs jobs before rejecting the key")
+    }
+  }
+
+  test("Bench.planClass counts the final plan's exchanges once: a " +
+    "one-shuffle aggregate reads e1 before and after execution") {
+    import org.apache.spark.sql.functions.{col, sum}
+    val f = spark.range(1000).toDF("id")
+      .groupBy((col("id") % 7).as("k")).agg(sum("id").as("s"))
+    assert(Bench.planClass(f.queryExecution.executedPlan) == "e1")
+    f.queryExecution.toRdd.count()
+    val executed = f.queryExecution.executedPlan
+    assert(executed.toString.contains("Final Plan"), executed.toString)
+    assert(Bench.planClass(executed) == "e1", executed.toString)
+  }
+
+  test("Bench.loadPriors: a missing file is no priors, an unreadable or " +
+    "pair-less file throws") {
+    val dir = Files.createTempDirectory("priors")
+    try {
+      assert(Bench.loadPriors(dir.resolve("absent.json")).isEmpty)
+      val ok = Files.writeString(dir.resolve("ok.json"),
+        "{\"agg_group\": 0.25, \"sort_global\":1.5}")
+      assert(Bench.loadPriors(ok) ==
+        Map("agg_group" -> 0.25, "sort_global" -> 1.5))
+      val empty = Files.writeString(dir.resolve("empty.json"), "{}")
+      intercept[IllegalArgumentException](Bench.loadPriors(empty))
+      // a directory exists but cannot be read as a file
+      intercept[java.io.IOException](Bench.loadPriors(dir))
+    } finally {
+      Files.list(dir).forEach(p => Files.delete(p)); Files.delete(dir)
     }
   }
 }

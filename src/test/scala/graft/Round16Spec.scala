@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-16 regression pins for the r15 ADVICE findings: the
   * agg_markov_stationary oracle actually replayed on the source-only
   * fixture (not just the engine side), the q-digest Long-safe wire size,
-  * the portable-qdigest oracle clamp, the session-cache purge, and the
-  * bench drift stamp.
+  * the portable-qdigest oracle clamp, and the bench drift stamp (the
+  * session-entry purge is pinned in WarmSpec).
   */
 class Round16Spec extends AnyFunSuite with SparkFixture {
 
@@ -112,28 +112,6 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
     assert(sql.contains("least(greatest("), "clamp missing from oracle")
     assert(sql.contains(((1L << 24) - 1).toString),
       "clamp upper bound must be 2^24 - 1")
-  }
-
-  test("SessionCache: dead-session entries are purged on access, live " +
-    "entries are served from cache (ADVICE r15 leak)") {
-    import scala.collection.concurrent.TrieMap
-    import org.apache.spark.sql.SparkSession
-    import graft.operators.SessionCache
-    val live = spark
-    // The purge mechanism, driven with an explicit liveness predicate
-    // (local-mode sessions share one SparkContext, so a REAL stopped
-    // session can't be built without killing the fixture).
-    val cache = TrieMap.empty[(String, String), String]
-    cache.put(("dead", "x"), "D")
-    cache.put(("live", "x"), "L")
-    SessionCache.purge(cache)(_._1 == "dead")
-    assert(cache.size == 1 && cache.contains(("live", "x")))
-    // The full cached() path against the real fixture session: second
-    // access must hit (the session is live, nothing purged).
-    val c2 = TrieMap.empty[(SparkSession, String), String]
-    val a = SessionCache.cached(c2, (live, "x"))(_._1)("A")
-    val b = SessionCache.cached(c2, (live, "x"))(_._1)("B")
-    assert(a == "A" && b == "A", "live entry must be served from cache")
   }
 
   test("single-rounding rule: re-rounding a 6-quantized double at scale " +
