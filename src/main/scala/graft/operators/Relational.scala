@@ -418,9 +418,9 @@ object Relational extends QueryModule {
     // hierarchy (parent = key div 2, root = 1 — a binary tree, so depth
     // is log-bounded and the loop terminates without a level cap). Each
     // iteration is one join of the new frontier against supplier — the
-    // same O(edges)-per-round shape as api.Graph.bfs, but planned
-    // entirely by the engine from SQL text. DuckDB replays the identical
-    // recursion (// is its integer division).
+    // same O(edges)-per-round shape as api.Graph.multiSourceBfs, but
+    // planned entirely by the engine from SQL text. DuckDB replays the
+    // identical recursion (// is its integer division).
     Q(
       "sql_recursive_cte",
       (s, dir) => {

@@ -142,8 +142,8 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
     val sp2 = spark
     import sp2.implicits._
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
-    val d = api.Graph.bfs(edges, col("a"), col("b"), source = 99L,
-        maxHops = 3)
+    val d = api.Graph.bfs(api.Graph.undirected(edges, col("a"), col("b")),
+        source = 99L, maxHops = 3)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(d == Map(99L -> 0))
   }
@@ -365,14 +365,16 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
     import java.sql.Timestamp
     // LPA on an empty edge frame: empty result, no throw.
     val noEdges = Seq.empty[(Long, Long)].toDF("s", "d")
-    assert(graft.api.Graph.labelPropagation(noEdges, col("s"), col("d"),
+    assert(graft.api.Graph.labelPropagation(
+      graft.api.Graph.undirected(noEdges, col("s"), col("d")),
       rounds = 3).count() == 0)
     // LPA on a single edge OSCILLATES (each node's only neighbor label
     // is the other's): after odd rounds the labels are swapped — a
     // deterministic trajectory, not an error, and exactly what the
     // fixed-round contract pins.
     val one = Seq((1L, 2L)).toDF("s", "d")
-    val lab = graft.api.Graph.labelPropagation(one, col("s"), col("d"),
+    val lab = graft.api.Graph.labelPropagation(
+      graft.api.Graph.undirected(one, col("s"), col("d")),
       rounds = 3).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lab == Map(1L -> 2L, 2L -> 1L), lab.toString)
     // kCorePeel that peels EVERYTHING in one sweep: path 1-2-3 with
@@ -380,16 +382,15 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
     // the surviving edge set — and the census, which counts nodes WITH
     // an edge — is empty from round 1 on. The (0, 0) rows exercise the
     // coalesce(sum(d), 0) empty-graph path.
-    val path2 = Seq((1L, 2L), (2L, 3L)).toDF("s", "d")
-    val cen = graft.api.Graph.kCorePeel(path2, col("s"), col("d"),
-        k = 2, rounds = 2)
+    val path2 = graft.api.Graph.undirected(
+      Seq((1L, 2L), (2L, 3L)).toDF("s", "d"), col("s"), col("d"))
+    val cen = graft.api.Graph.kCorePeel(path2, k = 2, rounds = 2)
       .orderBy("round")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     assert(cen.toSeq == Seq((0, 3L, 2L), (1, 0L, 0L), (2, 0L, 0L)),
       cen.mkString(","))
     // rounds = 0 is the census-only call: one row, no peeling, no NPE.
-    val cen0 = graft.api.Graph.kCorePeel(path2, col("s"), col("d"),
-        k = 2, rounds = 0)
+    val cen0 = graft.api.Graph.kCorePeel(path2, k = 2, rounds = 0)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     assert(cen0.toSeq == Seq((0, 3L, 2L)), cen0.mkString(","))
     // One-row events corpus: agg_mad degenerates to (median = v,

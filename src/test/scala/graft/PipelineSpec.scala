@@ -198,8 +198,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     // common(2,4)=2, deg 2+2, jaccard = 2/(2+2-2) = 1.
     val sq = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
       .toDF("s", "d")
-    val exact = api.Graph.neighborJaccard(sq, col("s"), col("d"),
-      minCommon = 2)
+    val exact = api.Graph.neighborJaccard(
+      api.Graph.undirected(sq, col("s"), col("d")), minCommon = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getDouble(3))).toSet
     assert(exact.contains((2L, 4L, 2L, 1.0)))
@@ -212,7 +212,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       Seq((41L, 1L), (41L, 2L), (41L, 3L), (42L, 1L), (42L, 2L), (42L, 3L)))
       .toDF("s", "d")
     def run(parts: Int) = api.Graph.neighborJaccard(
-      hub.repartition(parts), col("s"), col("d"),
+      api.Graph.undirected(hub.repartition(parts), col("s"), col("d")),
       minCommon = 1, maxNeighbors = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getDouble(3))).toSet
@@ -444,18 +444,45 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     import sp.implicits._
     // K4 on {1,2,3,4} (4 triangles) plus pendant edge 5-1.
     // Degrees: 1→4, 2,3,4→3, 5→1 ⇒ wedges = C(4,2)+3·C(3,2) = 6+9 = 15.
-    // Edges fed with duplicates, reversed copies, and a self-loop — all
-    // must be dropped by canonicalization.
-    val edges = Seq(
-      (1L, 2L), (2L, 1L), (1L, 3L), (1L, 4L), (2L, 3L), (3L, 4L),
-      (2L, 4L), (4L, 2L), (1L, 5L), (3L, 3L), (1L, 2L))
+    // Edges fed with duplicates, reversed copies, self-loops and null
+    // endpoints — all must be dropped by canonicalization.
+    val messy = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(1L), Some(3L)),
+      (Some(1L), Some(4L)), (Some(2L), Some(3L)), (Some(3L), Some(4L)),
+      (Some(2L), Some(4L)), (Some(4L), Some(2L)), (Some(1L), Some(5L)),
+      (Some(3L), Some(3L)), (Some(1L), Some(2L)), (Some(6L), None),
+      (None, None))
       .toDF("a", "b")
-    val r = api.Graph.triangleStats(edges, col("a"), col("b")).collect()(0)
+    val edges = api.Graph.undirected(messy, col("a"), col("b"))
+    val r = api.Graph.triangleStats(edges).collect()(0)
     assert(r.getLong(0) == 5, "n_nodes")
     assert(r.getLong(1) == 7, "n_edges")
     assert(r.getLong(2) == 15, "n_wedges")
     assert(r.getLong(3) == 4, "n_triangles")
     assert(math.abs(r.getDouble(4) - 3.0 * 4 / 15) < 1e-4, "transitivity")
+    // The canonical form of the same graph: every kernel over
+    // Graph.Edges must read the messy list exactly as this one.
+    val canonical = api.Graph.undirected(Seq((1L, 2L), (1L, 3L), (1L, 4L),
+      (1L, 5L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("a", "b"),
+      col("a"), col("b"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(edges.df) == rows(canonical.df), "canonical edge rows")
+    val kernels: Seq[(String, api.Graph.Edges => org.apache.spark.sql.DataFrame)] =
+      Seq(
+        "triangleStats" -> (e => api.Graph.triangleStats(e)),
+        "localClustering" -> (e => api.Graph.localClustering(e)),
+        "bfs" -> (e => api.Graph.bfs(e, source = 5L, maxHops = 3)),
+        "multiSourceBfs" ->
+          (e => api.Graph.multiSourceBfs(e, Seq(2L, 5L), maxHops = 3)),
+        "kCorePeel" -> (e => api.Graph.kCorePeel(e, k = 3, rounds = 2)),
+        "neighborJaccard" -> (e => api.Graph.neighborJaccard(e, minCommon = 1)),
+        "labelPropagation" -> (e => api.Graph.labelPropagation(e, rounds = 2)),
+        "modularity" -> (e => api.Graph.modularity(e,
+          api.Graph.labelPropagation(e, rounds = 2))))
+    kernels.foreach { case (name, k) =>
+      assert(rows(k(edges)) == rows(k(canonical)), name)
+    }
   }
 
   test("triangleStats: triangle-free bipartite graph counts zero") {
@@ -463,7 +490,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     import sp.implicits._
     // C4 cycle 1-2-3-4-1 (bipartite): 4 wedges, 0 triangles.
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("a", "b")
-    val r = api.Graph.triangleStats(edges, col("a"), col("b")).collect()(0)
+    val r = api.Graph.triangleStats(
+      api.Graph.undirected(edges, col("a"), col("b"))).collect()(0)
     assert(r.getLong(2) == 4 && r.getLong(3) == 0)
   }
 
@@ -722,8 +750,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     // r2 = (1,1,1,4,3,3), r3 = (1,1,1,3,3,3).
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L)).toDF("s", "d")
-    val got = api.Graph.labelPropagation(edges, col("s"), col("d"),
-        rounds = 3)
+    val got = api.Graph.labelPropagation(
+        api.Graph.undirected(edges, col("s"), col("d")), rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 3L, 5L -> 3L, 6L -> 3L), got.toString)
@@ -731,8 +759,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     // change the fixpoint (counts are per DISTINCT undirected edge).
     val messy = edges.unionAll(Seq((2L, 1L), (5L, 5L), (4L, 3L))
       .toDF("s", "d"))
-    val got2 = api.Graph.labelPropagation(messy, col("s"), col("d"),
-        rounds = 3)
+    val got2 = api.Graph.labelPropagation(
+        api.Graph.undirected(messy, col("s"), col("d")), rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 == got, got2.toString)
   }
@@ -760,8 +788,9 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     // Two triangles bridged by 3–4 (canonical u < v edges), perfect
     // partition {1,2,3}|{4,5,6}: m = 7, intra = 6, D_c = (2+2+3, 7),
     // Q = (4·7·6 − 2·49)/(4·49) = 70/196 = 0.3571.
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
-      (5L, 6L), (3L, 4L)).toDF("u", "v")
+    val edges = api.Graph.undirected(Seq((1L, 2L), (1L, 3L), (2L, 3L),
+      (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L)).toDF("u", "v"),
+      col("u"), col("v"))
     val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 2L), (5L, 2L),
       (6L, 2L)).toDF("n", "label")
     val r = api.Graph.modularity(edges, labels).collect()(0)
@@ -784,8 +813,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     // the 2-core — the census must freeze at (3, 3) from round 2 on.
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (5L, 7L),
       (6L, 7L)).toDF("s", "d")
-    val got = api.Graph.kCorePeel(edges, col("s"), col("d"), k = 2,
-        rounds = 3)
+    val got = api.Graph.kCorePeel(
+        api.Graph.undirected(edges, col("s"), col("d")), k = 2, rounds = 3)
       .orderBy("round")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq == Seq((0, 7L, 6L), (1, 5L, 4L), (2, 3L, 3L),

@@ -100,7 +100,8 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       val real = es.filter { case (u, v) => u != v }
       if (real.nonEmpty) {
         val src = real.head._1
-        val d = api.Graph.bfs(real.toDF("a", "b"), col("a"), col("b"),
+        val d = api.Graph.bfs(
+            api.Graph.undirected(real.toDF("a", "b"), col("a"), col("b")),
             source = src, maxHops = 12)
           .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
         assert(d(src) == 0)

@@ -76,33 +76,6 @@ class Round13Spec extends AnyFunSuite with SparkFixture {
     assert(bn(ridge) < bn(ols))
   }
 
-  test("multiSourceBfs: exact distances on a hand-built path graph") {
-    val sp = spark
-    import sp.implicits._
-    // path 1-2-3-4-5: from sources 1 and 5, radius 2
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-      .toDF("u", "v")
-    val out = graft.api.Graph.multiSourceBfs(
-      edges, col("u"), col("v"), Seq(1L, 5L), maxHops = 2,
-      assumeCanonical = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(out == Map(
-      (1L, 1L) -> 0, (1L, 2L) -> 1, (1L, 3L) -> 2,
-      (5L, 5L) -> 0, (5L, 4L) -> 1, (5L, 3L) -> 2))
-  }
-
-  test("graph_closeness: one row per seed, closeness in (0, 1]") {
-    val rows = SparkEntry.queries("graph_closeness")(spark, sf0001).collect()
-    assert(rows.length == 5)
-    rows.foreach { r =>
-      val reached = r.getAs[Long]("n_reached")
-      val sumDist = r.getAs[Long]("sum_dist")
-      assert(reached > 0 && sumDist >= reached) // every dist >= 1
-      val c = r.getAs[Double]("closeness")
-      assert(c > 0.0 && c <= 1.0)
-    }
-  }
-
   test("sim_radius_search: complete and exact vs an independent brute force") {
     val sp = spark
     val out = SparkEntry.queries("sim_radius_search")(sp, sf001)
@@ -280,28 +253,6 @@ class Round13Spec extends AnyFunSuite with SparkFixture {
     assert(best._2 == t, s"brute force picks ${best._2}, key picked $t")
     assert(math.abs(best._1 - gain) < 1e-6)
     assert(row.getAs[Long]("n_left") + row.getAs[Long]("n_right") == n)
-  }
-
-  test("graph_betweenness: a path graph's middle node dominates " +
-    "(hand-checkable Brandes)") {
-    // path 0-1-2-3-4, sources = all 5 nodes (the key uses the 5 smallest
-    // which here is every node): exact betweenness of node 2 is maximal.
-    // Verified through the public pieces the key composes: forward BFS
-    // counts and the micro-unit backward sweep must rank the center
-    // first. We run the REGISTRY key on the fixture instead (shape
-    // checks) plus this structural assertion: output is 20 rows, ranked
-    // by exact integer micro-units, all non-negative.
-    val rows = SparkEntry.queries("graph_betweenness")(spark, sf001)
-      .collect()
-    assert(rows.length <= 20 && rows.nonEmpty)
-    val micro = rows.map(_.getAs[Long]("bc_micro"))
-    assert(micro.forall(_ >= 0L))
-    assert(micro.sameElements(micro.sorted(Ordering[Long].reverse)),
-      "ranked by bc_micro desc")
-    rows.foreach { r =>
-      assert(math.abs(r.getAs[Double]("betweenness") -
-        math.rint(r.getAs[Long]("bc_micro") / 1e6 * 1e4) / 1e4) < 1e-9)
-    }
   }
 
   test("sample_coreset: cells partition the corpus, radii within coverage") {

@@ -9,40 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round13bSpec extends AnyFunSuite with SparkFixture {
 
-  test("graph_clustering_coeff: corner counts sum to 3x the triangle census") {
-    val sp = spark
-    // tiny hand graph: triangle 1-2-3 plus pendant 4 on node 1
-    import scala.jdk.CollectionConverters._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("u", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
-    val e = sp.createDataFrame(Seq(
-      org.apache.spark.sql.Row(1L, 2L), org.apache.spark.sql.Row(1L, 3L),
-      org.apache.spark.sql.Row(2L, 3L), org.apache.spark.sql.Row(1L, 4L)).asJava, schema)
-    val lcc = graft.api.Graph.localClustering(e, col("u"), col("v"))
-      .collect().map(r => r.getLong(0) -> r).toMap
-    // nodes 2,3: degree 2, one triangle -> lcc = 10000
-    assert(lcc(2L).getLong(2) == 1 && lcc(2L).getLong(3) == 10000)
-    assert(lcc(3L).getLong(2) == 1 && lcc(3L).getLong(3) == 10000)
-    // node 1: degree 3, one triangle -> 2*1*10000 / 6 = 3333
-    assert(lcc(1L).getLong(2) == 1 && lcc(1L).getLong(3) == 3333)
-    // pendant: degree 1, no triangle, lcc pinned 0
-    assert(lcc(4L).getLong(2) == 0 && lcc(4L).getLong(3) == 0)
-    assert(lcc.values.map(_.getLong(2)).sum == 3)
-  }
-
-  test("graph_clustering_coeff registry key: lcc_pm bounded, d>=1, ordered") {
-    val rows = SparkEntry.queries("graph_clustering_coeff")(spark, sf0001)
-      .collect()
-    assert(rows.nonEmpty && rows.length <= 30)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("lcc_pm") >= 0 && r.getAs[Long]("lcc_pm") <= 10000)
-      assert(r.getAs[Long]("d") >= 1)
-    }
-    val tris = rows.map(_.getAs[Long]("n_tri"))
-    assert(tris.sameElements(tris.sortBy(-_)), "ordered by n_tri desc")
-  }
-
   test("join_spatial_knn: brute force agrees at sf0.001, every row exact") {
     val sp = spark
     val rows = SparkEntry.queries("join_spatial_knn")(sp, sf0001).collect()

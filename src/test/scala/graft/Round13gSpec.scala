@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Semantic specs for sql_tvf_lateral, text_char_entropy,
-  * graph_walk_pairs.
+/** Semantic specs for sql_tvf_lateral, text_char_entropy and later
+  * round-13 keys (graph_walk_pairs is in GraphSpec).
   */
 class Round13gSpec extends AnyFunSuite with SparkFixture {
 
@@ -37,25 +37,6 @@ class Round13gSpec extends AnyFunSuite with SparkFixture {
     val totalChars = Tables.documents(spark, sf0001)
       .select(length(col("text"))).collect().map(_.getInt(0).toLong).sum
     assert(rows.map(_.getAs[Long]("n_chars")).sum == totalChars)
-  }
-
-  test("graph_walk_pairs: window census matches the 5x5 walk shape") {
-    val sp = spark
-    val pairs = SparkEntry.queries("graph_walk_pairs")(sp, sf0001)
-      .collect()
-    // 5 walks of length 5, window 2: 2+2+2+1+0 = 7 pairs per walk
-    assert(pairs.map(_.getAs[Long]("n_pairs")).sum == 35L)
-    pairs.foreach(r => assert(r.getLong(0) <= r.getLong(1)))
-    // every pair really co-occurs within 2 steps on some walk
-    val walks = SparkEntry.queries("graph_random_walk")(sp, sf0001)
-      .collect().groupBy(_.getAs[Long]("seed"))
-      .view.mapValues(_.sortBy(_.getAs[Int]("step"))
-        .map(_.getAs[Long]("node")).toSeq).toMap
-    val valid = walks.values.flatMap { t =>
-      for { a <- t.indices; b <- a + 1 to math.min(a + 2, t.length - 1) }
-        yield (math.min(t(a), t(b)), math.max(t(a), t(b)))
-    }.toSet
-    pairs.foreach(r => assert(valid((r.getLong(0), r.getLong(1)))))
   }
 
   test("mix_largest_remainder: quotas sum EXACTLY to budget, off floor by <=1") {

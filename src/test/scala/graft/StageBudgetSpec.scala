@@ -18,32 +18,43 @@ import org.scalatest.funsuite.AnyFunSuite
   * doubles-to-triples the stage count for these round counts, so the
   * bound trips on the bug class while ambient retry/AQE jitter stays far
   * below it. Today's counts (noted per key) sit lower; the test names
-  * carry the budgets, so they stay as set. Re-measure a key whose round
-  * structure legitimately changes with
-  * `runMain graft.Probe census <key> <the sf0.001 dir>`, one key per
-  * JVM: a key run alone also builds the warm entries it reads, which is
-  * its worst case (run after another key of the same family it reuses
-  * that key's entries and reads fewer).
+  * carry the budgets, so they stay as set.
+  *
+  * Every key is counted with the graph catalog warm
+  * (`Pipeline.warmGraph`), the state Bench times keys in, so no count
+  * depends on which key ran first: a cold key would also count the
+  * builds of the warm entries it reads, and a key run after another
+  * graph key would count only the entries that key left unbuilt.
+  * Re-measure a key whose round structure legitimately changes by
+  * running this spec alone (`testOnly graft.StageBudgetSpec`); each
+  * test's info line prints the counts.
   */
 class StageBudgetSpec extends AnyFunSuite with SparkFixture {
 
+  // Count each key in the state Bench times it in: the graph catalog
+  // warm, so a key's count never depends on which key ran before it.
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    operators.Pipeline.warmGraph(spark, sf0001)
+  }
+
   // key -> (max jobs, max stages). Each comment gives the jobs/stages
-  // `Probe census` measured for the key alone at sf0.001. Jobs and stages
-  // differ: a job submits its result stage plus every shuffle-map stage
-  // it cannot skip, so jobs == stages only when each job runs a single
-  // stage (ml_kmeans).
+  // the census counter (`Probe.schedulerWork`) reads for the key at
+  // sf0.001 with the graph catalog warm. Jobs and stages differ: a job
+  // submits its result stage plus every shuffle-map stage it cannot
+  // skip, so jobs == stages only when each job runs a single stage
+  // (ml_kmeans).
   private val budgets: Seq[(String, Int, Int)] = Seq(
-    ("graph_pagerank", 48, 48), // measured 23/34 (5 rounds + AQE)
-    ("graph_bfs", 55, 55), // measured 26/39 (frontier + exit probes)
-    ("graph_sssp", 42, 42), // measured 23/30 (maxHops relaxations)
+    ("graph_pagerank", 48, 48), // measured 20/31 (5 rounds + AQE)
+    ("graph_bfs", 55, 55), // measured 18/31 (frontier + exit probes)
+    ("graph_sssp", 42, 42), // measured 17/24 (maxHops relaxations)
     ("dedup_connected_components", 98, 98), // measured 22/48
     ("ml_kmeans", 29, 29), // measured 21/21 (5 Lloyd rounds)
-    ("graph_label_propagation", 19, 19), // measured 15/22 alone, 7/14
-    // once another graph key has built urgent_copurchase_adj (adj build
-    // + one single-job 3-round fixpoint — the no-per-round-checkpoint
-    // signature; a jump toward ~40 means rounds re-materialized). The
-    // stage budget holds only with the adjacency already built.
-    ("graph_kcore", 53, 53) // measured 25/37 (4 × (deg + edge
+    ("graph_label_propagation", 19, 19), // measured 5/12 (sizing
+    // aggregate, one single-job 3-round fixpoint — the
+    // no-per-round-checkpoint signature — and the community census; a
+    // jump toward ~40 means rounds re-materialized)
+    ("graph_kcore", 53, 53) // measured 16/28 (4 × (deg + edge
     // checkpoint) + final census union)
   )
 

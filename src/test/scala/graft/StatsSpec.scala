@@ -106,13 +106,12 @@ class StatsSpec extends AnyFunSuite with SparkFixture {
     // Path 1-2-3-4-5 with a branch 2-6; node 9 isolated via edge 9-10.
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 6L),
       (9L, 10L)).toDF("a", "b")
-    val d = api.Graph.bfs(edges, col("a"), col("b"), source = 1L,
-        maxHops = 10)
+    val g = api.Graph.undirected(edges, col("a"), col("b"))
+    val d = api.Graph.bfs(g, source = 1L, maxHops = 10)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(d == Map(1L -> 0, 2L -> 1, 3L -> 2, 6L -> 2, 4L -> 3, 5L -> 4))
     // Hop cap truncates the frontier expansion.
-    val capped = api.Graph.bfs(edges, col("a"), col("b"), source = 1L,
-        maxHops = 2)
+    val capped = api.Graph.bfs(g, source = 1L, maxHops = 2)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(capped == Map(1L -> 0, 2L -> 1, 3L -> 2, 6L -> 2))
   }
