@@ -89,14 +89,13 @@ object Tables {
     // footer (a legal events variant) reaches the drift-guard message
     // instead of dying in schema inference with Spark's opaque
     // "Illegal Parquet type" error.
-    columnsValidated.computeIfAbsent(s"$dir/$name", _ => {
+    Warm.value(s"tables_columns_$name", dir) {
       val actual = withNanosAsLong(spark) {
         spark.read.parquet(s"$dir/$name.parquet").schema.fieldNames.toSet
       }
       assertPinnedColumnsPresent(actual, schemas(name).fieldNames,
         s"$dir/$name.parquet")
-      java.lang.Boolean.TRUE
-    })
+    }
     spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
   }
 
@@ -107,9 +106,7 @@ object Tables {
     * [[tsFooterIsNanos]] both mutate one SparkSession conf; without the
     * lock, an interleaved scope could capture a stale prior and its
     * finally-restore would clobber the persistent set a NANOS corpus
-    * relies on at execution time (ADVICE r10). Harness is single-threaded
-    * today; the lock makes the ConcurrentHashMap-implied multi-thread
-    * expectation actually safe.
+    * relies on at execution time (ADVICE r10).
     */
   private val nanosConfLock = new Object
 
@@ -123,17 +120,8 @@ object Tables {
     */
   private def withNanosAsLong[T](spark: SparkSession)(body: => T): T =
     nanosConfLock.synchronized {
-      val prior = spark.conf.getOption(nanosKey)
-      spark.conf.set(nanosKey, "true")
-      try body
-      finally prior match {
-        case Some(v) => spark.conf.set(nanosKey, v)
-        case None => spark.conf.unset(nanosKey)
-      }
+      Session.withConf(spark, nanosKey -> "true")(body)
     }
-
-  private val columnsValidated =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** Package-visible core of the column-presence contract (the drift spec
     * exercises the rejection path directly).
@@ -156,41 +144,26 @@ object Tables {
     * footer once per directory and pick the matching read path, so a
     * corpus regeneration never silently rescales event time again.
     */
-  private val eventsFooterNanos =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   private def tsFooterIsNanos(spark: SparkSession, dir: String): Boolean =
-    eventsFooterNanos.computeIfAbsent(dir, _ => {
+    Warm.value("tables_events_footer_nanos", dir) {
       // Sniff with nanosAsLong ON: a NANOS footer infers ts as LongType;
       // MICROS/MILLIS footers infer a timestamp type — that distinction
-      // is the sniff. MICROS path: restore the prior value, leaving the
-      // session's inference behavior untouched for unrelated reads.
-      // NANOS path: set-and-LEAVE — unlike inference, the events SCAN
-      // resolves the footer at execution time, which may be long after
-      // this sniff returns, so the flag must outlive the scope. The whole
-      // sniff-then-decide runs under nanosConfLock so no concurrent
-      // scoped restore can interleave with the persistent set (ADVICE
-      // r10).
+      // is the sniff. The scope restores the session's inference
+      // behavior for unrelated reads. NANOS path: set-and-LEAVE — unlike
+      // inference, the events SCAN resolves the footer at execution
+      // time, which may be long after this sniff returns, so the flag
+      // must outlive the scope. The whole sniff-then-decide runs under
+      // nanosConfLock so no concurrent scoped restore can interleave
+      // with the persistent set (ADVICE r10).
       nanosConfLock.synchronized {
-        val prior = spark.conf.getOption(nanosKey)
-        spark.conf.set(nanosKey, "true")
-        val isNanos =
-          try spark.read.parquet(s"$dir/events.parquet")
+        val isNanos = Session.withConf(spark, nanosKey -> "true") {
+          spark.read.parquet(s"$dir/events.parquet")
             .schema("ts").dataType == LongType
-          catch { case e: Throwable =>
-            prior match {
-              case Some(v) => spark.conf.set(nanosKey, v)
-              case None => spark.conf.unset(nanosKey)
-            }
-            throw e
-          }
-        if (!isNanos) prior match {
-          case Some(v) => spark.conf.set(nanosKey, v)
-          case None => spark.conf.unset(nanosKey)
         }
-        java.lang.Boolean.valueOf(isNanos)
+        if (isNanos) Session.keepForScans(spark, nanosKey, "true")
+        isNanos
       }
-    }).booleanValue()
+    }
 
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{timestamp_micros, expr}
@@ -209,15 +182,11 @@ object Tables {
     // silently-rescaled event time to every downstream operator (round-8
     // post-mortem: a µs footer read as ns compressed 30 days into 43
     // minutes and 28 oracle rows went red without one assertion firing).
-    eventsTsValidated.computeIfAbsent(dir, _ => {
+    Warm.value("tables_events_ts_sane", dir) {
       assertEventTimeSane(df, s"$dir/events.parquet")
-      java.lang.Boolean.TRUE
-    })
+    }
     df
   }
-
-  private val eventsTsValidated =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** Require the decoded `ts` domain to land in a plausible window
     * (year 2000–2100). One narrow min/max column scan; cached per dir by

@@ -27,22 +27,17 @@ package object api {
     * partition, clamped to [4, max(cores, session width)] — the fan-out
     * of a frontier×adjacency round is CPU work per ROW, so width follows
     * row count, capped so it never exceeds what the box/cluster offers),
-    * scoped to the loop and restored after. Beyond 50M rows the session conf is left
-    * untouched: there AQE has real decisions (skew, stats-driven
+    * scoped to the loop by `Session.withConf`. Beyond 50M rows the session
+    * conf is left untouched: there AQE has real decisions (skew, stats-driven
     * coalescing) and per-round job overhead is noise against data work.
     * Measured: ml_dbscan_grid 7.7→5.3 s warm, dedup_fuzzy_cluster
     * 3.1→2.2, dedup_connected_components 2.2→1.4. Result rows are
     * partitioning-independent, so hashes never move.
     */
   private[graft] def quietRounds[T](
-      sp: org.apache.spark.sql.SparkSession, nRows: Long)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val shufKey = "spark.sql.shuffle.partitions"
+      sp: org.apache.spark.sql.SparkSession, nRows: Long)(body: => T): T =
     if (nRows > 50000000L) body
     else {
-      val priorAqe = sp.conf.get(aqeKey)
-      val priorShuf = sp.conf.get(shufKey)
-      sp.conf.set(aqeKey, "false")
       // Width rule (r17): rows/50k, clamped to [4, max(cores, session
       // width)]. The r16 rows/2M divisor pinned every sub-8M-row graph
       // at 4 partitions — but these kernels are CPU-bound in the JOIN
@@ -52,17 +47,12 @@ package object api {
       // The cap keeps big-graph runs at the session/cluster width
       // (never LOWERS a cluster-tuned value); the floor keeps tiny
       // fixture graphs at the measured r16 optimum.
+      val shufKey = "spark.sql.shuffle.partitions"
       val cap = math.max(sp.sparkContext.defaultParallelism.toLong,
-        priorShuf.toLong)
-      sp.conf.set(shufKey,
-        math.min(cap, math.max(4L, nRows / 50000L)).toString)
-      try body
-      finally {
-        sp.conf.set(aqeKey, priorAqe)
-        sp.conf.set(shufKey, priorShuf)
-      }
+        sp.conf.get(shufKey).toLong)
+      graft.Session.withConf(sp, "spark.sql.adaptive.enabled" -> "false",
+        shufKey -> math.min(cap, math.max(4L, nRows / 50000L)).toString)(body)
     }
-  }
 
   /** Training-data deduplication primitives. */
   object Dedup {

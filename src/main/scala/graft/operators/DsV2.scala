@@ -92,13 +92,6 @@ object DsV2 extends QueryModule {
       .repartition(4, col("partition"))
       .sortWithinPartitions(col("partition"), col("key").cast("long"))
 
-  /** Shared harness drive: 4-partition state + fast local checkpoint
-    * manager (see Streaming.drive's scaladoc for the measurements).
-    */
-  private def drive(s: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    Streaming.drive(s)(start)
-
   /** Engine-portable 60-bit record fingerprint (md5 prefix), XOR-foldable. */
   private def recHash(off: org.apache.spark.sql.Column,
       key: org.apache.spark.sql.Column) =
@@ -233,7 +226,7 @@ object DsV2 extends QueryModule {
       (s, dir) => {
         val (t, rows) = topicMeta(s, dir)
         val ckpt = s"${Scratch.fresh("stream_dsv2_source")}/ckpt"
-        drive(s) {
+        Streaming.drive(s) {
           s.readStream.format("graft-log")
             .option("maxRecordsPerTrigger", triggerFor(rows))
             .load(t)
@@ -308,7 +301,7 @@ object DsV2 extends QueryModule {
         val (src, rows) = topicMeta(s, dir)
         val root = Scratch.fresh("stream_dsv2_mirror")
         val (dst, ckpt) = (s"$root/dst", s"$root/ckpt")
-        drive(s) {
+        Streaming.drive(s) {
           s.readStream.format("graft-log")
             .option("maxRecordsPerTrigger", triggerFor(rows))
             .load(src)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Q, QueryModule, Session, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,25 +42,15 @@ object Joins extends QueryModule {
       .orderBy("bucket")
   }
 
-  /** Run `body` with skew-join thresholds scaled to harness partition
-    * sizes (the defaults target real cluster shuffles), restoring the
-    * prior conf values after.
+  /** Skew-join thresholds scaled to harness partition sizes (the
+    * defaults target real cluster shuffles), for a `Session.withConf`
+    * scope around [[skewJoinFrame]].
     */
-  private[graft] def withSkewConfs[T](s: SparkSession)(body: => T): T = {
-    val confKeys = Map(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-        -> "16KB",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prior = confKeys.keys.map(k =>
-      k -> scala.util.Try(s.conf.get(k)).toOption).toMap
-    confKeys.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  private[graft] val skewConfs: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   def all: Seq[Q] = Seq(
     Q(
@@ -408,7 +398,7 @@ object Joins extends QueryModule {
       (s, dir) => {
         val sp2 = s
         import sp2.implicits._
-        withSkewConfs(s) {
+        Session.withConf(s, skewConfs: _*) {
           // Materialize NOW, inside the conf scope: the restored confs
           // must not leak into the lazily-executed plan.
           skewJoinFrame(s, dir).collect().toSeq
@@ -484,14 +474,10 @@ object Joins extends QueryModule {
     Q(
       "join_bloom_filtered",
       (s, dir) => {
-        val priors = Seq(
-          "spark.sql.autoBroadcastJoinThreshold",
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-          .map(k => k -> s.conf.getOption(k))
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-        try {
+        Session.withConf(s,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+            -> "0") {
           val o = Tables.orders(s, dir)
             .filter(col("o_orderpriority") === "1-URGENT")
             .select("o_orderkey", "o_totalprice")
@@ -506,9 +492,6 @@ object Joins extends QueryModule {
           // reuses it — without this the rule would see restored confs).
           df.queryExecution.executedPlan
           df
-        } finally priors.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
         }
       },
       oracle = Some("""

@@ -755,15 +755,9 @@ object Sources extends QueryModule {
         // The backfill: that day re-derived with corrected values (2x).
         val fixed = ev.filter(col("day") === backfillDay)
           .withColumn("value", col("value") * 2)
-        val key = "spark.sql.sources.partitionOverwriteMode"
-        val prior = scala.util.Try(s.conf.get(key)).toOption
-        s.conf.set(key, "dynamic")
-        // The write is eager, so restoring the conf after it is safe.
-        try fixed.write.mode("overwrite").partitionBy("day").parquet(sink)
-        finally prior match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
+        fixed.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("day").parquet(sink)
         s.read.parquet(sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),

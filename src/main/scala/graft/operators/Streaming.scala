@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import graft.{Q, QueryModule, Scratch, Tables, Warm}
+import graft.{Q, QueryModule, Scratch, Session, Tables, Warm}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -129,19 +129,7 @@ object Streaming extends QueryModule {
     */
   private[operators] def drive(s: SparkSession, finalFlush: Boolean = true,
       codegen: Boolean = false)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val key = "spark.sql.shuffle.partitions"
-    val mgrKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val wscgKey = "spark.sql.codegen.wholeStage"
-    val flushKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prior = s.conf.get(key)
-    val priorMgr = s.conf.getOption(mgrKey)
-    val priorWscg = s.conf.get(wscgKey)
-    val priorFlush = s.conf.get(flushKey)
-    s.conf.set(flushKey, finalFlush.toString)
-    s.conf.set(key, "4")
-    s.conf.set(mgrKey, "org.apache.spark.sql.execution.streaming." +
-      "checkpointing.FileSystemBasedCheckpointFileManager")
+      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
     // Whole-stage codegen RECOMPILES per micro-batch here: event-time
     // plans embed per-batch literals (the current watermark,
     // CurrentBatchTimestamp) inside codegen'd filters, so the generated-
@@ -150,31 +138,19 @@ object Streaming extends QueryModule {
     // counts. Interpreted mode is strictly faster until a batch is
     // ~millions of rows (StreamProfile r12: stream_watermark_agg
     // 1.86→1.19 s, stream_session_window 2.09→1.62 s warm). Production
-    // jobs with large batches amortize the compile and keep the default;
-    // this scope restores the conf on exit. GRAFT_STREAM_WSCG=true is a
-    // profiling hook to re-enable codegen for A/B runs — a round-12
-    // cold-run A/B over the five biggest-batch keys (33k-100k rows per
-    // batch) confirmed interpreted still wins or ties on first
-    // execution; codegen only looked better on warm KeyTime reps, where
-    // the generated-class cache hits because re-drives repeat identical
-    // watermark literals — a warmth the one-shot driver bench never has.
-    // Normalize rather than pass through: GRAFT_STREAM_WSCG=1 (the
-    // shell idiom) would otherwise reach Spark's boolean conf parser as
-    // the string "1" and throw far from the env var.
-    s.conf.set(wscgKey,
-      (codegen || sys.env.get("GRAFT_STREAM_WSCG").exists(v =>
-        v.equalsIgnoreCase("true") || v == "1")).toString)
-    try start.awaitTermination()
-    finally {
-      s.conf.set(key, prior)
-      s.conf.set(wscgKey, priorWscg)
-      s.conf.set(flushKey, priorFlush)
-      priorMgr match {
-        case Some(v) => s.conf.set(mgrKey, v)
-        case None => s.conf.unset(mgrKey)
-      }
-    }
-  }
+    // jobs with large batches amortize the compile and keep the default.
+    // The scope stays open until the query ends: the query takes its
+    // settings when it starts, and its offset log builds its checkpoint
+    // file manager from this session's conf, possibly after `start()`
+    // returns.
+    Session.withConf(s,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> finalFlush.toString,
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        ("org.apache.spark.sql.execution.streaming." +
+          "checkpointing.FileSystemBasedCheckpointFileManager"),
+      "spark.sql.codegen.wholeStage" -> codegen.toString)(
+      start.awaitTermination())
 
   private def cutSlices(s: SparkSession, dir: String, root: String): String = {
     val in = s"$root/in"
@@ -460,24 +436,20 @@ object Streaming extends QueryModule {
         val (in, ckpt) = slices(s, dir, "stream_upsert_idempotent")
         val root = Paths.get(ckpt).getParent.toString
         val sink = s"$root/sink"
-        val prior = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          def runOnce(ckptDir: String): Unit =
-            drive(s, codegen = true) { s.readStream.schema(Tables.events(s, dir).schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .writeStream
-              .foreachBatch { (batch: DataFrame, id: Long) =>
-                batch.withColumn("batch_id", lit(id))
-                  .write.mode("overwrite")
-                  .partitionBy("batch_id").parquet(sink)
-              }
-              .option("checkpointLocation", ckptDir)
-              .trigger(Trigger.AvailableNow()).start() }
-          runOnce(ckpt)
-          runOnce(s"$root/ckpt_replay") // full replay: same data, fresh offsets
-        } finally
-          s.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        def runOnce(ckptDir: String): Unit =
+          drive(s, codegen = true) { s.readStream.schema(Tables.events(s, dir).schema)
+            .option("maxFilesPerTrigger", 1).parquet(in)
+            .writeStream
+            .foreachBatch { (batch: DataFrame, id: Long) =>
+              batch.withColumn("batch_id", lit(id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id").parquet(sink)
+            }
+            .option("checkpointLocation", ckptDir)
+            .trigger(Trigger.AvailableNow()).start() }
+        runOnce(ckpt)
+        runOnce(s"$root/ckpt_replay") // full replay: same data, fresh offsets
         s.read.parquet(sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), countDistinct("user_id").as("n_users"))
@@ -982,12 +954,9 @@ object Streaming extends QueryModule {
         val (in, ckpt) = slices(s, dir, "stream_transform_with_state")
         val sp = s
         import sp.implicits._
-        val prior = s.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
         // transformWithState requires the RocksDB state store provider.
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        Session.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           val root = Paths.get(ckpt).getParent.toString
           val sink = s"$root/sink"
           drive(s) { s.readStream.schema(Tables.events(s, dir).schema)
@@ -1016,13 +985,6 @@ object Streaming extends QueryModule {
             .select(col("user_id"), col("n_events"),
               round(col("max_value"), 4).as("max_value"))
             .orderBy("user_id")
-        } finally {
-          prior match {
-            case Some(v) => s.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", v)
-            case None => s.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
         }
       },
       oracle = Some("""

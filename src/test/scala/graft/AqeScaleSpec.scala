@@ -37,16 +37,12 @@ class AqeScaleSpec extends AnyFunSuite with SparkFixture {
       "under near-default thresholds") {
     val s = spark
     import s.implicits._
-    val confs = Map(
+    Session.withConf(s,
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
         -> "32MB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prior = confs.keys.map(k =>
-      k -> scala.util.Try(s.conf.get(k)).toOption).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // 10M rows, 90% on one hot key, incompressible double payloads so
       // compressed shuffle block sizes stay honest (~170MB hot).
       val fact = s.range(0, 10000000L, 1, 16)
@@ -91,9 +87,6 @@ class AqeScaleSpec extends AnyFunSuite with SparkFixture {
       // Coalesce: the 7-group aggregate's tiny reduce partitions merge.
       assert(planStr.contains("coalesced"),
         s"AQE did not coalesce the aggregate's shuffle read:\n$planStr")
-    } finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 }

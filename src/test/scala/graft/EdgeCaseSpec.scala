@@ -268,12 +268,10 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
     val untouchedDay = maxDay - 18L
     val beforeUntouched = fileState(untouchedDay)
     val beforeBackfill = fileState(backfillDay)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    sp.conf.set(key, "dynamic")
-    try ev.filter(col("day") === backfillDay)
+    ev.filter(col("day") === backfillDay)
       .withColumn("value", col("value") * 2)
-      .write.mode("overwrite").partitionBy("day").parquet(sink)
-    finally sp.conf.unset(key)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(sink)
     assert(fileState(untouchedDay) == beforeUntouched,
       "untouched partition was rewritten")
     assert(fileState(backfillDay) != beforeBackfill,

@@ -52,6 +52,23 @@ class FixtureSanitySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("a failing fixture guard throws on every read, not just the first") {
+    // The guards are Warm entries; a build that throws leaves its cell
+    // empty, so a drifted fixture cannot pass on a second read.
+    val dir = java.nio.file.Files.createTempDirectory("fixture-guard").toString
+    Tables.region(spark, sf0001).drop("r_name")
+      .write.parquet(s"$dir/region.parquet")
+    Tables.events(spark, sf0001).limit(3)
+      .withColumn("ts", timestamp_micros(expr("unix_micros(ts) div 1000")))
+      .write.parquet(s"$dir/events.parquet")
+    (1 to 2).foreach { _ =>
+      val cols = intercept[IllegalArgumentException](Tables.region(spark, dir))
+      assert(cols.getMessage.contains("r_name"))
+      val ts = intercept[IllegalArgumentException](Tables.events(spark, dir))
+      assert(ts.getMessage.contains("plausible event horizon"))
+    }
+  }
+
   test("a footer missing a pinned column is rejected, not NULL-padded") {
     val ex = intercept[IllegalArgumentException] {
       Tables.assertPinnedColumnsPresent(

@@ -163,4 +163,39 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(ok.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(0L -> 0L, top -> top))
   }
+
+  test("neighborJaccard: a hub above maxNeighbors keeps its md5-first " +
+    "neighbors, matching a brute force") {
+    val sp = spark
+    import sp.implicits._
+    // hub 0 (degree 8) and node 9 (degree 6) sit above the cap of 3;
+    // node 10 (degree 2) sits below it
+    val pairs = (1L to 8L).map(0L -> _) ++ (1L to 6L).map(9L -> _) ++
+      Seq(10L -> 1L, 10L -> 2L)
+    val g = graft.api.Graph.undirected(pairs.toDF("s", "d"), col("s"), col("d"))
+    def kernel(cap: Int): Set[(Long, Long, Long, Double)] =
+      graft.api.Graph.neighborJaccard(g, minCommon = 1, maxNeighbors = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          math.rint(r.getDouble(3) * 1e9) / 1e9)).toSet
+    // Each node's list capped to its first `cap` neighbors in
+    // (md5("n_m"), m) order; common = shared entries of the two capped
+    // lists, jaccard over the capped degrees.
+    def brute(cap: Int): Set[(Long, Long, Long, Double)] = {
+      def md5(x: String) = java.security.MessageDigest.getInstance("MD5")
+        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val adj = (pairs ++ pairs.map(_.swap)).groupBy(_._1).map {
+        case (n, ms) => n -> ms.map(_._2).distinct
+          .sortBy(m => (md5(s"${n}_$m"), m)).take(cap).toSet
+      }
+      (for {
+        (u, a) <- adj; (v, b) <- adj if u < v
+        c = (a intersect b).size.toLong if c >= 1
+      } yield (u, v, c,
+        math.rint(c.toDouble / (a.size + b.size - c) * 1e9) / 1e9)).toSet
+    }
+    val capped = kernel(3)
+    assert(capped == brute(3))
+    assert(kernel(Int.MaxValue) == brute(Int.MaxValue))
+    assert(capped != kernel(Int.MaxValue), "the cap never bound")
+  }
 }

@@ -355,7 +355,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // merge join as skew-handled (the hot partition split across tasks).
     // Same scenario and conf scope as the op itself (shared helpers in
     // operators.Joins), so this assertion exercises the shipped plan.
-    graft.operators.Joins.withSkewConfs(spark) {
+    Session.withConf(spark, graft.operators.Joins.skewConfs: _*) {
       val joined = graft.operators.Joins.skewJoinFrame(spark, sf001)
       joined.collect()
       val p = joined.queryExecution.executedPlan.toString
@@ -516,12 +516,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // Each key sorts in one task at sf0.001 (cases above); shrinking its
     // own bound below the estimate brings the range exchange back, and
     // shrinking the other bound does not.
-    def rangeSorted(key: String, conf: String): Boolean = {
-      val prior = spark.conf.getOption(conf)
-      spark.conf.set(conf, "1")
-      try plan(key).toLowerCase.contains("rangepartitioning")
-      finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
-    }
+    def rangeSorted(key: String, conf: String): Boolean =
+      Session.withConf(spark, conf -> "1") {
+        plan(key).toLowerCase.contains("rangepartitioning")
+      }
     val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val openCost = "spark.sql.files.openCostInBytes"
     assert(rangeSorted("agg_group", advisory))

@@ -14,13 +14,9 @@ class SpjPlanSpec extends AnyFunSuite with SparkFixture {
 
   test("join_spj_dsv2: co-located SMJ, zero hash exchanges (broadcast off)") {
     val s = spark
-    val prevB = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = scala.util.Try(
-      s.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold"))
-      .toOption.flatMap(Option(_))
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
+    Session.withConf(s,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val df = SparkEntry.queries("join_spj_dsv2")(s, sf0001)
       df.collect() // force the AQE final plan
       val p = df.queryExecution.executedPlan.toString
@@ -29,14 +25,6 @@ class SpjPlanSpec extends AnyFunSuite with SparkFixture {
       assert(p.contains("SortMergeJoin"),
         s"expected a co-located sort-merge join:\n$p")
       assert(p.contains("BatchScan"), p)
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      prevA match {
-        case Some(v) =>
-          s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None =>
-          s.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
     }
   }
 

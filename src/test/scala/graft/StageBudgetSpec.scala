@@ -12,13 +12,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * 2.6 s at sf0.1 once materialized — api.Graph.pageRank scaladoc), so
   * the guard counts what the scheduler actually ran.
   *
-  * Budgets are generous upper bounds, set at ≈1.35× the counts measured
-  * at sf0.001 (where the round structure is identical to any scale) when
-  * each key got its budget: a quadratic re-execution roughly
-  * doubles-to-triples the stage count for these round counts, so the
-  * bound trips on the bug class while ambient retry/AQE jitter stays far
-  * below it. Today's counts (noted per key) sit lower; the test names
-  * carry the budgets, so they stay as set.
+  * Budgets sit at ≈1.35× (rounded up) the counts this spec's info lines
+  * print at sf0.001 (where the round structure is identical to any
+  * scale): a quadratic re-execution roughly doubles-to-triples the
+  * stage count for these round counts, so the bound trips on the bug
+  * class while ambient retry/AQE jitter stays below it. Every key here
+  * but ml_kmeans runs its rounds inside a `quietRounds` scope (AQE off),
+  * so a scope that leaves AQE on shows up here as extra jobs (r14:
+  * ml_dbscan_grid ran 208 jobs that way). The test names carry the budgets; a budget
+  * only moves down, with its old and new value in CHANGES.md.
   *
   * Every key is counted with the graph catalog warm
   * (`Pipeline.warmGraph`), the state Bench times keys in, so no count
@@ -45,16 +47,16 @@ class StageBudgetSpec extends AnyFunSuite with SparkFixture {
   // skip, so jobs == stages only when each job runs a single stage
   // (ml_kmeans).
   private val budgets: Seq[(String, Int, Int)] = Seq(
-    ("graph_pagerank", 48, 48), // measured 20/31 (5 rounds + AQE)
-    ("graph_bfs", 55, 55), // measured 18/31 (frontier + exit probes)
-    ("graph_sssp", 42, 42), // measured 17/24 (maxHops relaxations)
-    ("dedup_connected_components", 98, 98), // measured 22/48
+    ("graph_pagerank", 27, 42), // measured 20/31 (5 rounds + AQE)
+    ("graph_bfs", 25, 42), // measured 18/31 (frontier + exit probes)
+    ("graph_sssp", 23, 33), // measured 17/24 (maxHops relaxations)
+    ("dedup_connected_components", 30, 65), // measured 22/48
     ("ml_kmeans", 29, 29), // measured 21/21 (5 Lloyd rounds)
-    ("graph_label_propagation", 19, 19), // measured 5/12 (sizing
+    ("graph_label_propagation", 7, 17), // measured 5/12 (sizing
     // aggregate, one single-job 3-round fixpoint — the
     // no-per-round-checkpoint signature — and the community census; a
     // jump toward ~40 means rounds re-materialized)
-    ("graph_kcore", 53, 53) // measured 16/28 (4 × (deg + edge
+    ("graph_kcore", 22, 38) // measured 16/28 (4 × (deg + edge
     // checkpoint) + final census union)
   )
 
