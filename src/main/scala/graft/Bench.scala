@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -15,7 +17,7 @@ object Bench {
   private[graft] def runSteps(steps: Seq[(String, () => Any)]): Seq[String] =
     steps.flatMap { case (name, body) =>
       try { body(); None }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] warmup step $name failed: $e")
         Some(name)
       }
@@ -261,11 +263,14 @@ object Bench {
       val tf = System.nanoTime()
       val tag =
         try planClass(frame.queryExecution.executedPlan)
-        catch { case _: Throwable => "unplannable" }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name plan class failed: $e")
+          "unplannable"
+        }
       Attempt((tc - t0) / 1e9, ((tb - t0) + (tf - tc)) / 1e9,
         (cpuNow() - c0) / 1e9, n, tag, (cc - c0) / 1e9)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: $e")
         val c = (cpuNow() - c0) / 1e9
         Attempt((System.nanoTime() - t0) / 1e9, 0.0, c, -1L, "error", c)
@@ -338,7 +343,7 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL_LAST.jsonl"),
       lines.mkString("", "\n", "\n"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] BENCH_LOCAL_LAST.jsonl not written: $e") }
     spark.stop()
   }

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -122,7 +123,7 @@ object Probe {
         }
         out(s"census $key jobs=$jobs stages=$stages " +
           s"plan=${Bench.planClass(frame.queryExecution.executedPlan)}")
-      } catch { case e: Throwable => out(s"census $key failed: $e") }
+      } catch { case NonFatal(e) => out(s"census $key failed: $e") }
     }
 
   def time(spark: SparkSession, keys: Seq[String], sfDir: String,

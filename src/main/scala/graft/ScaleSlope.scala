@@ -412,16 +412,7 @@ object ScaleSlope {
     // Artifact rows from the vocab-scaling corpus get their own key
     // label: same operator, different (production-regime) workload.
     val labelSuffix = if (vocabScale) "_vocabscale" else ""
-    // A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" applies session confs
-    // before measurement — e.g. the RocksDB state-store provider for the
-    // streaming 100× runs, where state rows reach the millions the
-    // HDFS-backed store is documented NOT to be for (BASELINE.md).
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        k.trim -> v.trim
-      }
-    val spark = Session.local(extraConf: _*)
+    val spark = Session.local()
     // Max state-store rows seen across a key's runs at one scale — the
     // number that certifies "state is keyed by users/windows, not raw
     // events" when the 10×/1× state ratio tracks key cardinality.

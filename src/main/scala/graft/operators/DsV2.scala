@@ -3,7 +3,6 @@ package graft.operators
 import graft.{Q, QueryModule, Scratch, Tables, Warm}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** §2.A — the `graft-log` DataSource V2 surface (graft.sources.GraftLog):
   * the engine's Kafka-shaped ingestion front door, exercised end-to-end
@@ -225,20 +224,17 @@ object DsV2 extends QueryModule {
       "stream_dsv2_source",
       (s, dir) => {
         val (t, rows) = topicMeta(s, dir)
-        val ckpt = s"${Scratch.fresh("stream_dsv2_source")}/ckpt"
-        Streaming.drive(s) {
-          s.readStream.format("graft-log")
-            .option("maxRecordsPerTrigger", triggerFor(rows))
-            .load(t)
-            .groupBy("partition")
-            // no countDistinct in streaming agg — the XOR digest already
-            // certifies the exact (offset, key) multiset per partition
-            .agg(count(lit(1)).as("n"), max("offset").as("max_off"),
-              bit_xor(recHash(col("offset"), col("key"))).as("xor_digest"))
-            .writeStream.outputMode("complete").format("memory")
-            .queryName("graft_dsv2_stream").option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        }
+        Streaming.drive(s.readStream.format("graft-log")
+          .option("maxRecordsPerTrigger", triggerFor(rows))
+          .load(t)
+          .groupBy("partition")
+          // no countDistinct in streaming agg — the XOR digest already
+          // certifies the exact (offset, key) multiset per partition
+          .agg(count(lit(1)).as("n"), max("offset").as("max_off"),
+            bit_xor(recHash(col("offset"), col("key"))).as("xor_digest")),
+          s"${Scratch.fresh("stream_dsv2_source")}/ckpt")(
+          _.outputMode("complete").format("memory")
+            .queryName("graft_dsv2_stream"))
         s.table("graft_dsv2_stream").orderBy("partition")
       },
       oracle = Some("""
@@ -300,16 +296,12 @@ object DsV2 extends QueryModule {
       (s, dir) => {
         val (src, rows) = topicMeta(s, dir)
         val root = Scratch.fresh("stream_dsv2_mirror")
-        val (dst, ckpt) = (s"$root/dst", s"$root/ckpt")
-        Streaming.drive(s) {
-          s.readStream.format("graft-log")
-            .option("maxRecordsPerTrigger", triggerFor(rows))
-            .load(src)
-            .select("partition", "key", "value", "ts")
-            .writeStream.format("graft-log")
-            .option("path", dst).option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        }
+        val dst = s"$root/dst"
+        Streaming.drive(s.readStream.format("graft-log")
+          .option("maxRecordsPerTrigger", triggerFor(rows))
+          .load(src)
+          .select("partition", "key", "value", "ts"), s"$root/ckpt")(
+          _.format("graft-log").option("path", dst))
         s.read.format("graft-log").load(dst)
           .groupBy("partition")
           .agg(count(lit(1)).as("n"), max("offset").as("max_off"),

@@ -1,12 +1,20 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+
+import scala.util.Using
 
 import graft.{Q, QueryModule, Scratch, Session, Tables, Warm}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate,
+  DeduplicateWithinWatermark, Distinct, EventTimeWatermark,
+  FlatMapGroupsWithState, Join, LogicalPlan, TransformWithState}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
+  Trigger, TTLConfig, ValueState}
 
 /** Spark 4 transformWithState processor: per-user event count + max value,
   * held in a typed ValueState (RocksDB-backed). Monotone state ⇒ the final
@@ -51,10 +59,6 @@ class UserStatsProcessor
   */
 object Streaming extends QueryModule {
 
-  /** events.ts already normalized to µs by Tables.events. */
-  private val eventCols =
-    Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-
   /** Pre-cut the shared slice input for a scale dir (idempotent). Bench
     * calls this in warmup so the first streaming query's time measures the
     * stream, not the one-time slice materialization.
@@ -70,27 +74,128 @@ object Streaming extends QueryModule {
   private def slicesIn(s: SparkSession, dir: String): String =
     Warm.disk("stream_slices", dir)(cutSlices(s, dir, _))
 
-  /** The shared slice input and a fresh per-query checkpoint dir.
-    * Returns (inputDir, checkpointDir).
+  /** The shared slices as a stream of one file per micro-batch, and a
+    * fresh scratch root for the key's checkpoint and sinks.
     */
-  private def slices(s: SparkSession, dir: String, key: String): (String, String) = {
-    val ckpt = s"${Scratch.fresh(key)}/ckpt"
-    (slicesIn(s, dir), ckpt)
+  private def sliceStream(s: SparkSession, dir: String,
+      key: String): (DataFrame, String) = {
+    val root = Scratch.fresh(key)
+    (fileStream(s, dir, slicesIn(s, dir)), root)
   }
 
-  /** Start a streaming query and drive it to completion with shuffle
-    * partitions and checkpoint I/O sized for the harness, restoring the
-    * prior settings after.
+  /** The event files in `in` as a stream that takes one file per
+    * micro-batch, in mtime order.
+    */
+  private def fileStream(s: SparkSession, dir: String, in: String): DataFrame =
+    s.readStream.schema(Tables.events(s, dir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(in)
+
+  /** The three time-ordered cuts of `events`: before day 11, days 11-20,
+    * from day 21.
+    */
+  private val cuts: Seq[Column] = {
+    val day11 = lit("2024-01-11").cast("timestamp")
+    val day21 = lit("2024-01-21").cast("timestamp")
+    Seq(col("ts") < day11, col("ts") >= day11 && col("ts") < day21,
+      col("ts") >= day21)
+  }
+
+  private def cutSlices(s: SparkSession, dir: String, root: String): String = {
+    val ev = Tables.events(s, dir)
+    cuts.zipWithIndex.foreach { case (pred, i) =>
+      writeSlice(ev.filter(pred), root, s"slice$i", i)
+    }
+    s"$root/in"
+  }
+
+  /** Writes `rows` as one parquet file and lands it as slice `name` of
+    * `root` (see [[landSlice]]).
+    */
+  private def writeSlice(rows: DataFrame, root: String, name: String,
+      slot: Int): Unit = {
+    val tmp = s"$root/tmp_$name"
+    rows.coalesce(1).write.mode("overwrite").parquet(tmp)
+    landSlice(Using.resource(Files.list(Paths.get(tmp)))(
+      _.filter(_.toString.endsWith(".parquet")).findFirst().get()),
+      root, name, slot)
+  }
+
+  /** Copies `file` to `<root>/in/<name>.parquet` with the mtime of arrival
+    * `slot`. The file source orders arrivals by modification time, so
+    * distinct, increasing mtimes make the micro-batch order deterministic.
+    */
+  private def landSlice(file: Path, root: String, name: String,
+      slot: Int): Unit = {
+    val dst = Paths.get(root, "in", s"$name.parquet")
+    Files.createDirectories(dst.getParent)
+    Files.copy(file, dst)
+    Files.setLastModifiedTime(dst,
+      FileTime.fromMillis(1700000000000L + slot * 60000L))
+  }
+
+  /** The settings `drive` reads off a streaming query's analyzed plan. A
+    * query fixes its settings when it starts, and every stateful operator
+    * it will run is a node of that plan.
     *
-    * Stateful operators fix their state-partition count from
-    * spark.sql.shuffle.partitions at the first checkpoint, and every state
-    * partition costs checkpoint files per micro-batch — so the right count
-    * is min(cores, what the key cardinality supports), not the batch
-    * default. Measured at sf0.1: 32 partitions ≈ 3× slower than 8 for the
-    * stream-stream join; 4 (= harness cores) beats 8 again (5.3 s vs
-    * 7.0 s) by halving per-batch checkpoint files with zero parallelism
-    * loss; 2 is WORSE than 4 (parallelism loss overtakes the file
-    * savings). On a real cluster this scales with executor count.
+    * Whole-stage codegen is on unless the plan holds an event-time
+    * watermark or group state (`EventTimeWatermark`,
+    * `FlatMapGroupsWithState`, `TransformWithState`). Those plans embed
+    * per-batch literals (the current watermark, CurrentBatchTimestamp) in
+    * generated code, so the class cache misses every batch and janino
+    * pays ~100-300 ms a batch, more than a fixture batch's data work
+    * (interpreted, r12: stream_watermark_agg 1.86 → 1.19 s,
+    * stream_session_window 2.09 → 1.62 s). Any other plan generates the
+    * same code every batch, the cache hits from batch 1, and codegen wins
+    * (r13: the 100k-rows/batch foreachBatch gate 2.1 → 1.5 s, the
+    * stateless enrich join 1.1 → 0.9 s). Production jobs with large
+    * batches amortize the compile and keep the default.
+    *
+    * The trailing no-data micro-batch is skipped only when the plan has a
+    * watermark and every stateful node emits its rows on arrival
+    * (`Deduplicate`, `DeduplicateWithinWatermark`, an inner join of two
+    * streams): there that batch only evicts state. Watermark aggregates,
+    * session windows, group state and outer stream-stream joins emit in
+    * it (closed windows, null-padded rows), so they keep it.
+    *
+    * `TransformWithState` needs the RocksDB state store provider.
+    */
+  private[graft] def settingsFor(plan: LogicalPlan): Seq[(String, String)] = {
+    val watermark = plan.exists(_.isInstanceOf[EventTimeWatermark])
+    val tws = plan.exists(_.isInstanceOf[TransformWithState])
+    val groupState = tws || plan.exists(_.isInstanceOf[FlatMapGroupsWithState])
+    // One entry per stateful node: does it emit its rows on arrival?
+    val emitsOnArrival = plan.collect {
+      case n @ (_: Deduplicate | _: DeduplicateWithinWatermark)
+          if n.isStreaming => true
+      case j: Join if j.left.isStreaming && j.right.isStreaming =>
+        j.joinType == Inner
+      case a @ (_: Aggregate | _: Distinct) if a.isStreaming => false
+      case _: FlatMapGroupsWithState | _: TransformWithState => false
+    }
+    val noDataBatch = !(watermark && emitsOnArrival.nonEmpty &&
+      emitsOnArrival.forall(identity))
+    Seq("spark.sql.codegen.wholeStage" -> (!watermark && !groupState).toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString) ++
+      (if (tws) Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+       else Nil)
+  }
+
+  /** Runs the streaming query `q` to completion: `sink` picks the output,
+    * and this sets the checkpoint dir `ckpt`, `Trigger.AvailableNow`, and
+    * the session settings of [[settingsFor]] plus two for the harness,
+    * all restored after.
+    *
+    * Shuffle partitions are 4. Stateful operators fix their
+    * state-partition count from spark.sql.shuffle.partitions at the first
+    * checkpoint, and every state partition costs checkpoint files per
+    * micro-batch, so the right count is min(cores, what the key
+    * cardinality supports), not the batch default. Measured at sf0.1: 32
+    * partitions ≈ 3× slower than 8 for the stream-stream join; 4 (=
+    * harness cores) beats 8 again (5.3 s vs 7.0 s) by halving per-batch
+    * checkpoint files with zero parallelism loss; 2 is WORSE than 4
+    * (parallelism loss overtakes the file savings). On a real cluster
+    * this scales with executor count.
     *
     * Checkpoint file manager: the default FileContext-based manager
     * costs ~45 ms per offset/commit-log write on LOCAL filesystems
@@ -104,77 +209,23 @@ object Streaming extends QueryModule {
     * harness JVM is BY CONSTRUCTION; production deployments on HDFS/S3
     * keep Spark's default manager (this scope never touches cluster
     * conf — it restores on exit).
+    *
+    * The scope stays open until the query ends: the query takes its
+    * settings when it starts, and its offset log builds its checkpoint
+    * file manager from this session's conf, possibly after `start()`
+    * returns.
     */
-  /** `finalFlush = false` skips the trailing no-data micro-batch
-    * (spark.sql.streaming.noDataMicroBatches.enabled=false for the
-    * query's lifetime). ONLY valid for queries whose OUTPUT does not
-    * depend on the watermark-driven flush: emit-on-arrival shapes
-    * (dropDuplicates*, inner stream-stream joins) where the no-data
-    * batch performs state EVICTION but emits nothing. Append-mode
-    * watermark aggregations, session windows, and OUTER stream-stream
-    * joins (the flush emits closed windows / null-padded rows) MUST
-    * keep the default. The DuckDB oracle is the gate either way.
-    */
-  /** `codegen = true` re-enables whole-stage codegen for THIS query.
-    * ONLY valid for plans with no event-time state: the interpreted-mode
-    * default exists because watermark plans embed per-batch literals
-    * (current watermark, CurrentBatchTimestamp) in generated code, so
-    * the class cache misses every batch and janino recompiles — but a
-    * watermark-FREE plan generates IDENTICAL code every batch, the cache
-    * hits from batch 1, and codegen'd addBatch wins outright (measured
-    * r13 on the 100k-rows/batch foreachBatch gate: 2.1 → 1.5 s; the
-    * stateless enrich join 1.1 → 0.9 s). Rule of thumb: withWatermark
-    * or *GroupsWithState/transformWithState anywhere in the plan ⇒ keep
-    * the default; pure source→transform→sink ⇒ turn it on.
-    */
-  private[operators] def drive(s: SparkSession, finalFlush: Boolean = true,
-      codegen: Boolean = false)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    // Whole-stage codegen RECOMPILES per micro-batch here: event-time
-    // plans embed per-batch literals (the current watermark,
-    // CurrentBatchTimestamp) inside codegen'd filters, so the generated-
-    // class cache misses every batch and janino pays ~100-300 ms per
-    // batch — more than the batch's entire data work at micro-batch row
-    // counts. Interpreted mode is strictly faster until a batch is
-    // ~millions of rows (StreamProfile r12: stream_watermark_agg
-    // 1.86→1.19 s, stream_session_window 2.09→1.62 s warm). Production
-    // jobs with large batches amortize the compile and keep the default.
-    // The scope stays open until the query ends: the query takes its
-    // settings when it starts, and its offset log builds its checkpoint
-    // file manager from this session's conf, possibly after `start()`
-    // returns.
-    Session.withConf(s,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> finalFlush.toString,
+  private[operators] def drive[T](q: Dataset[T], ckpt: String)(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): Unit =
+    Session.withConf(q.sparkSession, Seq(
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.streaming.checkpointFileManagerClass" ->
         ("org.apache.spark.sql.execution.streaming." +
-          "checkpointing.FileSystemBasedCheckpointFileManager"),
-      "spark.sql.codegen.wholeStage" -> codegen.toString)(
-      start.awaitTermination())
-
-  private def cutSlices(s: SparkSession, dir: String, root: String): String = {
-    val in = s"$root/in"
-    Files.createDirectories(Paths.get(in))
-    val ev = Tables.events(s, dir)
-    val cuts = Seq(
-      ("slice0", col("ts") < lit("2024-01-11").cast("timestamp")),
-      ("slice1", col("ts") >= lit("2024-01-11").cast("timestamp") &&
-        col("ts") < lit("2024-01-21").cast("timestamp")),
-      ("slice2", col("ts") >= lit("2024-01-21").cast("timestamp")))
-    cuts.zipWithIndex.foreach { case ((name, pred), i) =>
-      val tmp = s"$root/tmp_$name"
-      ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = scala.util.Using.resource(Files.list(Paths.get(tmp)))(
-        _.filter(_.toString.endsWith(".parquet")).findFirst().get())
-      val dst = Paths.get(in, s"$name.parquet")
-      Files.copy(part, dst)
-      // The file source orders arrivals by modification time; pin distinct,
-      // increasing mtimes so micro-batch order is deterministic.
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+          "checkpointing.FileSystemBasedCheckpointFileManager")) ++
+      settingsFor(q.queryExecution.analyzed): _*) {
+      sink(q.writeStream).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
-    in
-  }
 
   def all: Seq[Q] = Seq(
     // 1-hour tumbling window aggregate (batch mode of the same expression).
@@ -253,14 +304,11 @@ object Streaming extends QueryModule {
     Q(
       "stream_file_source",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_file_source")
-        drive(s, codegen = true) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName("graft_sfs").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+        val (ev, root) = sliceStream(s, dir, "stream_file_source")
+        drive(ev.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value")),
+          s"$root/ckpt")(
+          _.outputMode("complete").format("memory").queryName("graft_sfs"))
         s.table("graft_sfs").orderBy("event_type")
       },
       oracle = Some("""
@@ -273,17 +321,12 @@ object Streaming extends QueryModule {
     Q(
       "stream_sink_foreachbatch",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_sink_foreachbatch")
-        val root = Paths.get(ckpt).getParent.toString
+        val (ev, root) = sliceStream(s, dir, "stream_sink_foreachbatch")
         val sink = s"$root/sink"
-        drive(s, codegen = true) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+        drive(ev, s"$root/ckpt")(_.foreachBatch {
+          (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(sink)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+        })
         s.read.parquet(sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
@@ -312,8 +355,7 @@ object Streaming extends QueryModule {
     Q(
       "stream_quality_gate",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_quality_gate")
-        val root = Paths.get(ckpt).getParent.toString
+        val (ev, root) = sliceStream(s, dir, "stream_quality_gate")
         val audit = s"$root/audit"
         val good = s"$root/good"
         val quarantine = s"$root/quarantine"
@@ -321,10 +363,8 @@ object Streaming extends QueryModule {
           "type_not_error" -> (col("event_type") =!= "error"),
           "user_present" -> col("user_id").isNotNull,
           "value_max_100" -> (col("value") <= lit(100.0)))
-        drive(s, codegen = true) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
+        drive(ev, s"$root/ckpt")(_.foreachBatch {
+          (batch: DataFrame, bid: Long) =>
             graft.api.Quality.expectations(batch, rules)
               .withColumn("batch_id", lit(bid))
               .write.mode("append").parquet(audit)
@@ -332,9 +372,7 @@ object Streaming extends QueryModule {
               .write.mode("append").parquet(good)
             batch.filter(col("event_type") === "error")
               .write.mode("append").parquet(quarantine)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+        })
         s.read.parquet(audit)
           .groupBy("rule")
           .agg(
@@ -377,34 +415,21 @@ object Streaming extends QueryModule {
       "stream_late_drop",
       (s, dir) => {
         val root = Scratch.fresh("stream_late_drop")
-        val in = s"$root/in"
-        Files.createDirectories(Paths.get(in))
         val ev = Tables.events(s, dir)
-        def writeSlice(name: String,
-            pred: org.apache.spark.sql.Column): Unit = {
-          val tmp = s"$root/tmp_$name"
-          ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = scala.util.Using.resource(Files.list(Paths.get(tmp)))(
-            _.filter(_.toString.endsWith(".parquet")).findFirst().get())
-          Files.copy(part, Paths.get(in, s"$name.parquet"))
-        }
-        val ckpt = s"$root/ckpt"; val sink = s"$root/sink"
+        val sink = s"$root/sink"
+        // No file limit: each run takes every file present in one batch.
         def runOnce(): Unit =
-          drive(s) { s.readStream.schema(ev.schema).parquet(in)
+          drive(s.readStream.schema(ev.schema).parquet(s"$root/in")
             .withWatermark("ts", "24 hours")
             .groupBy(window(col("ts"), "1 day").as("w"))
             .agg(count(lit(1)).as("n"))
             .select(col("w.start").cast("timestamp_ntz").as("day_start"),
-              col("n"))
-            .writeStream.format("parquet").option("path", sink)
-            .option("checkpointLocation", ckpt).outputMode("append")
-            .trigger(Trigger.AvailableNow()).start() }
-        writeSlice("a_early", col("ts") < lit("2024-01-11").cast("timestamp"))
-        writeSlice("b_jump", col("ts") >= lit("2024-01-21").cast("timestamp"))
+              col("n")), s"$root/ckpt")(
+            _.format("parquet").option("path", sink).outputMode("append"))
+        writeSlice(ev.filter(cuts(0)), root, "a_early", 0)
+        writeSlice(ev.filter(cuts(2)), root, "b_jump", 1)
         runOnce()
-        writeSlice("c_late",
-          col("ts") >= lit("2024-01-11").cast("timestamp") &&
-            col("ts") < lit("2024-01-21").cast("timestamp"))
+        writeSlice(ev.filter(cuts(1)), root, "c_late", 2)
         runOnce()
         s.read.parquet(sink).orderBy("day_start")
       },
@@ -433,22 +458,16 @@ object Streaming extends QueryModule {
     Q(
       "stream_upsert_idempotent",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_upsert_idempotent")
-        val root = Paths.get(ckpt).getParent.toString
+        val (ev, root) = sliceStream(s, dir, "stream_upsert_idempotent")
         val sink = s"$root/sink"
-        def runOnce(ckptDir: String): Unit =
-          drive(s, codegen = true) { s.readStream.schema(Tables.events(s, dir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              batch.withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(sink)
-            }
-            .option("checkpointLocation", ckptDir)
-            .trigger(Trigger.AvailableNow()).start() }
-        runOnce(ckpt)
+        def runOnce(ckpt: String): Unit =
+          drive(ev, ckpt)(_.foreachBatch { (batch: DataFrame, id: Long) =>
+            batch.withColumn("batch_id", lit(id))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("batch_id").parquet(sink)
+          })
+        runOnce(s"$root/ckpt")
         runOnce(s"$root/ckpt_replay") // full replay: same data, fresh offsets
         s.read.parquet(sink)
           .groupBy("event_type")
@@ -470,16 +489,10 @@ object Streaming extends QueryModule {
     Q(
       "stream_sink_partitioned",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_sink_partitioned")
-        val root = Paths.get(ckpt).getParent.toString
+        val (ev, root) = sliceStream(s, dir, "stream_sink_partitioned")
         val sink = s"$root/sink"
-        drive(s, codegen = true) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .writeStream.format("parquet")
-          .partitionBy("event_type")
-          .option("path", sink)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+        drive(ev, s"$root/ckpt")(_.format("parquet")
+          .partitionBy("event_type").option("path", sink))
         s.read.parquet(sink)
           .filter(col("event_type").isin("click", "purchase"))
           .groupBy("event_type")
@@ -503,17 +516,15 @@ object Streaming extends QueryModule {
     Q(
       "stream_rate_source",
       (s, dir) => {
-        val ckpt = s"${Scratch.fresh("stream_rate_source")}/ckpt"
-        drive(s, codegen = true) { s.readStream.format("rate-micro-batch")
+        drive(s.readStream.format("rate-micro-batch")
           .option("rowsPerBatch", 2500)
           .option("numPartitions", 4)
           .option("startTimestamp", 1700000000000L)
           .load()
           .groupBy((col("value") % 10).as("bucket"))
-          .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName("graft_srs").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+          .agg(count(lit(1)).as("n"), sum("value").as("sum_value")),
+          s"${Scratch.fresh("stream_rate_source")}/ckpt")(
+          _.outputMode("complete").format("memory").queryName("graft_srs"))
         s.table("graft_srs").orderBy("bucket")
       },
       oracle = Some("""
@@ -531,32 +542,22 @@ object Streaming extends QueryModule {
     Q(
       "stream_checkpoint_recovery",
       (s, dir) => {
-        val (sharedIn, ckpt) = slices(s, dir, "stream_checkpoint_recovery")
-        val root = Paths.get(ckpt).getParent.toString
-        val in = s"$root/in"
+        val root = Scratch.fresh("stream_checkpoint_recovery")
+        val shared = slicesIn(s, dir)
         val sink = s"$root/sink"
-        Files.createDirectories(Paths.get(in))
-        val sliceFiles = scala.util.Using.resource(
-            Files.list(Paths.get(sharedIn)))(_.sorted().toArray)
-          .map(_.asInstanceOf[java.nio.file.Path])
-        def run(): Unit = drive(s, codegen = true) {
-          s.readStream.schema(Tables.events(s, dir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
+        def land(i: Int): Unit =
+          landSlice(Paths.get(shared, s"slice$i.parquet"), root, s"slice$i", i)
+        def run(): Unit =
+          drive(fileStream(s, dir, s"$root/in"), s"$root/ckpt")(_.foreachBatch {
+            (batch: DataFrame, _: Long) =>
               batch.write.mode("append").parquet(sink)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        }
+          })
         // Phase 1: two slices land, query runs to completion and stops.
-        sliceFiles.take(2).foreach(f =>
-          Files.copy(f, Paths.get(in, f.getFileName.toString)))
+        land(0); land(1)
         run()
         // Phase 2: a third slice lands; a NEW query instance resumes from
         // the same checkpoint and processes only the unseen file.
-        sliceFiles.drop(2).foreach(f =>
-          Files.copy(f, Paths.get(in, f.getFileName.toString)))
+        land(2)
         run()
         s.read.parquet(sink)
           .groupBy("event_type")
@@ -577,15 +578,12 @@ object Streaming extends QueryModule {
     Q(
       "stream_watermark_agg",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_watermark_agg")
-        drive(s) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .withWatermark("ts", "10 minutes")
+        val (ev, root) = sliceStream(s, dir, "stream_watermark_agg")
+        drive(ev.withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName("graft_swa").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+          .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value")),
+          s"$root/ckpt")(
+          _.outputMode("append").format("memory").queryName("graft_swa"))
         s.table("graft_swa")
           .select(col("w.start").cast("timestamp_ntz").as("window_start"),
             col("event_type"), col("n"), col("sum_value"))
@@ -615,16 +613,13 @@ object Streaming extends QueryModule {
     Q(
       "stream_sliding_agg",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_sliding_agg")
-        drive(s) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .withWatermark("ts", "10 minutes")
+        val (ev, root) = sliceStream(s, dir, "stream_sliding_agg")
+        drive(ev.withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"),
             col("event_type"))
-          .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName("graft_ssl").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+          .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value")),
+          s"$root/ckpt")(
+          _.outputMode("append").format("memory").queryName("graft_ssl"))
         s.table("graft_ssl")
           .select(col("w.start").cast("timestamp_ntz").as("window_start"),
             col("event_type"), col("n"), col("sum_value"))
@@ -660,17 +655,13 @@ object Streaming extends QueryModule {
     Q(
       "stream_session_window",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_session_window")
-        drive(s) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .withWatermark("ts", "10 minutes")
+        val (ev, root) = sliceStream(s, dir, "stream_session_window")
+        drive(ev.withWatermark("ts", "10 minutes")
           .groupBy(session_window(col("ts"), "30 minutes").as("sw"),
             col("user_id"))
           .agg(count(lit(1)).as("n_events"),
-            round(sum("value"), 4).as("sum_value"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName("graft_ssw").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+            round(sum("value"), 4).as("sum_value")), s"$root/ckpt")(
+          _.outputMode("append").format("memory").queryName("graft_ssw"))
         s.table("graft_ssw")
           .select(col("user_id"),
             col("sw.start").cast("timestamp_ntz").as("session_start"),
@@ -720,16 +711,12 @@ object Streaming extends QueryModule {
     Q(
       "stream_hll_distinct",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_hll_distinct")
-        drive(s) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .withWatermark("ts", "10 minutes")
+        val (stream, root) = sliceStream(s, dir, "stream_hll_distinct")
+        drive(stream.withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(graft.api.Sketches.hllCountDistinct(col("user_id"), 12)
-            .as("hll_users"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName("graft_shd").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+            .as("hll_users")), s"$root/ckpt")(
+          _.outputMode("append").format("memory").queryName("graft_shd"))
         val streamed = s.table("graft_shd")
           .select(col("w.start").cast("timestamp_ntz").as("day_start"),
             col("event_type"), col("hll_users"))
@@ -784,22 +771,16 @@ object Streaming extends QueryModule {
     Q(
       "stream_dedup",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_dedup")
-        val root = Paths.get(ckpt).getParent.toString
+        val (ev, root) = sliceStream(s, dir, "stream_dedup")
         val sink = s"$root/sink"
-        // Emit-on-arrival: the trailing no-data batch only EVICTS state
-        // here (dropDuplicates emits survivors as they arrive), so skip
-        // it - the oracle's 3-batch replay stays hash-identical.
-        drive(s, finalFlush = false) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("user_id", "event_type")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+        // Emit-on-arrival: dropDuplicates emits survivors as they arrive,
+        // so `settingsFor` skips the trailing no-data batch (it would only
+        // evict state) and the oracle's 3-batch replay stays exact.
+        drive(ev.withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("user_id", "event_type"),
+          s"$root/ckpt")(_.foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(sink)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+          })
         s.read.parquet(sink)
           .groupBy("event_type").agg(count(lit(1)).as("n_kept"))
           .orderBy("event_type")
@@ -866,20 +847,17 @@ object Streaming extends QueryModule {
     Q(
       "stream_static_join",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_static_join")
+        val (ev, root) = sliceStream(s, dir, "stream_static_join")
         val weights = s.createDataFrame(Seq(
           ("click", 1.0), ("view", 0.5), ("purchase", 5.0),
           ("signup", 3.0), ("error", 0.0)))
           .toDF("event_type", "weight")
-        drive(s, codegen = true) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .join(weights, "event_type")
+        drive(ev.join(weights, "event_type")
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
-            round(sum(col("value") * col("weight")), 4).as("weighted_value"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName("graft_ssj").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+            round(sum(col("value") * col("weight")), 4).as("weighted_value")),
+          s"$root/ckpt")(
+          _.outputMode("complete").format("memory").queryName("graft_ssj"))
         s.table("graft_ssj").orderBy("event_type")
       },
       oracle = Some("""
@@ -897,14 +875,11 @@ object Streaming extends QueryModule {
     Q(
       "stream_stateful_custom",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_stateful_custom")
+        val (ev, root) = sliceStream(s, dir, "stream_stateful_custom")
         val sp = s
         import sp.implicits._
-        val root = Paths.get(ckpt).getParent.toString
         val sink = s"$root/sink"
-        drive(s) { s.readStream.schema(Tables.events(s, dir).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .filter(col("event_type") === "purchase")
+        drive(ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
           .mapGroupsWithState[(Long, Double), (Long, Long, Double)](
@@ -916,18 +891,15 @@ object Streaming extends QueryModule {
               rows.foreach { r => n += 1; t += r._2 }
               state.update((n, t))
               (uid, n, t)
-          }
-          .writeStream.outputMode("update")
+          }, s"$root/ckpt")(_.outputMode("update")
           // Update-mode batches append to a batchId-stamped parquet sink
           // (executor-side, distributed); the final per-key update is then
           // the max-batch row on re-read — no data ever visits the driver.
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[(Long, Long, Double)], batchId: Long) =>
+          .foreachBatch { (batch: Dataset[(Long, Long, Double)], batchId: Long) =>
             batch.toDF("user_id", "n_purchases", "total")
               .withColumn("batch_id", lit(batchId))
               .write.mode("append").parquet(sink)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+          })
         // One row per (user, batch) ⇒ the latest batch per user is the
         // final state — a standard last-update-per-key window on re-read.
         val w = org.apache.spark.sql.expressions.Window
@@ -951,41 +923,34 @@ object Streaming extends QueryModule {
     Q(
       "stream_transform_with_state",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_transform_with_state")
+        val (ev, root) = sliceStream(s, dir, "stream_transform_with_state")
         val sp = s
         import sp.implicits._
-        // transformWithState requires the RocksDB state store provider.
-        Session.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-          val root = Paths.get(ckpt).getParent.toString
-          val sink = s"$root/sink"
-          drive(s) { s.readStream.schema(Tables.events(s, dir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-            .select(col("user_id"), col("value")).as[(Long, Double)]
-            .groupByKey(_._1)
-            .transformWithState(new UserStatsProcessor,
-              TimeMode.None(), OutputMode.Update())
-            .writeStream.outputMode("update")
-            // Same distributed last-update-per-key pattern as
-            // stream_stateful_custom: append batchId-stamped updates to
-            // parquet, resolve the final row per key on re-read.
-            .foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[(Long, Long, Double)], batchId: Long) =>
-                batch.toDF("user_id", "n_events", "max_value")
-                  .withColumn("batch_id", lit(batchId))
-                  .write.mode("append").parquet(sink)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start() }
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("user_id").orderBy(desc("batch_id"))
-          s.read.parquet(sink)
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1)
-            .select(col("user_id"), col("n_events"),
-              round(col("max_value"), 4).as("max_value"))
-            .orderBy("user_id")
-        }
+        val sink = s"$root/sink"
+        // `settingsFor` sets the RocksDB state store provider that
+        // transformWithState requires.
+        drive(ev.select(col("user_id"), col("value")).as[(Long, Double)]
+          .groupByKey(_._1)
+          .transformWithState(new UserStatsProcessor,
+            TimeMode.None(), OutputMode.Update()), s"$root/ckpt")(
+          _.outputMode("update")
+          // Same distributed last-update-per-key pattern as
+          // stream_stateful_custom: append batchId-stamped updates to
+          // parquet, resolve the final row per key on re-read.
+          .foreachBatch {
+            (batch: Dataset[(Long, Long, Double)], batchId: Long) =>
+              batch.toDF("user_id", "n_events", "max_value")
+                .withColumn("batch_id", lit(batchId))
+                .write.mode("append").parquet(sink)
+          })
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("user_id").orderBy(desc("batch_id"))
+        s.read.parquet(sink)
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .select(col("user_id"), col("n_events"),
+            round(col("max_value"), 4).as("max_value"))
+          .orderBy("user_id")
       },
       oracle = Some("""
         SELECT user_id, count(*) AS n_events,
@@ -1001,11 +966,9 @@ object Streaming extends QueryModule {
     Q(
       "stream_stream_join",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_stream_join")
+        val (ev, root) = sliceStream(s, dir, "stream_stream_join")
         def side(tpe: String, pfx: String) =
-          s.readStream.schema(Tables.events(s, dir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-            .filter(col("event_type") === tpe)
+          ev.filter(col("event_type") === tpe)
             .select(col("user_id").as(s"${pfx}_user"),
               col("ts").as(s"${pfx}_ts"), col("value").as(s"${pfx}_value"))
             .withWatermark(s"${pfx}_ts", "1 hour")
@@ -1013,18 +976,15 @@ object Streaming extends QueryModule {
           col("s_user") === col("p_user") &&
             col("p_ts") >= col("s_ts") &&
             col("p_ts") <= col("s_ts") + expr("INTERVAL 24 HOURS"))
-        val root = Paths.get(ckpt).getParent.toString
         val sink = s"$root/sink"
-        // INNER stream-stream join: matches emit as rows arrive; the
-        // no-data flush only evicts watermark-expired buffers and emits
-        // nothing (the LEFT join below MUST keep it - its flush emits
-        // the null-padded unmatched rows).
-        drive(s, finalFlush = false) { joined.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+        // INNER stream-stream join: matches emit as rows arrive, so
+        // `settingsFor` skips the no-data batch, which would only evict
+        // watermark-expired buffers (the LEFT join below keeps it: its
+        // flush emits the null-padded unmatched rows).
+        drive(joined, s"$root/ckpt")(_.foreachBatch {
+          (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(sink)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+        })
         s.read.parquet(sink)
           .groupBy(col("s_user").as("user_id"))
           .agg(count(lit(1)).as("n_matches"),
@@ -1064,15 +1024,13 @@ object Streaming extends QueryModule {
     Q(
       "stream_stream_left_join",
       (s, dir) => {
-        val (in, ckpt) = slices(s, dir, "stream_stream_left_join")
+        val (ev, root) = sliceStream(s, dir, "stream_stream_left_join")
         val maxTs = Tables.events(s, dir)
           .agg(max("ts")).first().getTimestamp(0)
         val cutoff = new java.sql.Timestamp(
           maxTs.getTime - 30L * 3600 * 1000)
         def side(tpe: String, pfx: String) =
-          s.readStream.schema(Tables.events(s, dir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-            .withWatermark("ts", "1 hour")
+          ev.withWatermark("ts", "1 hour")
             .filter(col("event_type") === tpe)
             .select(col("user_id").as(s"${pfx}_user"),
               col("ts").as(s"${pfx}_ts"), col("value").as(s"${pfx}_value"))
@@ -1083,17 +1041,14 @@ object Streaming extends QueryModule {
               col("p_ts") >= col("s_ts") &&
               col("p_ts") <= col("s_ts") + expr("INTERVAL 24 HOURS"),
             "left_outer")
-        val root = Paths.get(ckpt).getParent.toString
         val sink = s"$root/sink"
         // OUTER join: the watermark-driven flush EMITS the null-padded
-        // unmatched signups — the trailing no-data batch is load-bearing
-        // here, so keep the default finalFlush (unlike the inner join).
-        drive(s) { joined.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+        // unmatched signups, so `settingsFor` keeps the trailing no-data
+        // batch (unlike the inner join).
+        drive(joined, s"$root/ckpt")(_.foreachBatch {
+          (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(sink)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start() }
+        })
         s.read.parquet(sink)
           .groupBy(col("s_user").as("user_id"))
           .agg(count(lit(1)).as("n_rows"),

@@ -135,25 +135,6 @@ class Round14Spec extends AnyFunSuite with SparkFixture {
       .orderBy("u", "m").collect().toSeq
     assert(h1 == h2)
   }
-
-  test("retime valve: descheduled signature fires, honest compute never does") {
-    import Bench.shouldRetime
-    // Descheduled: 13 s wall on 32 cpu-seconds (cpu/32 = 1 s of honest
-    // parallel compute) at 3.25x its 4 s prior — the r13 class the 10x
-    // valve waved through. Must retime.
-    assert(shouldRetime(wall = 13, cpu = 32, prior = Some(4.0), cores = 32))
-    // Honest heavy compute: 20 s wall backed by 600 cpu-seconds
-    // (cpu/32 = 18.75). 5x drift or not, rerunning honest work just
-    // measures it twice. Must NOT retime.
-    assert(!shouldRetime(wall = 20, cpu = 600, prior = Some(4.0), cores = 32))
-    // The original 10x rule still fires even when cpu-matched.
-    assert(shouldRetime(wall = 50, cpu = 1600, prior = Some(4.0), cores = 32))
-    // No prior: only the 30 s absolute backstop.
-    assert(!shouldRetime(wall = 20, cpu = 1, prior = None, cores = 32))
-    assert(shouldRetime(wall = 31, cpu = 1, prior = None, cores = 32))
-    // Sub-second keys never churn on scheduler noise (2 s floor).
-    assert(!shouldRetime(wall = 1.5, cpu = 0.5, prior = Some(0.1), cores = 32))
-  }
 }
 
 /** Test-only leaf plan emitting GenericInternalRow across 2 partitions. */

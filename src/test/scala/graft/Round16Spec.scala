@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 regression pins for the r15 ADVICE findings: the
   * agg_markov_stationary oracle actually replayed on the source-only
-  * fixture (not just the engine side), the q-digest Long-safe wire size,
-  * the portable-qdigest oracle clamp, and the bench drift stamp (the
-  * session-entry purge is pinned in WarmSpec).
+  * fixture (not just the engine side), the q-digest Long-safe wire size
+  * and the portable-qdigest oracle clamp (the bench drift stamp is pinned
+  * in BenchSpec, the session-entry purge in WarmSpec).
   */
 class Round16Spec extends AnyFunSuite with SparkFixture {
 
@@ -143,32 +143,5 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
     assert(!sql.contains("TRUE AS exact_mode"),
       "exact_mode must be computed, not hardcoded — the truncated " +
         "regime (sf0.1+) is certified now")
-  }
-
-  test("the r16 jitBreadthWarmup pricing change stays in the " +
-    "warm_hoisted ledger (cross-round totals are uninterpretable " +
-    "without it)") {
-    assert(Bench.warmHoisted.toMap.get("*").exists(_.startsWith("r16:")),
-      "the '*' registry-wide pricing entry must survive — removing it " +
-        "makes the r15->r16 ~20% total drop read as a code speedup")
-  }
-
-  test("bench artifact total line carries the r16 drift stamp " +
-    "(calibration start, end, ratio) and stays scalars-only") {
-    val keys = SparkEntry.queries.keys.toSeq.sorted.take(3)
-    val results = keys.zipWithIndex.map { case (k, i) =>
-      Bench.KeyRes(k, 0.1, 0.15, 0.3, 10L + i, i, None)
-    }
-    val lines = Bench.artifactLines(results, keys.map((_, "ok")),
-      calibration = 0.2, sfDir = "/tmp/x", diverted = Seq.empty,
-      calibrationEnd = 0.25)
-    val last = lines.last
-    assert(last.contains("\"calibration_sec\":0.200"), last)
-    assert(last.contains("\"calibration_end_sec\":0.250"), last)
-    assert(last.contains("\"calibration_drift\":1.250"), last)
-    // spec-default path: no end probe modeled => zero drift, not garbage
-    val dflt = Bench.artifactLines(results, keys.map((_, "ok")),
-      calibration = 0.2, sfDir = "/tmp/x", diverted = Seq.empty).last
-    assert(dflt.contains("\"calibration_drift\":1.000"), dflt)
   }
 }

@@ -77,10 +77,10 @@ class SessionSpec extends AnyFunSuite with SparkFixture {
 
   // Keys that enter a Session.withConf scope, one per scope: the
   // quietRounds valve (graph_bfs, dedup_connected_components), the join
-  // thresholds, the dynamic-overwrite writers, Streaming.drive (a batch
-  // stream key, the two keys with a scope of their own and a DSv2 stream
-  // key). Each runs on its own session, so an earlier spec's settings
-  // cannot hide a leak.
+  // thresholds, the dynamic-overwrite writers, Streaming.drive (a file
+  // stream key, the dynamic-overwrite stream key, transformWithState with
+  // the provider its plan adds, and a DSv2 stream key). Each runs on its
+  // own session, so an earlier spec's settings cannot hide a leak.
   Seq("graph_bfs", "dedup_connected_components", "join_skew_aqe",
     "join_bloom_filtered", "sink_dynamic_overwrite", "stream_dedup",
     "stream_upsert_idempotent", "stream_transform_with_state",

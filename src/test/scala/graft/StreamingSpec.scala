@@ -1,17 +1,125 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import graft.operators.{Streaming, UserStatsProcessor}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, TimeMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming semantics: watermark late-data drop with
   * deliberately out-of-order slices, and stream ≡ batch for windowed aggs
-  * when arrival is time-ordered (SURVEY.md §5.4).
+  * when arrival is time-ordered (SURVEY.md §5.4); the settings
+  * `Streaming.drive` reads off a plan, and the guard that keeps every
+  * stream key's checkpoint and trigger inside `drive`.
   */
 class StreamingSpec extends AnyFunSuite with SparkFixture {
+
+  private val codegen = "spark.sql.codegen.wholeStage"
+  private val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private val provider = "spark.sql.streaming.stateStore.providerClass"
+
+  /** (whole-stage codegen, no-data batches, RocksDB provider) for `q`. */
+  private def settings(q: DataFrame): (Boolean, Boolean, Boolean) = {
+    val m = Streaming.settingsFor(q.queryExecution.analyzed).toMap
+    (m(codegen).toBoolean, m(noData).toBoolean,
+      m.get(provider).exists(_.endsWith("RocksDBStateStoreProvider")))
+  }
+
+  /** A rate stream: (timestamp, value) rows, never started here. */
+  private def rate: DataFrame = spark.readStream.format("rate").load()
+
+  private def watermarked: DataFrame =
+    rate.withWatermark("timestamp", "10 minutes")
+
+  test("settingsFor: a plan without a watermark or group state keeps codegen and the no-data batch") {
+    assert(settings(rate.select(col("value") * 2)) == ((true, true, false)))
+    assert(settings(rate.groupBy(col("value") % 10).count()) ==
+      ((true, true, false)), "complete aggregate without a watermark")
+    val static = spark.range(10).toDF("value")
+    assert(settings(rate.join(static, "value")) == ((true, true, false)),
+      "stream-static join")
+  }
+
+  test("settingsFor: watermark aggregates and session windows keep the no-data batch, without codegen") {
+    assert(settings(watermarked
+      .groupBy(window(col("timestamp"), "1 hour")).count()) ==
+      ((false, true, false)))
+    assert(settings(watermarked
+      .groupBy(session_window(col("timestamp"), "30 minutes")).count()) ==
+      ((false, true, false)))
+  }
+
+  test("settingsFor: emit-on-arrival dedup and inner stream joins skip the no-data batch") {
+    assert(settings(watermarked.dropDuplicatesWithinWatermark("value")) ==
+      ((false, false, false)))
+    assert(settings(watermarked.dropDuplicates("value", "timestamp")) ==
+      ((false, false, false)))
+    def side(p: String) = watermarked
+      .select(col("value").as(s"${p}_v"), col("timestamp").as(s"${p}_ts"))
+    val on = col("l_v") === col("r_v") &&
+      col("r_ts").between(col("l_ts"), col("l_ts") + expr("INTERVAL 1 HOUR"))
+    assert(settings(side("l").join(side("r"), on)) == ((false, false, false)))
+    assert(settings(side("l").join(side("r"), on, "left_outer")) ==
+      ((false, true, false)), "the outer join's flush emits null-padded rows")
+    // One aggregate beside the dedup is enough to keep the flush.
+    assert(settings(watermarked.dropDuplicatesWithinWatermark("value")
+      .groupBy(window(col("timestamp"), "1 hour")).count()) ==
+      ((false, true, false)))
+  }
+
+  test("settingsFor: group state turns codegen off; transformWithState gets RocksDB") {
+    val sp = spark
+    import sp.implicits._
+    val keyed = rate.select(col("value"), col("value").cast("double"))
+      .as[(Long, Double)].groupByKey(_._1)
+    val mapped = keyed.mapGroupsWithState[Long, (Long, Long)](
+      GroupStateTimeout.NoTimeout) {
+      (k: Long, rows: Iterator[(Long, Double)], st: GroupState[Long]) =>
+        st.update(rows.size.toLong); (k, st.get)
+    }
+    assert(settings(mapped.toDF()) == ((false, true, false)))
+    val tws = keyed.transformWithState(new UserStatsProcessor,
+      TimeMode.None(), OutputMode.Update())
+    assert(settings(tws.toDF()) == ((false, true, true)))
+  }
+
+  test("settingsFor: a graft-log V2 stream aggregate runs with codegen") {
+    val q = spark.readStream.format("graft-log")
+      .load(operators.DsV2.topic(spark, sf0001))
+      .groupBy("partition").count()
+    assert(settings(q) == ((true, true, false)))
+  }
+
+  test("only Streaming.drive sets a stream's trigger or checkpoint under src/main/scala/graft/operators") {
+    val root = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val set = """Trigger\.AvailableNow|"checkpointLocation"""".r
+    val hits = scala.util.Using.resource(Files.walk(root)) { st =>
+      st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }.flatMap { (p: Path) =>
+      val lines = Files.readAllLines(p).asScala.toSeq
+      // drive's body: from its `def` line to the next blank line.
+      val inDrive: Int => Boolean =
+        if (p.getFileName.toString != "Streaming.scala") _ => false
+        else {
+          val from = lines.indexWhere(_.contains("def drive["))
+          val to = lines.indexWhere(_.trim.isEmpty, from)
+          i => from >= 0 && i >= from && i < to
+        }
+      lines.zipWithIndex.collect {
+        case (line, i) if set.findFirstIn(line.replaceAll("//.*", "")).isDefined &&
+            !line.trim.startsWith("*") && !inDrive(i) =>
+          s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(hits.isEmpty,
+      "start stream queries through Streaming.drive:\n" + hits.mkString("\n"))
+  }
 
   /** Write each slice DataFrame as one parquet file, in order. */
   private def writeSlices(key: String, slices: Seq[DataFrame]): (String, String) = {
