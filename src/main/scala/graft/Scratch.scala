@@ -5,8 +5,8 @@ import java.util.Comparator
 
 /** Per-query scratch directories for side-effecting operators (CSV/JSON
   * round-trips, partitioned sinks, streaming checkpoints). Each key gets a
-  * fresh directory under java.io.tmpdir; the previous run's contents are
-  * removed so every invocation is deterministic from a clean slate.
+  * fresh directory under this JVM's root ([[claim]]); the previous run's
+  * contents are removed so every invocation starts from a clean slate.
   */
 object Scratch {
 
@@ -82,10 +82,37 @@ object Scratch {
     if (divert && diverted.add(key))
       System.err.println(
         s"[scratch] tmpfs headroom <2GiB; diverting key $key to $base")
-    val p = Paths.get(base,
-      s"graft_scratch_${ProcessHandle.current().pid()}", key)
+    val p = claim(base).resolve(key)
     deleteRec(p)
     Files.createDirectories(p)
     p.toString
   }
+
+  private val RootName = "graft_scratch_(\\d+)".r
+  private val roots =
+    new java.util.concurrent.ConcurrentHashMap[String, Path]()
+
+  /** This JVM's root under `base`, `graft_scratch_<pid>`, deleted when
+    * the JVM exits. The first call for a base also removes the roots
+    * there whose pid no longer runs (a JVM killed before its exit hook
+    * ran); a live JVM's root is never touched.
+    */
+  private def claim(base: String): Path = roots.computeIfAbsent(base, _ => {
+    if (Files.isDirectory(Paths.get(base)))
+      scala.util.Using.resource(Files.list(Paths.get(base)))(_.toArray.toSeq)
+        .map(_.asInstanceOf[Path]).foreach(r => r.getFileName.toString match {
+          case RootName(pid) if pid.toLongOption
+              .forall(ProcessHandle.of(_).isEmpty) => release(r)
+          case _ => ()
+        })
+    val own = Paths.get(base, s"graft_scratch_${ProcessHandle.current().pid()}")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => release(own)))
+    own
+  })
+
+  /** Deletes a root no JVM uses; another JVM may be deleting it too. */
+  private def release(root: Path): Unit =
+    try deleteRec(root) catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
 }

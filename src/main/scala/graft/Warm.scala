@@ -74,12 +74,12 @@ object Warm {
     entry(Key(name, Some(s), dir))(build)
   }
 
-  /** A per-session frame, cut here with an eager `localCheckpoint`, so
-    * its builder ends at the plan and does not cut it again.
+  /** A per-session frame, cut here ([[Cut]]), so its builder ends at the
+    * plan and does not cut it again; the entry keeps the cut's row count.
     */
   def frame(name: String, s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame =
-    session(name, s, dir)(build.localCheckpoint(true))
+      build: => DataFrame): Cut =
+    session(name, s, dir)(Cut(build))
 
   /** Drops every per-session entry whose session `dead` marks. Exposed so
     * a spec can drive it without stopping a real SparkContext (local-mode

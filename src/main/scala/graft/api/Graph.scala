@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.Cut
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -7,10 +8,13 @@ import org.apache.spark.sql.functions._
   * iterative join+aggregate rounds with per-round lineage cuts, the
   * same scale discipline as [[Dedup.connectedComponents]].
   *
-  * The undirected kernels share one layout, [[Graph.Edges]]: the
-  * canonical edge set that only [[Graph.undirected]] builds, and its
-  * symmetric adjacency (n, m) from [[Graph.adjacency]]. `pageRank` and
-  * `hits` keep their own directed layouts.
+  * Each kernel reads a [[Graph.Layout]] that only its builder makes, so
+  * no kernel re-derives its input or trusts a caller's flag. The
+  * undirected kernels share one, [[Graph.Edges]]: the canonical edge set
+  * that only [[Graph.undirected]] builds, and its symmetric adjacency
+  * (n, m) from [[Graph.adjacency]]. `pageRank` reads [[Graph.RankEdges]]
+  * ([[Graph.rankEdges]]) and `hits` reads [[Graph.Bipartite]]
+  * ([[Graph.bipartite]]).
   */
 object Graph {
 
@@ -22,14 +26,32 @@ object Graph {
   private val IdBits = 40
   private val IdLimit = 1L << IdBits
 
-  /** A canonical undirected edge set: long columns (u, v) with u < v,
-    * one row per edge (distinct), no self-loops, no nulls, materialized
-    * once (an eager `localCheckpoint`), so every kernel reads it as
-    * often as it likes without re-deriving it. Built only by
-    * [[undirected]], so a kernel that takes an `Edges` never
-    * re-canonicalizes and never has to trust a caller's flag.
+  /** An edge layout cut once ([[Cut]]): every kernel reads `df` as often
+    * as it likes without re-deriving it, and `rows` sizes its rounds
+    * without a count job.
     */
-  final class Edges private[Graph] (val df: DataFrame)
+  sealed abstract class Layout(cut: Cut) {
+    def df: DataFrame = cut.df
+    def rows: Long = cut.rows
+  }
+
+  /** A canonical undirected edge set: long columns (u, v) with u < v,
+    * one row per edge (distinct), no self-loops, no nulls. Built only by
+    * [[undirected]].
+    */
+  final class Edges private[Graph] (cut: Cut) extends Layout(cut)
+
+  /** PageRank's edge layout: (src, dst), distinct, both directions of
+    * every edge when `undirected`, hash-partitioned and sorted on src.
+    * Built only by [[rankEdges]].
+    */
+  final class RankEdges private[Graph] (cut: Cut, val undirected: Boolean)
+      extends Layout(cut)
+
+  /** HITS' edge layout: long (c, p) hub→authority rows, distinct, no
+    * nulls, hash-partitioned on c. Built only by [[bipartite]].
+    */
+  final class Bipartite private[Graph] (cut: Cut) extends Layout(cut)
 
   /** The (u, v) canonical rows of `edges` before the dedup: both
     * endpoints as longs, ordered u < v, self-loops and null endpoints
@@ -50,7 +72,7 @@ object Graph {
     * dropped.
     */
   def undirected(edges: DataFrame, src: Column, dst: Column): Edges =
-    new Edges(canonical(edges, src, dst).distinct().localCheckpoint(true))
+    new Edges(Cut(canonical(edges, src, dst).distinct()))
 
   /** Both directions of every (u, v) row as (n, m), `carry` columns
     * riding along unchanged.
@@ -81,16 +103,36 @@ object Graph {
     */
   private def oriented(e: DataFrame): (DataFrame, DataFrame) = {
     val deg = degrees(e)
-    val eo = e
+    val eo = Cut(e
       .join(deg.as("du"), col("u") === col("du.n"))
       .join(deg.as("dv"), col("v") === col("dv.n"))
       .select(
         least(col("du.d") * IdLimit + col("u"),
           col("dv.d") * IdLimit + col("v")).as("lo"),
         greatest(col("du.d") * IdLimit + col("u"),
-          col("dv.d") * IdLimit + col("v")).as("hi"))
-      .localCheckpoint(true)
+          col("dv.d") * IdLimit + col("v")).as("hi"))).df
     (deg, eo)
+  }
+
+  /** PageRank's layout of a (src, dst) edge list, both directions of
+    * each edge when `undirected`. Symmetrize FIRST, distinct ONCE: two
+    * separate distincts would pay two full edge shuffles for one
+    * deduplicated result. Repartition BEFORE distinct:
+    * HashPartitioning(src) satisfies the distinct aggregate's
+    * ClusteredDistribution(src, dst) (subset rule), so the dedup runs
+    * in-partition and the edge set shuffles exactly ONCE. The cut keeps
+    * the physical layout (hash-partitioned and sorted on src), so every
+    * round's share join reuses it: only the node-sized shares side moves
+    * per iteration, never the edges.
+    */
+  def rankEdges(edges: DataFrame, src: Column, dst: Column,
+      undirected: Boolean = false): RankEdges = {
+    val raw = edges.select(src.as("src"), dst.as("dst"))
+    new RankEdges(Cut((if (undirected)
+      raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
+    else raw)
+      .repartition(col("src")).distinct()
+      .sortWithinPartitions("src")), undirected)
   }
 
   /** PageRank over an edge list. Each round: every node splits its rank
@@ -110,57 +152,36 @@ object Graph {
     * `damping` must be a multiple of 0.01 (it becomes the integer
     * percentage dNum/100). Output: (id, rank DOUBLE, rank_fp LONG,
     * deg LONG — null for dangling nodes); rank = rank_fp/1e15 exactly
-    * (rank_fp < 2^53), summing to ~1.
-    *
-    * `prepared = true`: the caller passes edges ALREADY in this
-    * function's internal layout — symmetrized (for undirected),
-    * distinct, hash-partitioned and sorted on src, checkpointed —
-    * typically a shared per-(session, dir) graph index; the layout
-    * build is skipped entirely.
+    * (rank_fp < 2^53), summing to ~1. `edges` is directed unless built
+    * `undirected` ([[rankEdges]]); a directed graph's nodes without
+    * out-edges spread their rank as dangling mass.
     */
   def pageRank(
-      edges: DataFrame, src: Column, dst: Column,
-      iterations: Int = 6, damping: Double = 0.85,
-      undirected: Boolean = false,
-      prepared: Boolean = false): DataFrame = {
+      edges: RankEdges, iterations: Int = 6,
+      damping: Double = 0.85): DataFrame = {
     require(iterations >= 1 && damping > 0 && damping < 1)
     val dNum = math.round(damping * 100).toInt
     require(dNum / 100.0 == damping,
       s"damping $damping must be a multiple of 0.01 for fixed-point")
-    val raw = edges.select(src.as("src"), dst.as("dst"))
-    // Symmetrize FIRST, distinct ONCE: two separate distincts would pay
-    // two full edge shuffles for one deduplicated result. Repartition
-    // BEFORE distinct: HashPartitioning(src) satisfies the distinct
-    // aggregate's ClusteredDistribution(src, dst) (subset rule), so the
-    // dedup runs in-partition and the edge set shuffles exactly ONCE.
-    // The checkpoint captures the physical layout (hash-partitioned and
-    // sorted on src), so every round's share join reuses it: only the
-    // node-sized shares side moves per iteration, never the edges.
-    val e = if (prepared) raw
-    else (if (undirected)
-      raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
-    else raw)
-      .repartition(col("src")).distinct()
-      .sortWithinPartitions("src")
-      .localCheckpoint(true)
+    val undirected = edges.undirected
+    val e = edges.df
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // The iterated frame carries (id, deg, rank): deg is static, so
     // folding it in once turns the per-round degree join and the
     // dangling anti-join into plain filters. In the undirected case
     // every node has an out-edge, so the degree table IS the node set —
     // no separate union+distinct pass.
-    val nodesDeg = (if (undirected)
+    val nodes = Cut(if (undirected)
       deg.select(col("src").as("id"), col("deg"))
     else
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id")))
         .distinct()
         .join(deg, col("id") === col("src"), "left")
-        .select(col("id"), col("deg"))
-      ).localCheckpoint(true)
-    // One scalar job up front (same budget as the CC convergence
-    // probe); N parameterizes the teleport term.
-    val n = nodesDeg.count()
+        .select(col("id"), col("deg")))
+    val nodesDeg = nodes.df
+    // N parameterizes the teleport term.
+    val n = nodes.rows
     val S = 1000000000000000L // 1e15 fixed-point scale
     // Teleport term (1-d)/n in fixed point: a driver-side integer
     // floor, identical to the oracle's (100-dNum)*S // (100*n).
@@ -172,8 +193,8 @@ object Graph {
     // Width the round loop by the EDGE count, not n: the per-round
     // work is the e ⋈ shares join + the dst-keyed aggregate over
     // edge-count rows (the node-sized shares frame is the broadcast
-    // side). e is checkpointed, so the count scans cached blocks (r17).
-    quietRounds(edges.sparkSession, math.max(n, e.count())) {
+    // side).
+    quietRounds(e.sparkSession, math.max(n, edges.rows)) {
     while (round < iterations) {
       val shares = ranks.filter(col("deg").isNotNull)
         .select(col("id").as("share_src"),
@@ -182,7 +203,7 @@ object Graph {
       // never moves. SELF-TUNING at scale: n is already counted above,
       // and a rank vector beyond ~50M nodes (~1.2 GB of (long, long)
       // rows) outgrows a sane broadcast — past that, drop the hint and
-      // the planner joins against the checkpointed edge layout, which
+      // the planner joins against the cut edge layout, which
       // is already hash-partitioned on src (co-partitioned merge join,
       // only the node-sized side shuffles per round).
       val sharesSide = if (n <= 50000000L) broadcast(shares) else shares
@@ -197,12 +218,11 @@ object Graph {
         // re-executes rounds 1..k-1 (quadratic blowup).
         val dangling = ranks.filter(col("deg").isNull)
           .agg(coalesce(sum("rank_fp"), lit(0L)).as("dm"))
-        base.crossJoin(broadcast(dangling))
+        Cut(base.crossJoin(broadcast(dangling))
           .select(col("id"), col("deg"),
             (lit(teleport) + expr(
               s"($dNum * (coalesce(in_share, 0L) + (dm div $n))) div 100"))
-              .as("rank_fp"))
-          .localCheckpoint(true)
+              .as("rank_fp"))).df
       } else {
         // No dangling scalar here, but STILL materialize per round:
         // each round's broadcast(shares) runs as its own job, and an
@@ -211,11 +231,10 @@ object Graph {
         // (measured: 5 rounds at sf0.1 dropped ~4.2 s → ~2.7 s with
         // the cut; the pre-r11 "one fused job" reading missed the
         // broadcast-side re-execution).
-        base.select(col("id"), col("deg"),
+        Cut(base.select(col("id"), col("deg"),
           (lit(teleport) +
             expr(s"($dNum * coalesce(in_share, 0L)) div 100"))
-            .as("rank_fp"))
-          .localCheckpoint(true)
+            .as("rank_fp"))).df
       }
       round += 1
     }
@@ -320,21 +339,21 @@ object Graph {
     // Parallel edges keep their lightest weight.
     val e = canonical(edges, src, dst, weight.cast("long").as("w"))
       .groupBy("u", "v").agg(min(col("w")).as("w"))
-    val adj = symmetric(e, col("w")).localCheckpoint(true)
+    val adjCut = Cut(symmetric(e, col("w")))
+    val adj = adjCut.df
     val sp = edges.sparkSession
     import sp.implicits._
+    // The one-row seed is a local relation: it needs no cut.
     var dist = Seq((source, 0L)).toDF("node", "dist")
       .select(col("node").cast("long").as("node"), col("dist"))
-      .localCheckpoint(true)
     var hop = 0
-    quietRounds(sp, adj.count()) {
+    quietRounds(sp, adjCut.rows) {
       while (hop < maxHops) {
         val cand = dist.join(adj, dist("node") === adj("n"))
           .select(col("m").as("node"),
             (col("dist") + col("w")).as("dist"))
-        dist = dist.unionAll(cand)
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
+        dist = Cut(dist.unionAll(cand)
+          .groupBy("node").agg(min(col("dist")).as("dist"))).df
         hop += 1
       }
     }
@@ -370,31 +389,31 @@ object Graph {
     * Proper frontier BFS — each round joins ONLY the new frontier
     * against the adjacency list and anti-joins the visited set, so
     * total work is O(edges touched), not O(paths) (the exponential
-    * blowup a naive path-enumeration pays). Frontiers localCheckpoint
+    * blowup a naive path-enumeration pays). Frontiers are cut ([[Cut]])
     * so round N+1's lineage doesn't re-run rounds 1..N; the loop exits
     * early when a frontier empties (one cheap limit-1 action per round,
     * bounded by maxHops).
     */
   private def frontierBfs(edges: Edges, sources: Seq[Long], maxHops: Int,
       key: Seq[String]): DataFrame = {
-    val adj = adjacency(edges).localCheckpoint(true)
+    val adjCut = Cut(adjacency(edges))
+    val adj = adjCut.df
     val sp = adj.sparkSession
     import sp.implicits._
+    // The seed rows are a local relation: they need no cut.
     var visited = sources.map((_, 0)).toDF("node", "dist")
       .select(key.map(col("node").cast("long").as(_)) :+ col("dist"): _*)
-      .localCheckpoint(true)
     var frontier = visited
     var hop = 1
-    quietRounds(sp, adj.count()) {
+    quietRounds(sp, adjCut.rows) {
       while (hop <= maxHops && !frontier.isEmpty) {
-        val next = frontier.join(adj, frontier("node") === adj("n"))
+        val next = Cut(frontier.join(adj, frontier("node") === adj("n"))
           .select(key.init.map(col) :+ col("m").as("node"): _*).distinct()
           .join(visited, key, "left_anti")
-          .withColumn("dist", lit(hop))
-          .localCheckpoint(true)
-        // No checkpoint on visited: it is a union of already-
-        // materialized frontiers, so its lineage is flat —
-        // checkpointing it again would only add a job per round.
+          .withColumn("dist", lit(hop))).df
+        // No cut on visited: it is a union of already-cut frontiers,
+        // so its lineage is flat — cutting it again would only add a
+        // job per round.
         visited = visited.unionAll(next)
         frontier = next
         hop += 1
@@ -427,7 +446,7 @@ object Graph {
     * scale): the whole fixed-round fixpoint executes as ONE job
     * inside a quietRounds scope with ReuseExchange deduping the
     * adjacency shuffle, and only the RESULT is materialized (returned
-    * as a localCheckpoint leaf), so multi-consumer callers never
+    * as a [[Cut]] leaf), so multi-consumer callers never
     * re-run the chain. Returns (n, label).
     *
     * `adj` is the symmetric adjacency (n, m) of an [[Edges]] as
@@ -466,7 +485,7 @@ object Graph {
     // the adjacency shuffle — AQE's per-stage materialization jobs
     // (3/round at session width) were pure scheduling overhead on a
     // bounded-round kernel. The action must run INSIDE the scope for
-    // the width/AQE settings to bind, hence the localCheckpoint of
+    // the width/AQE settings to bind, hence the Cut of
     // the final node-row label frame (which every caller was
     // materializing anyway).
     quietRounds(adj.sparkSession, st.getLong(0)) {
@@ -492,7 +511,7 @@ object Graph {
         .select(col("n"),
           col("pk").bitwiseAND(lit(IdLimit - 1)).as("label"))
     }
-    lab.localCheckpoint(true)
+    Cut(lab).df
     }
   }
 
@@ -531,6 +550,16 @@ object Graph {
         .as("modularity"))
   }
 
+  /** HITS' layout of a directed bipartite (src = hub, dst = authority)
+    * edge list: both endpoints as longs, null endpoints dropped,
+    * distinct, hash-partitioned on the hub.
+    */
+  def bipartite(edges: DataFrame, src: Column, dst: Column): Bipartite =
+    new Bipartite(Cut(edges
+      .select(src.cast("long").as("c"), dst.cast("long").as("p"))
+      .filter(col("c").isNotNull && col("p").isNotNull)
+      .repartition(col("c")).distinct()))
+
   /** Fixed-point HITS (Kleinberg hubs & authorities) over a directed
     * bipartite edge list (src = hub side, dst = authority side).
     * Each round: authority = Σ inbound hub scores, hub = Σ outbound
@@ -541,62 +570,38 @@ object Graph {
     * overflows a long; raw·S ≤ 1e34 stays inside decimal38 to
     * ~1e4-degree hubs at 1e9 nodes). Scale shape per round: the
     * node-sized score vector broadcasts (same ≤50M-node caveat as
-    * pageRank — beyond that drop the hint and the checkpointed edge
+    * pageRank — beyond that drop the hint and the cut edge
     * layout co-partitions), edges never move, and the groupBy
     * partial-aggregates map-side so the shuffle carries node-count
-    * rows; localCheckpoint cuts lineage per half-round. Returns
+    * rows; a [[Cut]] per half-round cuts lineage. Returns
     * (kind 'auth'|'hub', id, score_fp).
     */
-  def hits(
-      edges: DataFrame, src: Column, dst: Column,
-      rounds: Int = 4, assumeCanonical: Boolean = false): DataFrame = {
+  def hits(edges: Bipartite, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val S = 1000000000000000L
     val dec = "decimal(38,0)"
-    // assumeCanonical: caller guarantees long-typed, non-null,
-    // distinct, materialized edges (the shared warmed edge cache) —
-    // skip the dedup shuffle and checkpoint.
-    val e = if (assumeCanonical)
-      edges.select(src.as("c"), dst.as("p"))
-    else edges
-      .select(src.cast("long").as("c"), dst.cast("long").as("p"))
-      .filter(col("c").isNotNull && col("p").isNotNull)
-      .repartition(col("c")).distinct()
-      .localCheckpoint(true)
-    // Hub node set materialized once: it seeds h0 AND carries nc —
-    // a separate count() would re-run the distinct.
-    val hubs = e.select(col("c")).distinct().localCheckpoint(true)
-    val nc = hubs.count()
-    var h = hubs.select(col("c"), lit(S / nc).as("h"))
+    val e = edges.df
+    // Hub node set cut once: it seeds h0 AND carries nc.
+    val hubs = Cut(e.select(col("c")).distinct())
+    val nc = hubs.rows
+    var h = hubs.df.select(col("c"), lit(S / nc).as("h"))
     var a: DataFrame = null
     // Width by edge count: each half-round is a broadcast join against
     // e plus an edge-count-row aggregate — the hub count under-sizes
     // the shuffle width 30× on the purchase bipartite (r17).
-    quietRounds(edges.sparkSession, math.max(nc, e.count())) {
+    quietRounds(e.sparkSession, math.max(nc, edges.rows)) {
     for (_ <- 1 to rounds) {
-      // Checkpoint the RAW frames, not the normalized ones: each raw
-      // feeds both its L1 total (broadcast subtree) and the
-      // normalization projection, and an unmaterialized raw would run
-      // the edge join TWICE per half-round — the dominant cost. The
-      // normalized frames are cheap projections of the materialized
-      // raws and need no checkpoint of their own.
-      // The trailing same-name re-alias select mints FRESH exprIds for
-      // the checkpointed leaf's columns: without it the leaf inherits
-      // e's own attribute ids, and the next half-round's e ⋈ a join
-      // carries the same id on both sides — with AQE off (the
-      // quietRounds scope) DeduplicateRelations fails that shape with
-      // an INTERNAL_ERROR "conflicting references" instead of
-      // re-aliasing (r14 find; AQE's path happened to re-alias it).
-      val araw = e.join(broadcast(h), "c")
-        .groupBy("p").agg(sum(col("h").cast(dec)).as("raw"))
-        .localCheckpoint(true)
-        .select(col("p").as("p"), col("raw"))
+      // Cut the RAW frames, not the normalized ones: each raw feeds
+      // both its L1 total (broadcast subtree) and the normalization
+      // projection, and an uncut raw would run the edge join TWICE per
+      // half-round — the dominant cost. The normalized frames are cheap
+      // projections of the cut raws and need no cut of their own.
+      val araw = Cut(e.join(broadcast(h), "c")
+        .groupBy("p").agg(sum(col("h").cast(dec)).as("raw"))).df
       a = araw.crossJoin(broadcast(araw.agg(sum("raw").as("t"))))
         .select(col("p"), expr(s"(raw * $S) div t").as("a"))
-      val hraw = e.join(broadcast(a), "p")
-        .groupBy("c").agg(sum(col("a").cast(dec)).as("raw"))
-        .localCheckpoint(true)
-        .select(col("c").as("c"), col("raw"))
+      val hraw = Cut(e.join(broadcast(a), "p")
+        .groupBy("c").agg(sum(col("a").cast(dec)).as("raw"))).df
       h = hraw.crossJoin(broadcast(hraw.agg(sum("raw").as("t"))))
         .select(col("c"), expr(s"(raw * $S) div t").as("h"))
     }
@@ -621,7 +626,7 @@ object Graph {
     * will be peeled next sweep; counting it would make the census
     * depend on which sweep you ask). Per round: one
     * map-combined degree count + two semi-joins clustered on the
-    * endpoint keys; localCheckpoint cuts lineage so round r+1 never
+    * endpoint keys; a [[Cut]] per round cuts lineage so round r+1 never
     * re-derives rounds 1..r. O(rounds·|E|) worst case, and E shrinks
     * monotonically — at 100 TB the first sweep already discards the
     * long degree-1 tail that dominates real co-occurrence graphs.
@@ -634,7 +639,7 @@ object Graph {
     // aggregate of deg(e_{r-1}) — n_nodes = rows with an edge,
     // n_edges = Σd/2 — so the census never rescans the edge set or
     // pays its own countDistinct shuffle, and `keep` is a free filter
-    // over the same (node-sized, checkpointed) frame. coalesce: a
+    // over the same (node-sized, cut) frame. coalesce: a
     // fully peeled graph has an EMPTY degree frame, whose global agg
     // yields sum=NULL — the census must read 0, not null.
     def census(r: Int, deg: DataFrame): DataFrame =
@@ -642,16 +647,15 @@ object Graph {
           (coalesce(sum("d"), lit(0L)) / 2).cast("long").as("n_edges"))
         .select(lit(r).as("round"), col("n_nodes"), col("n_edges"))
     var out: DataFrame = null
-    quietRounds(e.sparkSession, e.count()) {
+    quietRounds(e.sparkSession, edges.rows) {
     for (r <- 1 to rounds) {
-      val deg = degrees(e).localCheckpoint(true)
+      val deg = Cut(degrees(e)).df
       val cen = census(r - 1, deg)
       out = if (out == null) cen else out.unionAll(cen)
       val keep = deg.filter(col("d") >= k).select("n")
-      e = e.join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
+      e = Cut(e.join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
-        .select("u", "v")
-        .localCheckpoint(true)
+        .select("u", "v")).df
     }
     }
     // rounds = 0 is valid (census the input, no peeling): the loop
@@ -711,8 +715,7 @@ object Graph {
         // The capped adjacency feeds three consumers (deg + both wedge
         // sides); materialize once so the split/sort isn't re-derived
         // per consumer. Size is bounded by min(2E, n·cap) 16-byte rows.
-        adjFull.join(hubs, Seq("n"), "left_anti").unionAll(capped)
-          .localCheckpoint(true)
+        Cut(adjFull.join(hubs, Seq("n"), "left_anti").unionAll(capped)).df
       }
     val deg = adj.groupBy("n").agg(count(lit(1)).as("d"))
     // Wedges share the NEIGHBOR coordinate (a.m = b.m): common(u,v) is

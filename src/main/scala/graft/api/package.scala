@@ -401,7 +401,7 @@ package object api {
         .select(col("id"), col("nsh"), explode(col("shs")).as("g"))
         .select(col("id"), col("nsh"),
           conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long").as("gh"))
-      // NOT materialized (r18, reverting r17): an eager localCheckpoint
+      // NOT materialized (r18, reverting r17): a Cut
       // here pins a shingle-instance-linear frame to executor-local
       // blocks BEFORE the maxDf valve prunes it — measured 2.5× slower
       // at 32 cores than recomputing the codegen tokenize+shingle+md5
@@ -517,22 +517,20 @@ package object api {
         // canonical and never a self-loop. Connectivity is preserved
         // because b's new neighbor m(a) stays connected to a through a's
         // own emission (the paper's Lemma 1).
-        c = org.apache.spark.sql.graftx.Bridge.statsResetLeaf(c
+        c = org.apache.spark.sql.graftx.Bridge.statsResetLeaf(Cut(c
           .join(maybeB(parents(c)), col("a") === col("u"))
           .select(col("m").as("a"), col("b"))
-          .distinct()
-          .localCheckpoint(true))
+          .distinct()).df)
         // Small-star: every canonical edge (a,b) rewires its SMALLER
         // endpoint AND b itself to m(b) (m(b) ≤ a because a ∈ Γ(b)):
         // emits (m(b), a) — dropped when m(b) = a — and (m(b), b),
         // where m(b) < b always holds.
         val j = c.join(maybeB(parents(c)), col("b") === col("u"))
-        c = org.apache.spark.sql.graftx.Bridge.statsResetLeaf(j
+        c = org.apache.spark.sql.graftx.Bridge.statsResetLeaf(Cut(j
           .filter(col("m") =!= col("a"))
           .select(col("m").as("a"), col("a").as("b"))
           .union(j.select(col("m").as("a"), col("b")))
-          .distinct()
-          .localCheckpoint(true))
+          .distinct()).df)
         // Exact fixed-point probe: the edge set is all stars iff every
         // canonical edge (a,b) has m(a) = a and m(b) = a. One pass over
         // the (shrinking, checkpointed) edge set with the broadcastable
@@ -605,8 +603,8 @@ package object api {
       // and recomputing an expensive upstream (e.g. the MinHash LSH
       // pipeline feeding in candidate pairs) per round would dominate the
       // whole closure (measured: 60 s → 4 s on the dedup pipeline).
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true)
+      val sym = Cut(
+        e.union(e.select(col("dst").as("src"), col("src").as("dst")))).df
       var labels = nodes.select(nodeId.as("id"), nodeId.as("label"))
       val sp = edges.sparkSession
       def maybeB(df: DataFrame): DataFrame =
@@ -662,11 +660,11 @@ package object api {
         // iterative plan quickly costs more than executing the tiny
         // per-round jobs (measured: per-round checkpointing ≈ 3× faster
         // end-to-end than every-3-rounds on the dedup pipeline).
-        // statsResetLeaf on top: localCheckpoint INHERITS the origin
-        // stats, and the composed join squares sizeInBytes every round —
+        // statsResetLeaf on top: a Cut INHERITS the origin stats, and
+        // the composed join squares sizeInBytes every round —
         // megabyte-long BigInts stall planning after ~25 rounds.
         labels = org.apache.spark.sql.graftx.Bridge.statsResetLeaf(
-          labels.localCheckpoint(true))
+          Cut(labels).df)
         val s = labels.agg(sum(col("label").cast("decimal(38,0)")))
           .collect()(0).getDecimal(0)
         if (prevSum != null && s.compareTo(prevSum) == 0) converged = true
@@ -681,14 +679,13 @@ package object api {
         // smaller after 8 rounds of propagation.
         val la = labels.toDF("ka", "la")
         val lb = labels.toDF("kb", "lb")
-        val contracted = sym
+        val contracted = Cut(sym
           .join(maybeB(la), col("src") === col("ka"))
           .join(maybeB(lb), col("dst") === col("kb"))
           .filter(col("la") =!= col("lb"))
           .select(least(col("la"), col("lb")).as("a"),
             greatest(col("la"), col("lb")).as("b"))
-          .distinct()
-          .localCheckpoint(true)
+          .distinct()).df
         val roots = alternatingStars(contracted, iterations, maybeB)
         labels = labels
           .join(maybeB(roots.toDF("rk", "root")),
@@ -817,20 +814,18 @@ package object api {
       val nq = queries.count()
       quietRounds(queries.sparkSession, nq * poolK) {
       val c = candidates.select(candId.as("cand_id"), candVec.as("e"))
-      val pool = cosineTopK(queries, queryId, queryVec,
+      val pool = Cut(cosineTopK(queries, queryId, queryVec,
           candidates, candId, candVec, topK = poolK)
         .select(col("query_id"), col("cand_id"),
           round(col("cos"), 6).as("rel"))
-        .join(c, "cand_id")
-        .localCheckpoint(true)
-      val ps = pool.select(col("query_id"), col("cand_id").as("a"),
+        .join(c, "cand_id")).df
+      val ps = Cut(pool.select(col("query_id"), col("cand_id").as("a"),
           col("e").as("ea"))
         .join(pool.select(col("query_id"), col("cand_id").as("b"),
           col("e").as("eb")), "query_id")
         .filter(col("a") =!= col("b"))
         .select(col("query_id"), col("a"), col("b"),
-          round(cosine(col("ea"), col("eb")), 6).as("s"))
-        .localCheckpoint(true)
+          round(cosine(col("ea"), col("eb")), 6).as("s"))).df
       val rel = pool.select(col("query_id"), col("cand_id"), col("rel"))
       def argmax(scored: DataFrame, rank: Int): DataFrame = {
         val w = Window.partitionBy("query_id")
@@ -840,10 +835,9 @@ package object api {
           .select(col("query_id"), lit(rank).as("rank"), col("cand_id"),
             col("score"))
       }
-      var selected = argmax(
+      var selected = Cut(argmax(
         rel.select(col("query_id"), col("cand_id"),
-          round(col("rel") * lam, 6).as("score")), 1)
-        .localCheckpoint(true)
+          round(col("rel") * lam, 6).as("score")), 1)).df
       var r = 2
       while (r <= selectK) {
         val remaining = rel.join(
@@ -852,19 +846,13 @@ package object api {
         val expanded = remaining.join(
           selected.select(col("query_id"), col("cand_id").as("sb")),
           "query_id")
-        // Fresh attribute ids for the pair-sim side: expanded and ps both
-        // descend from pool, and Spark's self-join disambiguation cannot
-        // tell their lineages apart without a re-alias.
-        val psr = ps.select(col("query_id").as("ps_qid"),
-          col("a").as("ps_a"), col("b").as("ps_b"), col("s").as("ps_s"))
-        val pen = expanded.join(psr,
-            col("query_id") === col("ps_qid") &&
-              col("ps_a") === col("cand_id") && col("ps_b") === col("sb"))
+        val pen = expanded.join(ps, Seq("query_id"))
+          .filter(col("a") === col("cand_id") && col("b") === col("sb"))
           .groupBy(col("query_id"), col("cand_id"), col("rel"))
-          .agg(max(col("ps_s")).as("pen"))
+          .agg(max(col("s")).as("pen"))
         val scored = pen.select(col("query_id"), col("cand_id"),
           round(col("rel") * lam - col("pen") * inv, 6).as("score"))
-        selected = selected.unionAll(argmax(scored, r)).localCheckpoint(true)
+        selected = Cut(selected.unionAll(argmax(scored, r))).df
         r += 1
       }
       selected.select(col("query_id"), col("rank"), col("cand_id"),
@@ -983,8 +971,7 @@ package object api {
 
     private def prepVectors(
         df: DataFrame, id: Column, vec: Column): DataFrame =
-      df.select(id.as("vid"), vec.cast("array<double>").as("e"))
-        .localCheckpoint(true)
+      Cut(df.select(id.as("vid"), vec.cast("array<double>").as("e"))).df
 
     /** Product-quantization codebooks: the vector space is split into `m`
       * contiguous subspaces of dim/m dims, and each subspace gets its own
@@ -1020,11 +1007,10 @@ package object api {
       val dim = seedVecs.head.length
       require(dim % m == 0, s"dim $dim not divisible by m=$m")
       val sub = dim / m
-      val sv = v.select(col("vid"), posexplode(
+      val sv = Cut(v.select(col("vid"), posexplode(
           transform(sequence(lit(0), lit(m - 1)),
             i => slice(col("e"), i * lit(sub) + 1, lit(sub)))))
-        .select(col("vid"), (col("pos") + 1).as("s"), col("col").as("sv"))
-        .localCheckpoint(true)
+        .select(col("vid"), (col("pos") + 1).as("s"), col("col").as("sv"))).df
       var cb: Seq[Seq[Seq[Double]]] = // [m][k][sub]
         (0 until m).map(s => seedVecs.map(e => e.slice(s * sub, (s + 1) * sub)))
       var round = 0
@@ -1108,9 +1094,8 @@ package object api {
       val m = codebooks.length
       val sub = codebooks.head.head.length
       val cbl = typedlit(codebooks)
-      queries
-        .select(qid.as("query_id"), qvec.cast("array<double>").as("qe"))
-        .localCheckpoint(true)
+      Cut(queries
+        .select(qid.as("query_id"), qvec.cast("array<double>").as("qe"))).df
         .select(col("query_id"),
           transform(sequence(lit(1), lit(m)), s =>
             transform(element_at(cbl, s), c =>
@@ -3001,13 +2986,12 @@ package object api {
       require(rounds >= 1)
       val S = "\u001F"
       val SS = S + S
-      var wf = df.select(explode(split(text, " ")).as("w"))
+      var wf = Cut(df.select(explode(split(text, " ")).as("w"))
         .filter(length(col("w")) >= 2)
         .groupBy("w").agg(count(lit(1)).as("c"))
         .select(col("w"),
           regexp_replace(col("w"), "([\\s\\S])", S + "$1" + S).as("seq"),
-          col("c"))
-        .localCheckpoint(true)
+          col("c"))).df
       val merges = scala.collection.mutable.ArrayBuffer
         .empty[(Int, String, String, String, Long)]
       var r = 1
@@ -3036,10 +3020,9 @@ package object api {
           val row = top(0)
           val (l, rt, n) = (row.getString(0), row.getString(1), row.getLong(2))
           merges += ((r, l, rt, l + rt, n))
-          wf = wf.select(col("w"),
+          wf = Cut(wf.select(col("w"),
               replace(col("seq"), lit(S + l + SS + rt + S), lit(S + l + rt + S))
-                .as("seq"), col("c"))
-            .localCheckpoint(true)
+                .as("seq"), col("c"))).df
           r += 1
         }
       }
@@ -3500,8 +3483,7 @@ package object api {
       // Materialized once: the pair frame feeds both rank tables AND the
       // moment join — unmaterialized, the caller's upstream aggregation
       // ran three times (r17).
-      val b = df.select(x.cast("long").as("q"), y.cast("long").as("p"))
-        .localCheckpoint(true)
+      val b = Cut(df.select(x.cast("long").as("q"), y.cast("long").as("p"))).df
       def rank2(key: String): DataFrame = {
         val wlt = org.apache.spark.sql.expressions.Window.orderBy(key)
           .rowsBetween(Long.MinValue, -1)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Cut, Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2.D — aggregation operators.
@@ -1262,12 +1262,11 @@ object Aggregates extends QueryModule {
       "agg_mad",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val h = Tables.events(s, dir)
+        val h = Cut(Tables.events(s, dir)
           .filter(col("value").isNotNull)
           .select(col("event_type").as("et"),
             round(col("value") * 100, 0).cast("long").as("c"))
-          .groupBy("et", "c").agg(count(lit(1)).as("f"))
-          .localCheckpoint(true)
+          .groupBy("et", "c").agg(count(lit(1)).as("f"))).df
         val wc = Window.partitionBy("et").orderBy("c")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val med = h.withColumn("cum", sum("f").over(wc))
@@ -2788,7 +2787,9 @@ object Aggregates extends QueryModule {
             col("event_id"))
         val w = Window.partitionBy("user_id")
           .orderBy(col("us"), col("event_id"))
-        val sess = e
+        // session-cardinality; feeds the global-max probe AND the life
+        // table — unmaterialized, the sessionize window ran twice (r17)
+        val sess = Cut(e
           .withColumn("isn",
             when(col("us") - lag("us", 1).over(w) > 1800000000L ||
               lag("us", 1).over(w).isNull, 1L).otherwise(0L))
@@ -2796,21 +2797,17 @@ object Aggregates extends QueryModule {
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .groupBy("user_id", "seq")
           .agg(expr("(max(us) - min(us)) div 60000000").as("dur"),
-            max("us").as("mx"))
-          // session-cardinality; feeds the global-max probe AND the life
-          // table — unmaterialized, the sessionize window ran twice (r17)
-          .localCheckpoint(true)
+            max("us").as("mx"))).df
         val gmax = sess.agg(max("mx").as("gmx"))
-        val tbl = sess.crossJoin(broadcast(gmax))
+        // duration-cardinality; read by its own n_total rollup and the
+        // KM walk (r17)
+        val tbl = Cut(sess.crossJoin(broadcast(gmax))
           .select(col("dur"),
             when(col("mx") > col("gmx") - 7200000000L, 1L).otherwise(0L)
               .as("cens"))
           .groupBy("dur")
           .agg(sum(when(col("cens") === 0L, 1L).otherwise(0L)).as("d"),
-            sum("cens").as("c"))
-          // duration-cardinality; read by its own n_total rollup and the
-          // KM walk (r17)
-          .localCheckpoint(true)
+            sum("cens").as("c"))).df
         val byT = Window.orderBy("dur")
         val run = byT.rowsBetween(Window.unboundedPreceding,
           Window.currentRow)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables, Warm}
+import graft.{Cut, Q, QueryModule, Tables, Warm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,7 +46,7 @@ object Dedup extends QueryModule {
   private def plantedSigs(s: SparkSession, dir: String): DataFrame =
     Warm.frame("planted_sigs", s, dir)(
       graft.api.Dedup.minhashSignatures(
-        withPlanted(s, dir), col("doc_id"), col("text")))
+        withPlanted(s, dir), col("doc_id"), col("text"))).df
 
   /** Bench-warmup hook: build the planted-corpus signature index ahead
     * of the timed dedup keys.
@@ -392,7 +392,7 @@ object Dedup extends QueryModule {
       "dedup_fuzzy_cluster",
       (s, dir) => {
         val p = Tables.part(s, dir)
-        val pairs = graft.api.Joins.fuzzyJoin(
+        val pairs = Cut(graft.api.Joins.fuzzyJoin(
             p, col("p_partkey"), col("p_name"),
             Seq(col("p_brand"), col("p_size")),
             p.select(col("p_partkey").as("pk2"), col("p_name").as("pn2"),
@@ -400,8 +400,7 @@ object Dedup extends QueryModule {
             col("pk2"), col("pn2"), Seq(col("pb2"), col("ps2")),
             maxDist = 3)
           .filter(col("id_l") < col("id_r"))
-          .select(col("id_l"), col("id_r"))
-          .localCheckpoint(true)
+          .select(col("id_l"), col("id_r"))).df
         val nodes = pairs.select(col("id_l").as("n"))
           .unionAll(pairs.select(col("id_r").as("n"))).distinct()
         graft.api.Dedup.connectedComponents(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Session, Tables}
+import graft.{Cut, Q, QueryModule, Session, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -289,14 +289,12 @@ object Joins extends QueryModule {
           (conv(substring(md5(concat(lit(salt), id.cast("string"),
             lit("lon"))), 1, 15), 16, 10).cast("long")
             % 340000000L - 170000000L).as("lon"))
-        val fac = pts(Tables.supplier(s, dir), col("s_suppkey"), "kf")
-          .localCheckpoint(true)
-        val m = fac.count()
-        val eps = math.round(math.sqrt(4.08e16 / m))
+        val fac = Cut(pts(Tables.supplier(s, dir), col("s_suppkey"), "kf"))
+        val eps = math.round(math.sqrt(4.08e16 / fac.rows))
         graft.api.Joins.nearestFacility(
             pts(Tables.customer(s, dir), col("c_custkey"), "kc"),
             col("pid"), col("lat"), col("lon"),
-            fac, col("pid"), col("lat"), col("lon"),
+            fac.df, col("pid"), col("lat"), col("lon"),
             cellMicro = eps)
           .select(col("id").as("c_custkey"), col("nn_id").as("nn_suppkey"),
             col("d2"), col("phase"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Cut, Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -923,9 +923,9 @@ object Multimodal extends QueryModule {
             (id, bytes)
           }
           .toDF("doc_id", "payload")
-        val px = graft.api.Multimodal
-          .bmpGrayPixels(encoded, col("doc_id"), col("payload"))
-          .localCheckpoint(true) // decoded once, joined as both sides
+        // decoded once, joined as both sides
+        val px = Cut(graft.api.Multimodal
+          .bmpGrayPixels(encoded, col("doc_id"), col("payload"))).df
         val pairs = s.range(0, 20)
           .select(col("id").as("id_a"), (col("id") + 5).as("id_b"),
             lit("same_class").as("kind"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Cut, Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2.Q — data-quality auditing: the validation pass an ingestion service
@@ -806,7 +806,7 @@ object Quality extends QueryModule {
         val dig = md5(concat_ws("\u0001", col("o_custkey"),
           col("o_orderstatus"), col("o_orderpriority")))
         // Digest-once: each snapshot reduces to its (key, md5(payload))
-        // frame EXACTLY once and is localCheckpointed — the diff
+        // frame EXACTLY once and is cut ([[graft.Cut]]) — the diff
         // classification, the patch application, and the equality audit
         // all reuse the same two key-cardinality digest frames. (The
         // previous shape called api.Quality.applyPatch + a separate
@@ -814,10 +814,8 @@ object Quality extends QueryModule {
         // priced at 10.2 s under full costing; the patch semantics are
         // identical in digest space because every recon row carries the
         // digest of exactly the payload applyPatch would carry.)
-        val v1d = v1.select(col("o_orderkey").as("k"), dig.as("d"))
-          .localCheckpoint()
-        val v2d = v2.select(col("o_orderkey").as("k"), dig.as("d"))
-          .localCheckpoint()
+        val v1d = Cut(v1.select(col("o_orderkey").as("k"), dig.as("d"))).df
+        val v2d = Cut(v2.select(col("o_orderkey").as("k"), dig.as("d"))).df
         val diff = v1d.select(col("k"), col("d").as("digest_b"))
           .join(v2d.select(col("k"), col("d").as("digest_a")),
             Seq("k"), "full_outer")
@@ -932,9 +930,8 @@ object Quality extends QueryModule {
         // counts table is materialized once — every report branch below
         // reads it, never the raw table again (18 Exchanges → 7, and 6
         // full scans → 1, before this cut; PlanShapeSpec budgets it).
-        val cnts = Tables.events(s, dir)
-          .groupBy("user_id").agg(count(lit(1)).as("n"))
-          .localCheckpoint(true)
+        val cnts = Cut(Tables.events(s, dir)
+          .groupBy("user_id").agg(count(lit(1)).as("n"))).df
         val tot = cnts.agg(count(lit(1)).as("k"),
           sum("n").as("r"), max("n").as("mx"))
         val summary = tot.select(explode(array(

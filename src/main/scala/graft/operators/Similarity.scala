@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables, Warm}
+import graft.{Cut, Q, QueryModule, Tables, Warm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -122,7 +122,7 @@ object Similarity extends QueryModule {
     */
   private def pqEnc(s: SparkSession, dir: String): DataFrame =
     Warm.frame("pq_codes", s, dir)(graft.api.Similarity.pqEncode(
-      Tables.embeddings(s, dir), col("vec_id"), unitExprQ, pqCb(s, dir)))
+      Tables.embeddings(s, dir), col("vec_id"), unitExprQ, pqCb(s, dir))).df
 
   /** Exact brute-force cosine top-3 ground truth for the vec_id<50 query
     * set — the yardstick every ANN audit row compares against. Computed
@@ -144,7 +144,7 @@ object Similarity extends QueryModule {
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3)
         .select(col("query_id"), col("cand_id"))
-    })
+    }).df
 
   /** IVF centroids, same lifecycle as the PQ index: the coarse
     * quantizer is TRAINED once per (session, dir) and every consumer —
@@ -173,7 +173,7 @@ object Similarity extends QueryModule {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("m")))),
           p => p.getField("m").cast("float")).as("ce"))
-    })
+    }).df
 
   /** Spherical-k-means-trained centroids (5 Lloyd iterations on unit
     * vectors) for the trained-IVF path. Training input is the
@@ -189,7 +189,7 @@ object Similarity extends QueryModule {
         Tables.embeddings(s, dir), col("vec_id"), unitExprQ,
         k = 16, iterations = 5)
         .select(col("cid"),
-          transform(col("centroid"), x => x.cast("float")).as("ce")))
+          transform(col("centroid"), x => x.cast("float")).as("ce"))).df
 
   /** Build every index (PQ codebooks + codes, exact ground truth, both
     * IVF centroid tables) for `dir` ahead of time. Bench calls this in
@@ -681,7 +681,7 @@ object Similarity extends QueryModule {
       Tables.embeddings(s, dir)
         .select(col("vec_id"),
           transform(col("embedding"),
-            x => round(x.cast("double") * 1e4)).as("qd")))
+            x => round(x.cast("double") * 1e4)).as("qd"))).df
 
   /** min over chosen centers of the exact integer d² to `qd` (empty set
     * ⇒ distance to the origin, the deterministic Gonzalez seed).
@@ -773,7 +773,7 @@ object Similarity extends QueryModule {
         groupCols = Seq("n"),
         orderCols = Seq(("cq", true), ("m", false)), k = 8)
         .select(col("n"), col("m"))
-    })
+    }).df
 
   /** Expansion-round count shared by [[nndescentKnn]] and its oracle
     * replay [[nndescentSql]] — ONE constant, so a tuning change can
@@ -797,7 +797,7 @@ object Similarity extends QueryModule {
   private[graft] def nndescentKnn(
       s: SparkSession, dir: String, rounds: Int = NndRounds): DataFrame =
     // Warm.session, not Warm.frame: the build's last round is already a
-    // localCheckpoint, and a frame is cut once
+    // Cut, and a frame is cut once
     Warm.session(s"nndescent_knn_r$rounds", s, dir)(
       buildNndescentKnn(s, dir, rounds))
 
@@ -816,7 +816,7 @@ object Similarity extends QueryModule {
     val ring = v.select(col("vec_id").as("u"),
         explode(typedlit(Seq(-4, -3, -2, -1, 1, 2, 3, 4))).as("o"))
       .select(col("u"), pmod(col("u") + col("o"), lit(n)).as("m"))
-    var knn = top8(scored(ring)).localCheckpoint(true)
+    var knn = Cut(top8(scored(ring))).df
     for (_ <- 1 to rounds) {
       // reverse lists capped at 8 by the SAME (cq, id) order — in-degree
       // skew can't blow the candidate volume past n·(2k)² per round
@@ -828,7 +828,7 @@ object Similarity extends QueryModule {
         .filter(col("u") =!= col("m"))
         .unionAll(knn.select("u", "m"))
         .distinct()
-      knn = top8(scored(cand)).localCheckpoint(true)
+      knn = Cut(top8(scored(cand))).df
     }
     knn
   }
@@ -959,7 +959,7 @@ object Similarity extends QueryModule {
                 shiftleft(1L, i - 32), 0L)), 0L, (a, x) -> a + x)""")
       e.crossJoin(broadcast(meds))
         .select(col("vec_id"), col("e"), lo.as("lo"), hi.as("hi"))
-    })
+    }).df
 
   /** SQL replay of the binary-code build (double-cast, per-dim medians,
     * strict-> threshold, two-long packing) shared by the hamming keys.
@@ -1998,8 +1998,8 @@ object Similarity extends QueryModule {
           val expand = broadcast(beam)
             .join(g, col("cand_id") === col("n"))
             .select(col("query_id"), col("m").as("cand_id"))
-          visited = visited.unionByName(expand)
-            .distinct().localCheckpoint(true)
+          visited = Cut(visited.unionByName(expand)
+            .distinct()).df
           beam = rank(visited, 8).select("query_id", "cand_id")
         }
         }
@@ -2903,23 +2903,22 @@ object Similarity extends QueryModule {
           (conv(substring(md5(concat(lit("db"),
             col("c_custkey").cast("string"), lit(axis))), 1, 15), 16, 10)
             .cast("long") % m - off)
-        val pts = Tables.customer(s, dir).select(
+        val cut = Cut(Tables.customer(s, dir).select(
           col("c_custkey").as("id"),
           coord("lat", 120000000L, 60000000L).as("lat"),
-          coord("lon", 340000000L, 170000000L).as("lon"))
-          .localCheckpoint(true)
+          coord("lon", 340000000L, 170000000L).as("lon")))
+        val pts = cut.df
         // adaptive ε: 5·area/(π·n) under one IEEE sqrt+round both
         // engines share (area = 120e6 × 340e6 µdeg²)
-        val n = pts.count()
-        val eps = math.round(math.sqrt(6.494e16 / n))
-        val pairs = graft.api.Joins.geoCellJoin(
+        val eps = math.round(math.sqrt(6.494e16 / cut.rows))
+        val pairs = Cut(graft.api.Joins.geoCellJoin(
             pts, col("id"), col("lat"), col("lon"),
             pts, col("id"), col("lat"), col("lon"), cellMicro = eps)
           .filter(col("id_a") =!= col("id_b"))
-          .select("id_a", "id_b").localCheckpoint(true)
-        val cores = pairs.groupBy(col("id_a").as("id"))
+          .select("id_a", "id_b")).df
+        val cores = Cut(pairs.groupBy(col("id_a").as("id"))
           .agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= 4).select("id").localCheckpoint(true)
+          .filter(col("deg") >= 4).select("id")).df
         val coreEdges = pairs
           .join(cores.select(col("id").as("id_a")), Seq("id_a"), "left_semi")
           .join(cores.select(col("id").as("id_b")), Seq("id_b"), "left_semi")
@@ -2936,19 +2935,18 @@ object Similarity extends QueryModule {
         // safely broadcast at any harness scale — collapses each of the
         // ~25 closure rounds from 3 shuffles to 1 (measured 10.6 → ~5 s
         // at sf0.1).
-        val comp = graft.api.Dedup.connectedComponents(
+        val comp = Cut(graft.api.Dedup.connectedComponents(
           cores, col("id"), coreEdges, col("id_a"), col("id_b"),
           iterations = 30, broadcastLabels = true)
-          .select(col("id"), col("component")).localCheckpoint(true)
+          .select(col("id"), col("component"))).df
         val border = pairs
           .join(cores.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
           .join(comp.select(col("id").as("id_b"), col("component")),
             Seq("id_b"))
           .groupBy(col("id_a").as("id"))
           .agg(min(col("component")).as("component"))
-        val clustered = comp.withColumn("is_core", lit(1L))
-          .unionByName(border.withColumn("is_core", lit(0L)))
-          .localCheckpoint(true)
+        val clustered = Cut(comp.withColumn("is_core", lit(1L))
+          .unionByName(border.withColumn("is_core", lit(0L)))).df
         val census = clustered.groupBy("component")
           .agg(sum(col("is_core")).as("n_core"),
             sum(lit(1L) - col("is_core")).as("n_border"),
@@ -3415,11 +3413,10 @@ object Similarity extends QueryModule {
         val pick = gap.orderBy(desc("g"), asc("dim")).limit(2)
           .select(col("dim"), row_number()
             .over(Window.orderBy(desc("g"), asc("dim"))).as("rk"))
-        val f = dims.join(broadcast(pick), Seq("dim"))
+        val f = Cut(dims.join(broadcast(pick), Seq("dim"))
           .groupBy("vec_id", "y")
           .agg(max(when(col("rk") === 1, col("x"))).as("x1"),
-            max(when(col("rk") === 2, col("x"))).as("x2"))
-          .localCheckpoint(true)
+            max(when(col("rk") === 2, col("x"))).as("x2"))).df
         val test = f.filter(col("vec_id") % 2 === 1)
         val out = Seq(4L, 2L, 1L).map { div =>
           val train = f.filter(col("vec_id") % 2 === 0 &&
@@ -4714,12 +4711,11 @@ object Similarity extends QueryModule {
         val f = Tables.documents(s, dir).select(
           size(split(col("text"), " ")).cast("long").as("x"),
           col("n_chars").as("y"))
-        val byx = f.groupBy("x").agg(
+        // bin-cardinality; feeds the cumulative walk AND the totals
+        // rollup (below), so the fact scan runs once (r17)
+        val byx = Cut(f.groupBy("x").agg(
           count(lit(1)).as("n"),
-          sum(col("y").cast(dec)).as("sy"))
-          // bin-cardinality; feeds the cumulative walk AND the totals
-          // rollup (below), so the fact scan runs once (r17)
-          .localCheckpoint(true)
+          sum(col("y").cast(dec)).as("sy"))).df
         // totals fold out of the bin frame — the r16 shape re-scanned
         // the fact table for one global aggregate
         val tot = byx.agg(

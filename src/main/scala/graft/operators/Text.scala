@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Cut, Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2.I (text half) — text analysis for a training-data pipeline: corpus
@@ -296,9 +296,8 @@ object Text extends QueryModule {
         // shuffled the token stream twice for the same information.
         // Materialized once for its two consumers (df → top broadcast,
         // and the tf·idf weights).
-        val tf = tok.groupBy("doc_id", "term")
-          .agg(count(lit(1)).as("tf"))
-          .localCheckpoint(true)
+        val tf = Cut(tok.groupBy("doc_id", "term")
+          .agg(count(lit(1)).as("tf"))).df
         val dfF = tf.groupBy("term").agg(count(lit(1)).as("df"))
         val top = dfF.orderBy(desc("df"), asc("term")).limit(50)
           .select(col("term"), col("df"),
@@ -1199,10 +1198,9 @@ object Text extends QueryModule {
         // of the vocab-sized unigram table. The r16 shape re-tokenized
         // the corpus four times and shuffled the bigram stream twice
         // more through the groupBy + join-back on (prev, term) (r17).
-        val toks = Tables.documents(s, dir)
+        val toks = Cut(Tables.documents(s, dir)
           .select(col("doc_id"),
-            posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
-          .localCheckpoint(true)
+            posexplode(split(col("text"), " ")).as(Seq("pos", "term")))).df
         val w = Window.partitionBy("doc_id").orderBy("pos")
         val bg = toks
           .withColumn("prev", lag("term", 1).over(w))

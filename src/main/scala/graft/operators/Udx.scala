@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Cut, Q, QueryModule, Tables}
 import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
@@ -369,15 +369,14 @@ object Udx extends QueryModule {
         // One aggregate = census + fold; 3 rows out, each carrying the
         // digest node array. Checkpointed: the node explode and the
         // rank-target derivation both read it.
-        val dig = Tables.lineitem(s, dir)
+        val dig = Cut(Tables.lineitem(s, dir)
           .select(col("l_returnflag"),
             round(col("l_extendedprice") * 100).cast("long").as("cents"))
           .groupBy("l_returnflag")
           .agg(
             graft.api.Sketches.quantileDigestOfflineNodes(
               col("cents"), uBits, 2048).as("nodes"),
-            count(lit(1)).as("n"))
-          .localCheckpoint(true)
+            count(lit(1)).as("n"))).df
         val em = dig
           .select(col("l_returnflag"), col("n"),
             size(col("nodes")).cast("long").as("digest_nodes"),

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftx
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{classic, Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet, Expression, ExpressionSet}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution, SparkPlan}
 
 /** Column ⇄ Expression bridge for the custom Catalyst expressions in
   * graft.functions. Spark 4 routes Column through ColumnNode, and the
@@ -13,10 +16,10 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Re-leaf a (typically localCheckpointed) frame WITHOUT inheriting its
-    * origin plan's statistics. `Dataset.localCheckpoint` deliberately
-    * carries the origin stats onto the new `LogicalRDD` — correct for a
-    * one-shot cut, but fatal for a self-joining fixpoint: a round that
+  /** Re-leaf a cut frame ([[graft.Cut]]) WITHOUT inheriting its origin
+    * plan's statistics. A cut deliberately carries the origin stats onto
+    * the new `LogicalRDD` — correct for a one-shot cut, but fatal for a
+    * self-joining fixpoint: a round that
     * joins labels⋈labels SQUARES sizeInBytes, the checkpoint preserves
     * the square, and after k rounds the estimate is 2^(63·2^k) — a
     * BigInteger whose bit length overflows Catalyst's stats visitor at
@@ -32,6 +35,43 @@ object Bridge {
       org.apache.spark.sql.classic.SparkSession]
     sp.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
+  }
+
+  /** Runs `body` over `df`'s executed plan as the named SQL action, the
+    * way `Dataset`'s own (private) `withAction` runs its actions, so
+    * query-execution listeners see it.
+    */
+  def action[T](df: DataFrame, name: String)(body: SparkPlan => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      QueryExecution.withInternalError(s"""The "$name" action failed.""") {
+        qe.executedPlan.resetMetrics()
+        body(qe.executedPlan)
+      }
+    }
+  }
+
+  /** `rdd`, the rows of `origin`, as the leaf `Dataset.localCheckpoint`
+    * builds, with fresh attribute ids swapped by exprId (the full-equality
+    * match of `LogicalRDD.newInstance` left stale ids in constraints, and
+    * a Union over the leaf failed its constraint rewrite).
+    */
+  def leaf(rdd: RDD[InternalRow], origin: DataFrame): DataFrame = {
+    val l = LogicalRDD.fromDataset(rdd,
+      origin.asInstanceOf[classic.Dataset[_]], isStreaming = false)
+    val ids = AttributeMap(l.output.map(a => a -> a.newInstance()))
+    def swap[E <: Expression](e: E): E =
+      e.transform { case a: Attribute => ids.getOrElse(a, a) }.asInstanceOf[E]
+    val out = l.output.map(swap(_))
+    val stats = l.computeStats()
+    val sp = origin.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(sp, LogicalRDD(out, l.rdd,
+      l.outputPartitioning match { case p: Expression => swap(p); case p => p },
+      l.outputOrdering.map(swap(_)))(sp,
+      Some(stats.copy(attributeStats = AttributeMap(
+        stats.attributeStats.toSeq.map { case (a, v) => swap(a) -> v }))),
+      Some(ExpressionSet(l.constraints.toSeq.map(swap(_))
+        .filter(_.references.subsetOf(AttributeSet(out)))))))
   }
 
   /** Wrap a logical plan as a DataFrame (`Dataset.ofRows` is private[sql];

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The graph kernels (`api.Graph`) and the graph registry keys: hand
-  * graphs with known answers, invariants of the keys at sf0.001/sf0.01,
-  * and the contracts the kernels guard.
+/** The graph kernels (`api.Graph`, and `api.Dedup.connectedComponents`)
+  * and the graph registry keys: hand graphs with known answers,
+  * invariants of the keys at sf0.001/sf0.01, and the contracts the
+  * kernels guard.
   */
 class GraphSpec extends AnyFunSuite with SparkFixture {
 
@@ -197,5 +198,56 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(capped == brute(3))
     assert(kernel(Int.MaxValue) == brute(Int.MaxValue))
     assert(capped != kernel(Int.MaxValue), "the cap never bound")
+  }
+
+  test("connectedComponents: 200-node path converges at 30 rounds " +
+    "(stats-reset regression: pre-fix this overflowed BigInteger)") {
+    val sp = spark
+    import sp.implicits._
+    val n = 200
+    val edges = (0 until n - 1).map(i => (i.toLong, i.toLong + 1))
+      .toDF("src", "dst")
+    val nodes = (0 until n).map(_.toLong).toDF("id")
+    val comp = graft.api.Dedup.connectedComponents(
+      nodes, col("id"), edges, col("src"), col("dst"), iterations = 30)
+      .collect()
+    assert(comp.length == n)
+    // one component, labeled by the min node id
+    assert(comp.forall(_.getLong(1) == 0L))
+  }
+
+  test("connectedComponents: descending-id chain converges at the default " +
+    "cap (the layout where min-label + pointer jumping was O(diameter): " +
+    "label(label)=label stalls every jump, r17 find)") {
+    val sp = spark
+    import sp.implicits._
+    // Path 0 — 100 — 99 — 98 — … — 41: ids DESCEND away from the global
+    // min, so under the old algorithm node 41's label chain was
+    // 41→42→…→100→0 with label(label)=label at every prefix — the min
+    // spread one hop per round and 8 iterations left the far end
+    // unlabeled. The alternating large-star/small-star contraction
+    // converges in O(log² n) alternations on any layout.
+    val ids = 0L +: (100L to 41L by -1L)
+    val edges = ids.zip(ids.tail).toDF("s", "t")
+    val nodes = ids.toDF("nid")
+    val comp = api.Dedup.connectedComponents(
+      nodes, col("nid"), edges, col("s"), col("t"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp.size == ids.size)
+    assert(ids.forall(comp(_) == 0L),
+      s"non-converged labels: ${comp.filter(_._2 != 0L).take(5)}")
+  }
+
+  test("connectedComponents: two components + isolate keep exact min-id " +
+    "labels under the alternating algorithm (output contract unchanged)") {
+    val sp = spark
+    import sp.implicits._
+    val edges = Seq((7L, 3L), (3L, 9L), (20L, 25L)).toDF("s", "t")
+    val nodes = Seq(3L, 7L, 9L, 20L, 25L, 99L).toDF("nid")
+    val comp = api.Dedup.connectedComponents(
+      nodes, col("nid"), edges, col("s"), col("t"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp == Map(3L -> 3L, 7L -> 3L, 9L -> 3L,
+      20L -> 20L, 25L -> 20L, 99L -> 99L))
   }
 }

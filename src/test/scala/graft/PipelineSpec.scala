@@ -173,7 +173,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     // Directed: 1→2, 1→3, 2→3, 3→1, 4 dangling (edge 2→4 gives it rank).
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 1L))
       .toDF("s", "d")
-    val got = api.Graph.pageRank(edges, col("s"), col("d"),
+    val got = api.Graph.pageRank(
+      api.Graph.rankEdges(edges, col("s"), col("d")),
       iterations = 30, damping = 0.85)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // Reference power iteration, same dangling/teleport handling.
@@ -233,8 +234,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       (math.abs((i * 2654435761L) % 200), math.abs((i * 40503L + 7) % 200))
     }.filter { case (s, d) => s != d }.toDF("s", "d")
     def run(parts: Int): Map[Long, Long] =
-      api.Graph.pageRank(edges.repartition(parts), col("s"), col("d"),
-        iterations = 8, undirected = true)
+      api.Graph.pageRank(api.Graph.rankEdges(edges.repartition(parts),
+          col("s"), col("d"), undirected = true), iterations = 8)
         .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val a = run(1)
     val b = run(13)
@@ -1228,7 +1229,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     // stable thereafter — so rounds=4 must return exactly these.
     val e = Seq((1L, 10L), (1L, 11L), (2L, 11L), (2L, 12L))
       .toDF("c", "p")
-    val out = graft.api.Graph.hits(e, col("c"), col("p"), rounds = 4)
+    val out = graft.api.Graph.hits(
+        graft.api.Graph.bipartite(e, col("c"), col("p")), rounds = 4)
       .collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val S = 1000000000000000L

@@ -131,22 +131,6 @@ class Round13Spec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("connectedComponents: 200-node path converges at 30 rounds " +
-    "(stats-reset regression: pre-fix this overflowed BigInteger)") {
-    val sp = spark
-    import sp.implicits._
-    val n = 200
-    val edges = (0 until n - 1).map(i => (i.toLong, i.toLong + 1))
-      .toDF("src", "dst")
-    val nodes = (0 until n).map(_.toLong).toDF("id")
-    val comp = graft.api.Dedup.connectedComponents(
-      nodes, col("id"), edges, col("src"), col("dst"), iterations = 30)
-      .collect()
-    assert(comp.length == n)
-    // one component, labeled by the min node id
-    assert(comp.forall(_.getLong(1) == 0L))
-  }
-
   test("ml_dbscan_grid: census invariants and a real multi-cluster result") {
     val rows = SparkEntry.queries("ml_dbscan_grid")(spark, sf0001).collect()
     assert(rows.nonEmpty)

@@ -110,31 +110,6 @@ class Round14Spec extends AnyFunSuite with SparkFixture {
     assert(out.getOrElse(expectArm, 0L) == 1L,
       s"expected buy on arm $expectArm (residue $residue), got $out")
   }
-  test("nndescent: top-8 quality is monotone in rounds, bounded, deterministic") {
-    val sp = spark
-    import org.apache.spark.sql.functions.{avg, col, count, max}
-    // The NN-descent invariant: each round's candidate union CONTAINS
-    // the incumbent top-8, so mean neighbor quality can only improve.
-    val means = (0 to 3).map { r =>
-      graft.operators.Similarity.nndescentKnn(sp, sf0001, rounds = r)
-        .agg(avg("cq")).head().getDouble(0)
-    }
-    means.sliding(2).foreach { case Seq(a, b) =>
-      assert(b >= a, s"quality regressed across rounds: $means")
-    }
-    assert(means.last > means.head, s"no convergence at all: $means")
-    // bounded: exactly <= 8 neighbors per node, no self-loops
-    val g = graft.operators.Similarity.nndescentKnn(sp, sf0001, rounds = 2)
-    val per = g.groupBy("u").agg(count(lit(1)).as("c"))
-      .agg(max("c")).head().getLong(0)
-    assert(per <= 8, s"node with $per neighbors")
-    assert(g.filter(col("u") === col("m")).count() == 0)
-    // deterministic: a rebuild is bit-identical
-    val h1 = g.orderBy("u", "m").collect().toSeq
-    val h2 = graft.operators.Similarity.nndescentKnn(sp, sf0001, rounds = 2)
-      .orderBy("u", "m").collect().toSeq
-    assert(h1 == h2)
-  }
 }
 
 /** Test-only leaf plan emitting GenericInternalRow across 2 partitions. */

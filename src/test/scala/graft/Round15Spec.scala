@@ -3,9 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 regression pins for the r14 ADVICE findings: source-only
-  * Markov states (engine/oracle row-set alignment) and the NN-descent
-  * rounds-constant discipline (the counted-window retime valve is pinned
-  * in BenchSpec).
+  * Markov states (engine/oracle row-set alignment). The NN-descent
+  * rounds-constant pin lives in AnnRecallSpec and the counted-window
+  * retime valve in BenchSpec.
   */
 class Round15Spec extends AnyFunSuite with SparkFixture {
 
@@ -39,24 +39,6 @@ class Round15Spec extends AnyFunSuite with SparkFixture {
       out(0).getLong(2) == 10000L, out(0).toString)
     assert(out(1).getString(0) == "s" && out(1).getLong(1) == 1L &&
       out(1).getLong(2) == 0L, out(1).toString)
-  }
-
-  test("nndescent oracle SQL replays exactly NndRounds rounds and the " +
-    "graph is memoized per (session, dir, rounds)") {
-    // The rounds constant and the oracle's CTE depth derive from ONE
-    // value — a drift would rename the terminal CTE and break both
-    // oracle queries at driver time; this pins it at test time.
-    val sql = SparkEntry.oracleSql("sim_ann_nndescent")
-    val r = graft.operators.Similarity.NndRounds
-    assert(sql.contains(s"FROM k$r "), s"oracle must read k$r")
-    assert(!sql.contains(s"k${r + 1}"), "oracle replays too many rounds")
-    // Memoization: the second call must return the SAME frame reference
-    // (a rebuild is the 3.41 s VERDICT r14 defect).
-    val sp = spark
-    val dir = "/root/testdata/sf0.001"
-    val a = graft.operators.Similarity.nndescentKnn(sp, dir)
-    val b = graft.operators.Similarity.nndescentKnn(sp, dir)
-    assert(a eq b, "nndescentKnn must be memoized per (session, dir)")
   }
 
   test("text_bm25_topk: scores positive, ranks dense 1..5 per query, " +

@@ -3,47 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-17 regression pins: the connected-components convergence bug the
-  * grid-blocked sf0.1 dbscan oracle exposed (VERDICT r16 task 2), the
-  * engine-portable integer quantization in contamination_embedding
-  * (ADVICE r16), and the ScaleSlope cross-mode marker guard (ADVICE r16).
+/** Round-17 regression pins: the engine-portable integer quantization in
+  * contamination_embedding (ADVICE r16) and the grid-blocked dbscan
+  * oracle (VERDICT r16 task 2). The connected-components convergence
+  * pins live in GraphSpec.
   */
 class Round17Spec extends AnyFunSuite with SparkFixture {
-
-  test("connectedComponents: descending-id chain converges at the default " +
-    "cap (the layout where min-label + pointer jumping was O(diameter): " +
-    "label(label)=label stalls every jump, r17 find)") {
-    val sp = spark
-    import sp.implicits._
-    // Path 0 — 100 — 99 — 98 — … — 41: ids DESCEND away from the global
-    // min, so under the old algorithm node 41's label chain was
-    // 41→42→…→100→0 with label(label)=label at every prefix — the min
-    // spread one hop per round and 8 iterations left the far end
-    // unlabeled. The alternating large-star/small-star contraction
-    // converges in O(log² n) alternations on any layout.
-    val ids = 0L +: (100L to 41L by -1L)
-    val edges = ids.zip(ids.tail).toDF("s", "t")
-    val nodes = ids.toDF("nid")
-    val comp = api.Dedup.connectedComponents(
-      nodes, col("nid"), edges, col("s"), col("t"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp.size == ids.size)
-    assert(ids.forall(comp(_) == 0L),
-      s"non-converged labels: ${comp.filter(_._2 != 0L).take(5)}")
-  }
-
-  test("connectedComponents: two components + isolate keep exact min-id " +
-    "labels under the alternating algorithm (output contract unchanged)") {
-    val sp = spark
-    import sp.implicits._
-    val edges = Seq((7L, 3L), (3L, 9L), (20L, 25L)).toDF("s", "t")
-    val nodes = Seq(3L, 7L, 9L, 20L, 25L, 99L).toDF("nid")
-    val comp = api.Dedup.connectedComponents(
-      nodes, col("nid"), edges, col("s"), col("t"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp == Map(3L -> 3L, 7L -> 3L, 9L -> 3L,
-      20L -> 20L, 25L -> 20L, 99L -> 99L))
-  }
 
   test("contamination_embedding quantizes thresholds/tie-breaks via " +
     "floor(cos*1e6+0.5), not round(cos, 6) (ADVICE r16: Spark decimal-" +

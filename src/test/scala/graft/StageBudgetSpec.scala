@@ -47,17 +47,21 @@ class StageBudgetSpec extends AnyFunSuite with SparkFixture {
   // skip, so jobs == stages only when each job runs a single stage
   // (ml_kmeans).
   private val budgets: Seq[(String, Int, Int)] = Seq(
-    ("graph_pagerank", 27, 42), // measured 20/31 (5 rounds + AQE)
-    ("graph_bfs", 25, 42), // measured 18/31 (frontier + exit probes)
-    ("graph_sssp", 23, 33), // measured 17/24 (maxHops relaxations)
+    ("graph_pagerank", 21, 36), // measured 15/26 (5 rounds + AQE; the
+    // edge and node counts come from their cuts, and the fixpoint is
+    // not cut again)
+    ("graph_bfs", 19, 37), // measured 14/27 (frontier + exit probes;
+    // the adjacency count comes from its cut, the seed is not cut)
+    ("graph_sssp", 19, 29), // measured 14/21 (maxHops relaxations;
+    // the adjacency count comes from its cut, the seed is not cut)
     ("dedup_connected_components", 30, 65), // measured 22/48
     ("ml_kmeans", 29, 29), // measured 21/21 (5 Lloyd rounds)
     ("graph_label_propagation", 7, 17), // measured 5/12 (sizing
     // aggregate, one single-job 3-round fixpoint — the
     // no-per-round-checkpoint signature — and the community census; a
     // jump toward ~40 means rounds re-materialized)
-    ("graph_kcore", 22, 38) // measured 16/28 (4 × (deg + edge
-    // checkpoint) + final census union)
+    ("graph_kcore", 19, 36) // measured 14/26 (4 × (deg + edge cut) +
+    // final census union; the edge count comes from the warm edge cut)
   )
 
   budgets.foreach { case (key, maxJobs, maxStages) =>

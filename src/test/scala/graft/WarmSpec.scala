@@ -99,14 +99,14 @@ class WarmSpec extends AnyFunSuite with SparkFixture {
     }
     assert(v == 3)
     val f = Warm.frame("warmspec.outerFrame", spark, "d")(
-      Warm.frame("warmspec.innerFrame", spark, "d")(spark.range(5).toDF("id")))
-    assert(f.count() == 5)
+      Warm.frame("warmspec.innerFrame", spark, "d")(spark.range(5).toDF("id")).df)
+    assert(f.rows == 5 && f.df.count() == 5)
   }
 
   test("frames are cut once, by the catalog") {
     val f = Warm.frame("warmspec.cut", spark, "d")(spark.range(3).toDF("id"))
-    assert(f.queryExecution.logical.isInstanceOf[LogicalRDD],
-      f.queryExecution.logical.toString)
+    assert(f.df.queryExecution.logical.isInstanceOf[LogicalRDD],
+      f.df.queryExecution.logical.toString)
     assert(Warm.frame("warmspec.cut", spark, "d")(fail("rebuilt")) eq f)
   }
 
@@ -133,8 +133,8 @@ class WarmSpec extends AnyFunSuite with SparkFixture {
       assert(copy(d) == paths(d))
     }
     frames.foreach { case ((d, s), f) =>
-      assert(f.sparkSession eq s, s"$d: frame bound to another session")
-      assert(f.count() == rows(d), s"$d: frame holds another fixture's rows")
+      assert(f.df.sparkSession eq s, s"$d: frame bound to another session")
+      assert(f.df.count() == rows(d), s"$d: frame holds another fixture's rows")
     }
     dirs.foreach(d => assert(spark.read.parquet(paths(d)).count() == rows(d),
       s"$d: copy holds another fixture's rows"))
