@@ -3,8 +3,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
@@ -204,21 +203,10 @@ object Bench {
     * accepted-demo status (e.g. join_theta_range's by-design BNLJ) is
     * machine-readable instead of verdict folklore (VERDICT r10 task 8).
     *
-    * Walks the tree: an adaptive plan counts its current plan only (the
-    * final plan once executed, the initial one before), query stages
-    * count the plan they wrap, a reused exchange counts once, and
-    * subqueries count. The string of an executed adaptive plan holds
-    * both the final and the initial plan, so counting in it read every
-    * exchange twice.
+    * Counts the nodes of [[SparkEntry.planNodes]].
     */
   def planClass(plan: SparkPlan): String = {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case r: ReusedExchangeExec => nodes(r.child)
-      case _ => (p.children ++ p.subqueries).flatMap(nodes)
-    })
-    val all = nodes(plan)
+    val all = SparkEntry.planNodes(plan)
     val flags = Seq(
       if (all.exists(_.isInstanceOf[CartesianProductExec])) Some("cart") else None,
       if (all.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec])) Some("bnlj") else None

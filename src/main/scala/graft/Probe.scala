@@ -19,8 +19,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    prints its jobs and stages (wall seconds, tasks), each stream
   *    batch's `durationMs`, and the final (post-AQE) executed plan;
   *  - `census`: one line per key — jobs and first-attempt stages of the
-  *    counted run (construction + count()), and [[Bench.planClass]] of
-  *    the frame's plan before AQE re-plans it;
+  *    counted run (construction + count()), [[Bench.planClass]] of the
+  *    frame's plan before AQE re-plans it, `funnel=taken` or the guard
+  *    that kept the key out of the one-task plan ([[SparkEntry.oneTask]]),
+  *    and `parent_tasks`, the most tasks one stage of the key's count()
+  *    ran without that plan (the raw frame under the final-sort rule
+  *    alone, run a second time for a taken key);
   *  - `time`: [[Bench.warmup]], then `reps` [[Bench.attempt]]s per key, in
   *    the order given (a reversed key list is the reversed sweep that
   *    tells a slow key from a slow sweep position).
@@ -67,6 +71,17 @@ object Probe {
         if (e.stageInfo.attemptNumber() == 0) { stages.incrementAndGet(); () }
     })(body)
     (r, jobs.get, stages.get)
+  }
+
+  /** `body`'s result with the most tasks any one of its stages ran. */
+  def widestStage[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val widest = new AtomicInteger
+    val r = listening(spark, new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        widest.accumulateAndGet(e.stageInfo.numTasks, math.max); ()
+      }
+    })(body)
+    (r, widest.get)
   }
 
   def plan(spark: SparkSession, keys: Seq[String], sfDir: String,
@@ -116,13 +131,20 @@ object Probe {
 
   def census(spark: SparkSession, keys: Seq[String], sfDir: String,
       out: String => Unit = println): Unit =
-    resolve(keys).foreach { case (key, fn) =>
+    resolve(keys).foreach { case (key, _) =>
       try {
-        val (frame, jobs, stages) = schedulerWork(spark) {
-          val f = fn(spark, sfDir); f.count(); f
+        val q = SparkEntry.allQueries.find(_.name == key).get
+        val ((raw, frame, tasks), jobs, stages) = schedulerWork(spark) {
+          val r = q.run(spark, sfDir)
+          val f = SparkEntry.funnel(r)
+          (r, f, widestStage(spark)(f.count())._2)
         }
+        val refusal = SparkEntry.oneTask(raw).left.toOption
+        val parentTasks = if (refusal.nonEmpty) tasks
+          else widestStage(spark)(SparkEntry.oneTaskFinalSort(raw).count())._2
         out(s"census $key jobs=$jobs stages=$stages " +
-          s"plan=${Bench.planClass(frame.queryExecution.executedPlan)}")
+          s"plan=${Bench.planClass(frame.queryExecution.executedPlan)} " +
+          s"funnel=${refusal.getOrElse("taken")} parent_tasks=$parentTasks")
       } catch { case NonFatal(e) => out(s"census $key failed: $e") }
     }
 

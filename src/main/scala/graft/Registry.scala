@@ -15,21 +15,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ORDER BY a unique key on both sides, round double aggregates to 4
   * decimals on both sides, UTC session timezone, column names identical.
   *
-  * Final-sort policy: `run` ends in a plain global `orderBy`; the registry
-  * funnel ([[SparkEntry.queries]]) decides how it executes. The sort runs
-  * in one task over its input coalesced without a shuffle, so there is no
-  * range-sampling job and no extra shuffle stage, when the input's size
-  * estimate (`stats.sizeInBytes`) is small. Behind a shuffle on every path
-  * to a scan, small means at most the session's
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`: the coalesce folds
-  * only the stages after that shuffle into the sort's task. Where a file
-  * scan would run in the sort's task, it means at most
-  * `spark.sql.files.openCostInBytes`, a scan that plans as one task per
-  * file anyway. Other inputs keep the range exchange: inputs over their
-  * bound (often join products), scans that pick their own partitions (V2
-  * sources, bucketed tables) and inputs Spark cannot estimate (RDD
-  * leaves, generators). Either way the rows and their order are the same;
-  * compositions that call another key's `run` directly see the raw frame.
+  * Plan policy: `run` ends in a plain global `orderBy`; the registry
+  * funnel ([[SparkEntry.funnel]], behind [[SparkEntry.queries]]) decides
+  * how the frame executes. A batch frame whose leaves are plain file or
+  * local relations, ranges or sized RDD leaves, whose inputs sum to at
+  * most `spark.sql.files.openCostInBytes`, and that holds no cached
+  * input, explicit shuffle repartition, sample or nondeterministic
+  * expression runs as one task: a coalesce to one partition under every
+  * operator that needs its input clustered, so no exchange is planned
+  * and the query is one job plus its broadcasts (a frame whose one-task
+  * plan would still shuffle, a join Spark sizes over
+  * `spark.sql.maxSinglePartitionBytes`, is not taken). Any other frame keeps
+  * its plan, except that its final sort runs in one task over its input
+  * coalesced without a shuffle when that input is small: behind a
+  * shuffle on every path to a scan, at most the session's
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`; where a file scan
+  * would run in the sort's task, at most the file open cost. Other
+  * inputs keep the range exchange: inputs over their bound (often join
+  * products), scans that pick their own partitions (V2 sources,
+  * bucketed tables) and inputs Spark cannot estimate (RDD leaves,
+  * generators). Either way the rows and their order are the same;
+  * compositions that call another key's `run` directly see the raw
+  * frame.
   */
 final case class Q(
     name: String,

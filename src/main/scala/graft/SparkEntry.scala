@@ -3,12 +3,18 @@ package graft
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CoGroup,
-  Deduplicate, Distinct, Except, FlatMapGroupsWithState, Generate,
-  GlobalLimit, Intersect, LeafNode, LocalRelation, LogicalPlan, MapGroups,
-  MapPartitions, OneRowRelation, Project, RebalancePartitions, Repartition,
-  RepartitionByExpression, Sort, Window}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
+  CTERelationRef, CoGroup, Deduplicate, Distinct, Except,
+  FlatMapGroupsWithState, Generate, GlobalLimit, Intersect, Join, LeafNode,
+  LocalRelation, LogicalPlan, MapGroups, MapPartitions, OneRowRelation,
+  Project, Range, RebalancePartitions, Repartition, RepartitionByExpression,
+  Sample, Sort, Window, WindowGroupLimit}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.graftx.Bridge
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -49,13 +55,144 @@ object SparkEntry {
     queries("agg_group")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Every result
-    * passes through [[oneTaskFinalSort]]; compositions that call another
-    * key's `run` directly get the raw frame.
+    * passes through [[funnel]]; compositions that call another key's
+    * `run` directly get the raw frame.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map { q =>
-      q.name -> ((s: SparkSession, dir: String) => oneTaskFinalSort(q.run(s, dir)))
+      q.name -> ((s: SparkSession, dir: String) => funnel(q.run(s, dir)))
     }.toMap
+
+  /** The registry's plan policy ([[Q]]): a frame whose inputs fit one
+    * file-open cost runs as one task ([[oneTaskPlan]]); any other frame
+    * keeps its plan, except that a small input to its final sort is
+    * sorted in one task ([[oneTaskFinalSort]]).
+    */
+  private[graft] def funnel(df: DataFrame): DataFrame =
+    oneTask(df).getOrElse(oneTaskFinalSort(df))
+
+  /** `df` planned as one task ([[oneTaskPlan]]), or the guard that keeps
+    * it out: one of [[oneTaskRefusal]]'s, or `exchange` when the one-task
+    * plan still shuffles. Spark shuffles both sides of a join, one task
+    * each or not, when it estimates either side over
+    * `spark.sql.maxSinglePartitionBytes` (a join product's estimate is
+    * the product of its sides'), and then the plan saves no job.
+    */
+  private[graft] def oneTask(df: DataFrame): Either[String, DataFrame] =
+    oneTaskRefusal(df).toLeft(oneTaskPlan(df)).filterOrElse(
+      one => !planNodes(one.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[ShuffleExchangeExec]), "exchange")
+
+  /** The nodes of a physical plan: an adaptive plan's current plan (the
+    * final plan once executed, the initial one before), the plan each
+    * query stage wraps, a reused exchange once, and subqueries.
+    */
+  private[graft] def planNodes(plan: SparkPlan): Seq[SparkPlan] =
+    plan +: (plan match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+      case r: ReusedExchangeExec => planNodes(r.child)
+      case p => (p.children ++ p.subqueries).flatMap(planNodes)
+    })
+
+  /** Why [[oneTaskPlan]] does not take `df`, or None when it does. Each
+    * guard names a frame whose partitions carry something a single task
+    * would lose or could not afford:
+    *  - `streaming`: a streaming frame plans per micro-batch;
+    *  - `leaf`: a leaf that picks its own partitions or that Spark cannot
+    *    size — anything but a non-bucketed file relation, a local
+    *    relation, a `Range` or a non-streaming RDD leaf with its origin's
+    *    statistics ([[Cut]]);
+    *  - `cached`: an input served from the cache, which keeps its
+    *    partitions;
+    *  - `repartition`: an explicit shuffle repartition, a layout the
+    *    query asked for;
+    *  - `nondeterministic`, `sample`: values that depend on the partition
+    *    index;
+    *  - `size`: leaves whose summed `stats.sizeInBytes` is over
+    *    `spark.sql.files.openCostInBytes`.
+    * Subquery plans count as part of the frame.
+    */
+  private def oneTaskRefusal(df: DataFrame): Option[String] = {
+    val qe = df.queryExecution
+    lazy val nodes = qe.analyzed.collectWithSubqueries { case n => n }
+    lazy val leaves = dataLeaves(qe.analyzed)
+    if (df.isStreaming) Some("streaming")
+    else if (!leaves.forall(oneTaskLeaf)) Some("leaf")
+    else if (qe.withCachedData.exists(_.isInstanceOf[InMemoryRelation]))
+      Some("cached")
+    else if (nodes.exists {
+      case Repartition(_, true, _) | _: RepartitionByExpression |
+          _: RebalancePartitions => true
+      case _ => false
+    }) Some("repartition")
+    else if (nodes.exists(_.expressions.exists(!_.deterministic)))
+      Some("nondeterministic")
+    else if (nodes.exists(_.isInstanceOf[Sample])) Some("sample")
+    else if (!Try(leaves.map(l => l.stats.sizeInBytes).sum <=
+        Bridge.fileOpenCostBytes(df.sparkSession)).getOrElse(false))
+      Some("size")
+    else None
+  }
+
+  /** `df` re-planned to run as one task: under every operator that
+    * needs its input clustered (an aggregate, window, join, global sort
+    * or grouped map) goes `Repartition(1, shuffle = false)`. It plans as
+    * `CoalesceExec(1)`, whose `SinglePartition` satisfies any
+    * distribution, so no exchange is planned and the query runs as one
+    * job (plus its broadcasts). The coalesce goes into the optimized
+    * plan, under the operators the optimizer made too (a distinct
+    * aggregate's expand, a subquery's join), and not over each leaf:
+    * an expand, a union or a full outer join reports no partitioning,
+    * so an operator above one would still plan an exchange. Filters and
+    * column pruning are already pushed into each scan. Only for frames
+    * [[oneTaskRefusal]] takes; a second pass leaves the plan unchanged.
+    */
+  private def oneTaskPlan(df: DataFrame): DataFrame = {
+    def single(p: LogicalPlan): LogicalPlan = {
+      val q = p.mapChildren(single).transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(single(s.plan))
+      }
+      if (!clusters(q)) q
+      else q.mapChildren {
+        case c @ Repartition(1, false, _) => c
+        case c => Repartition(1, shuffle = false, c)
+      }
+    }
+    Bridge.ofRows(df.sparkSession, single(df.queryExecution.optimizedPlan))
+  }
+
+  /** Whether `plan` plans as an operator that asks its input for a
+    * distribution: rows clustered by key, ordered, or all in one
+    * partition. A limit is left out: over a sort it plans as a top-k
+    * that gathers its own rows.
+    */
+  private def clusters(plan: LogicalPlan): Boolean = plan match {
+    case _: Aggregate | _: Window | _: WindowGroupLimit | _: Join |
+        _: CoGroup | _: MapGroups => true
+    case s: Sort => s.global
+    case _ => false
+  }
+
+  /** The leaves that read rows, with subquery plans: a CTE reference
+    * reads its definition, whose leaves are counted where it is defined.
+    */
+  private def dataLeaves(plan: LogicalPlan): Seq[LogicalPlan] =
+    plan.collectWithSubqueries {
+      case l: LeafNode if !l.isInstanceOf[CTERelationRef] => l
+    }
+
+  /** A leaf [[oneTaskPlan]] may coalesce: a plain file or local leaf
+    * ([[plainLeaf]]), a `Range`, or a non-streaming RDD leaf that keeps
+    * its origin's statistics (a [[Cut]]; an RDD leaf without them is
+    * estimated at `Long.MaxValue`).
+    */
+  private def oneTaskLeaf(leaf: LogicalPlan): Boolean = leaf match {
+    case _: Range => true
+    case r: LogicalRDD =>
+      !r.isStreaming && r.stats.sizeInBytes < r.conf.defaultSizeInBytes
+    case l => plainLeaf(l)
+  }
 
   /** The global sort at the root of `plan`, looking through Projects, and
     * a function that rebuilds `plan` with another node in the sort's place.

@@ -123,16 +123,20 @@ object Graph {
     * in-partition and the edge set shuffles exactly ONCE. The cut keeps
     * the physical layout (hash-partitioned and sorted on src), so every
     * round's share join reuses it: only the node-sized shares side moves
-    * per iteration, never the edges.
+    * per iteration, never the edges. The cut runs in the rounds' scope
+    * ([[quietRounds]], AQE off, width by the optimizer's row estimate:
+    * the edges are not counted yet): with AQE on, the coalesced shuffle
+    * read would leave the cut with no partitioning.
     */
   def rankEdges(edges: DataFrame, src: Column, dst: Column,
       undirected: Boolean = false): RankEdges = {
     val raw = edges.select(src.as("src"), dst.as("dst"))
-    new RankEdges(Cut((if (undirected)
+    val both = if (undirected)
       raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
-    else raw)
-      .repartition(col("src")).distinct()
-      .sortWithinPartitions("src")), undirected)
+    else raw
+    new RankEdges(quietRounds(edges.sparkSession, estimatedRows(both)) {
+      Cut(both.repartition(col("src")).distinct().sortWithinPartitions("src"))
+    }, undirected)
   }
 
   /** PageRank over an edge list. Each round: every node splits its rank

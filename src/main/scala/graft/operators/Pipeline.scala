@@ -1788,7 +1788,7 @@ object Pipeline extends QueryModule {
           conv(substring(md5(binKey), 1, 15), 16, 10).cast("long") % 8L)
         val sink = s"${Scratch.fresh("pipeline_write_shards")}/shards"
         assigned.write.partitionBy("training_shard").parquet(sink)
-        s.read.parquet(sink)
+        s.read.schema(assigned.schema).parquet(sink)
           .groupBy("training_shard")
           .agg(count(lit(1)).as("n_docs"),
             countDistinct(concat_ws("/", col("group"), col("shard"),

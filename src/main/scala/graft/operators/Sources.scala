@@ -42,11 +42,11 @@ object Sources extends QueryModule {
           .select(col("c_custkey"), lit("UPGRADED").as("c_mktsegment"),
             (col("c_acctbal") + 1000.0).as("c_acctbal"))
           .withColumn("version", lit(1))
-        val staged = graft.api.Layout.publish(
-          base.unionByName(updates), s"$out/table")
+        val table = base.unionByName(updates)
+        val staged = graft.api.Layout.publish(table, s"$out/table")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("c_custkey").orderBy(desc("version"))
-        s.read.parquet(staged)
+        s.read.schema(table.schema).parquet(staged)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("c_custkey"), col("c_mktsegment"),
@@ -222,7 +222,7 @@ object Sources extends QueryModule {
       "scan_partition_pruned",
       (s, dir) => {
         val out = LayoutCache.partitionedLineitem(s, dir)
-        s.read.parquet(out)
+        s.read.schema(Tables.lineitem(s, dir).schema).parquet(out)
           .filter(col("l_returnflag") === "R")
           .groupBy("l_linestatus")
           .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 4).as("sum_price"))
@@ -247,7 +247,7 @@ object Sources extends QueryModule {
       "scan_zorder_pruned",
       (s, dir) => {
         val out = LayoutCache.zorderedLineitem(s, dir)
-        s.read.parquet(out)
+        s.read.schema(Tables.lineitem(s, dir).schema).parquet(out)
           .filter(col("l_partkey").between(50, 150) &&
             col("l_suppkey").between(3, 8))
           .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
@@ -274,7 +274,7 @@ object Sources extends QueryModule {
           ("A", "returned_a"), ("N", "kept"), ("R", "returned_r")))
           .toDF("flag", "flag_desc")
           .filter(col("flag_desc").startsWith("returned"))
-        s.read.parquet(out)
+        s.read.schema(Tables.lineitem(s, dir).schema).parquet(out)
           .join(dim, col("l_returnflag") === col("flag"))
           .groupBy("flag_desc")
           .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 4).as("sum_qty"))
@@ -330,9 +330,9 @@ object Sources extends QueryModule {
       "sink_parquet",
       (s, dir) => {
         val out = Scratch.fresh("sink_parquet")
-        Tables.lineitem(s, dir)
-          .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-        s.read.parquet(out)
+        val li = Tables.lineitem(s, dir)
+        li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+        s.read.schema(li.schema).parquet(out)
           .groupBy("l_returnflag")
           .agg(
             count(lit(1)).as("n_rows"),
@@ -534,9 +534,9 @@ object Sources extends QueryModule {
         val table = s"$root/table"
         val ev = Tables.events(s, dir)
         val frag = graft.api.Layout.publish(ev.repartition(32), table)
-        val before = s.read.parquet(frag)
+        val before = s.read.schema(ev.schema).parquet(frag)
         val compact = graft.api.Layout.publish(before.repartition(2), table)
-        val after = graft.api.Layout.readCurrent(s, table).get
+        val after = graft.api.Layout.readCurrent(s, table, ev.schema).get
         // Files.list holds a directory handle until closed — Using closes.
         val nFiles = (p: String) => scala.util.Using.resource(
             java.nio.file.Files.list(java.nio.file.Paths.get(p)))(
@@ -581,7 +581,7 @@ object Sources extends QueryModule {
         graft.api.Layout.publish(ev.filter(col("value") >= 10), table) // v2
         graft.api.Layout.publish(ev.filter(col("value") >= 50), table) // v3
         val aggs = (1L to 3L).map { v =>
-          val df = graft.api.Layout.readVersion(s, table, v).get
+          val df = graft.api.Layout.readVersion(s, table, v, ev.schema).get
           val r = df.agg(count(lit(1)),
             round(sum(col("value").cast("decimal(12,2)")), 4)
               .cast("double")).first()
@@ -592,7 +592,8 @@ object Sources extends QueryModule {
         val sp2 = s
         import sp2.implicits._
         aggs.map { case (v, n, sv) =>
-          (v, n, sv, graft.api.Layout.readVersion(s, table, v).isDefined)
+          (v, n, sv,
+            graft.api.Layout.readVersion(s, table, v, ev.schema).isDefined)
         }.toDF("version", "n", "sum_value", "readable_after_vacuum")
           .orderBy("version")
       },
@@ -663,7 +664,9 @@ object Sources extends QueryModule {
         // instead (the oracle's WHERE produces zero rows in that case too).
         val surviving = graft.api.Layout.currentManifest(sink)
         val kept =
-          if (surviving.nonEmpty) s.read.option("basePath", sink).parquet(surviving: _*)
+          if (surviving.nonEmpty)
+            s.read.schema(batch.schema).option("basePath", sink)
+              .parquet(surviving: _*)
           else s.createDataFrame(
             s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         kept
@@ -707,13 +710,13 @@ object Sources extends QueryModule {
         val root = Scratch.fresh("sink_quarantine_route")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("l_orderkey", "l_linenumber")
-        Tables.lineitem(s, dir)
+        val routed = Tables.lineitem(s, dir)
           .withColumn("reason",
             when(count(lit(1)).over(w) > 1, "duplicate_pk")
               .when(col("l_quantity") > 45, "quantity_range")
               .otherwise("clean"))
-          .write.partitionBy("reason").parquet(s"$root/routed")
-        s.read.parquet(s"$root/routed")
+        routed.write.partitionBy("reason").parquet(s"$root/routed")
+        s.read.schema(routed.schema).parquet(s"$root/routed")
           .groupBy("reason").agg(count(lit(1)).as("n_rows"))
           .orderBy("reason")
       },
@@ -758,7 +761,7 @@ object Sources extends QueryModule {
         fixed.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("day").parquet(sink)
-        s.read.parquet(sink)
+        s.read.schema(ev.schema).parquet(sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             // cents-exact double digest (the diffSnapshots contract):

@@ -327,7 +327,7 @@ object Streaming extends QueryModule {
           (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(sink)
         })
-        s.read.parquet(sink)
+        s.read.schema(ev.schema).parquet(sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             countDistinct("user_id").as("n_users"))
@@ -363,17 +363,18 @@ object Streaming extends QueryModule {
           "type_not_error" -> (col("event_type") =!= "error"),
           "user_present" -> col("user_id").isNotNull,
           "value_max_100" -> (col("value") <= lit(100.0)))
+        def audited(batch: DataFrame, bid: Long): DataFrame =
+          graft.api.Quality.expectations(batch, rules)
+            .withColumn("batch_id", lit(bid))
         drive(ev, s"$root/ckpt")(_.foreachBatch {
           (batch: DataFrame, bid: Long) =>
-            graft.api.Quality.expectations(batch, rules)
-              .withColumn("batch_id", lit(bid))
-              .write.mode("append").parquet(audit)
+            audited(batch, bid).write.mode("append").parquet(audit)
             batch.filter(col("event_type") =!= "error")
               .write.mode("append").parquet(good)
             batch.filter(col("event_type") === "error")
               .write.mode("append").parquet(quarantine)
         })
-        s.read.parquet(audit)
+        s.read.schema(audited(ev, 0L).schema).parquet(audit)
           .groupBy("rule")
           .agg(
             countDistinct(when(col("n_checked") > 0, col("batch_id")))
@@ -418,20 +419,22 @@ object Streaming extends QueryModule {
         val ev = Tables.events(s, dir)
         val sink = s"$root/sink"
         // No file limit: each run takes every file present in one batch.
-        def runOnce(): Unit =
-          drive(s.readStream.schema(ev.schema).parquet(s"$root/in")
+        def perDay: DataFrame =
+          s.readStream.schema(ev.schema).parquet(s"$root/in")
             .withWatermark("ts", "24 hours")
             .groupBy(window(col("ts"), "1 day").as("w"))
             .agg(count(lit(1)).as("n"))
             .select(col("w.start").cast("timestamp_ntz").as("day_start"),
-              col("n")), s"$root/ckpt")(
+              col("n"))
+        def runOnce(): Unit =
+          drive(perDay, s"$root/ckpt")(
             _.format("parquet").option("path", sink).outputMode("append"))
         writeSlice(ev.filter(cuts(0)), root, "a_early", 0)
         writeSlice(ev.filter(cuts(2)), root, "b_jump", 1)
         runOnce()
         writeSlice(ev.filter(cuts(1)), root, "c_late", 2)
         runOnce()
-        s.read.parquet(sink).orderBy("day_start")
+        s.read.schema(perDay.schema).parquet(sink).orderBy("day_start")
       },
       oracle = Some("""
         WITH wm AS (
@@ -469,7 +472,7 @@ object Streaming extends QueryModule {
           })
         runOnce(s"$root/ckpt")
         runOnce(s"$root/ckpt_replay") // full replay: same data, fresh offsets
-        s.read.parquet(sink)
+        s.read.schema(ev.withColumn("batch_id", lit(0L)).schema).parquet(sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), countDistinct("user_id").as("n_users"))
           .orderBy("event_type")
@@ -493,7 +496,7 @@ object Streaming extends QueryModule {
         val sink = s"$root/sink"
         drive(ev, s"$root/ckpt")(_.format("parquet")
           .partitionBy("event_type").option("path", sink))
-        s.read.parquet(sink)
+        s.read.schema(ev.schema).parquet(sink)
           .filter(col("event_type").isin("click", "purchase"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
@@ -559,7 +562,7 @@ object Streaming extends QueryModule {
         // the same checkpoint and processes only the unseen file.
         land(2)
         run()
-        s.read.parquet(sink)
+        s.read.schema(Tables.events(s, dir).schema).parquet(sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"),
             countDistinct("event_id").as("n_distinct_events"))
@@ -776,12 +779,13 @@ object Streaming extends QueryModule {
         // Emit-on-arrival: dropDuplicates emits survivors as they arrive,
         // so `settingsFor` skips the trailing no-data batch (it would only
         // evict state) and the oracle's 3-batch replay stays exact.
-        drive(ev.withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("user_id", "event_type"),
-          s"$root/ckpt")(_.foreachBatch { (batch: DataFrame, _: Long) =>
+        val kept = ev.withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("user_id", "event_type")
+        drive(kept, s"$root/ckpt")(_.foreachBatch {
+          (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(sink)
-          })
-        s.read.parquet(sink)
+        })
+        s.read.schema(kept.schema).parquet(sink)
           .groupBy("event_type").agg(count(lit(1)).as("n_kept"))
           .orderBy("event_type")
       },
@@ -879,7 +883,7 @@ object Streaming extends QueryModule {
         val sp = s
         import sp.implicits._
         val sink = s"$root/sink"
-        drive(ev.filter(col("event_type") === "purchase")
+        val updates = ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
           .mapGroupsWithState[(Long, Double), (Long, Long, Double)](
@@ -891,20 +895,22 @@ object Streaming extends QueryModule {
               rows.foreach { r => n += 1; t += r._2 }
               state.update((n, t))
               (uid, n, t)
-          }, s"$root/ckpt")(_.outputMode("update")
+          }
+        def stamped(batch: Dataset[(Long, Long, Double)], id: Long) =
+          batch.toDF("user_id", "n_purchases", "total")
+            .withColumn("batch_id", lit(id))
+        drive(updates, s"$root/ckpt")(_.outputMode("update")
           // Update-mode batches append to a batchId-stamped parquet sink
           // (executor-side, distributed); the final per-key update is then
           // the max-batch row on re-read — no data ever visits the driver.
           .foreachBatch { (batch: Dataset[(Long, Long, Double)], batchId: Long) =>
-            batch.toDF("user_id", "n_purchases", "total")
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(sink)
+            stamped(batch, batchId).write.mode("append").parquet(sink)
           })
         // One row per (user, batch) ⇒ the latest batch per user is the
         // final state — a standard last-update-per-key window on re-read.
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy(desc("batch_id"))
-        s.read.parquet(sink)
+        s.read.schema(stamped(updates, 0L).schema).parquet(sink)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("user_id"), col("n_purchases"),
@@ -929,23 +935,25 @@ object Streaming extends QueryModule {
         val sink = s"$root/sink"
         // `settingsFor` sets the RocksDB state store provider that
         // transformWithState requires.
-        drive(ev.select(col("user_id"), col("value")).as[(Long, Double)]
+        val updates = ev.select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
           .transformWithState(new UserStatsProcessor,
-            TimeMode.None(), OutputMode.Update()), s"$root/ckpt")(
+            TimeMode.None(), OutputMode.Update())
+        def stamped(batch: Dataset[(Long, Long, Double)], id: Long) =
+          batch.toDF("user_id", "n_events", "max_value")
+            .withColumn("batch_id", lit(id))
+        drive(updates, s"$root/ckpt")(
           _.outputMode("update")
           // Same distributed last-update-per-key pattern as
           // stream_stateful_custom: append batchId-stamped updates to
           // parquet, resolve the final row per key on re-read.
           .foreachBatch {
             (batch: Dataset[(Long, Long, Double)], batchId: Long) =>
-              batch.toDF("user_id", "n_events", "max_value")
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("append").parquet(sink)
+              stamped(batch, batchId).write.mode("append").parquet(sink)
           })
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy(desc("batch_id"))
-        s.read.parquet(sink)
+        s.read.schema(stamped(updates, 0L).schema).parquet(sink)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("user_id"), col("n_events"),
@@ -985,7 +993,7 @@ object Streaming extends QueryModule {
           (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(sink)
         })
-        s.read.parquet(sink)
+        s.read.schema(joined.schema).parquet(sink)
           .groupBy(col("s_user").as("user_id"))
           .agg(count(lit(1)).as("n_matches"),
             round(sum("p_value"), 4).as("sum_purchase_value"))
@@ -1049,7 +1057,7 @@ object Streaming extends QueryModule {
           (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(sink)
         })
-        s.read.parquet(sink)
+        s.read.schema(joined.schema).parquet(sink)
           .groupBy(col("s_user").as("user_id"))
           .agg(count(lit(1)).as("n_rows"),
             count(col("p_value")).as("n_matched"),

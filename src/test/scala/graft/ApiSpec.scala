@@ -330,8 +330,9 @@ class ApiSpec extends AnyFunSuite with SparkFixture {
     val sp = spark
     import sp.implicits._
     val root = Scratch.fresh("publish_spec")
-    api.Layout.publish(Seq((1L, "one")).toDF("k", "v"), root)
-    def current() = api.Layout.readCurrent(spark, root).get
+    val kv = Seq((1L, "one")).toDF("k", "v")
+    api.Layout.publish(kv, root)
+    def current() = api.Layout.readCurrent(spark, root, kv.schema).get
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(current() == Seq(1L))
     // Simulate an IN-FLIGHT second publish: the new version's data is on
@@ -413,27 +414,27 @@ class ApiSpec extends AnyFunSuite with SparkFixture {
     val sp = spark
     import sp.implicits._
     val root = s"${Scratch.fresh("layout_vacuum")}/table"
-    (1 to 4).foreach { i =>
-      api.Layout.publish(Seq((i.toLong, s"gen$i")).toDF("k", "v"), root)
-    }
+    def gen(i: Int) = Seq((i.toLong, s"gen$i")).toDF("k", "v")
+    val kv = gen(0).schema
+    (1 to 4).foreach(i => api.Layout.publish(gen(i), root))
     // time travel: every published version readable, content intact
     (1 to 4).foreach { i =>
-      val df = api.Layout.readVersion(spark, root, i.toLong)
+      val df = api.Layout.readVersion(spark, root, i.toLong, kv)
       assert(df.isDefined, s"v$i missing before vacuum")
       assert(df.get.select("v").first().getString(0) == s"gen$i")
     }
-    assert(api.Layout.readVersion(spark, root, 99L).isEmpty)
+    assert(api.Layout.readVersion(spark, root, 99L, kv).isEmpty)
     // vacuum keeps the newest 2 (v3, v4) and deletes v1, v2
     assert(api.Layout.vacuum(root, keepLast = 2) == Seq(1L, 2L))
-    assert(api.Layout.readVersion(spark, root, 1L).isEmpty)
-    assert(api.Layout.readVersion(spark, root, 2L).isEmpty)
-    assert(api.Layout.readVersion(spark, root, 3L).isDefined)
-    assert(api.Layout.readCurrent(spark, root).get
+    assert(api.Layout.readVersion(spark, root, 1L, kv).isEmpty)
+    assert(api.Layout.readVersion(spark, root, 2L, kv).isEmpty)
+    assert(api.Layout.readVersion(spark, root, 3L, kv).isDefined)
+    assert(api.Layout.readCurrent(spark, root, kv).get
       .select("v").first().getString(0) == "gen4")
     // the current pointer target survives even a keepLast=1 vacuum that
     // would otherwise be tempted past it
     assert(api.Layout.vacuum(root, keepLast = 1) == Seq(3L))
-    assert(api.Layout.readCurrent(spark, root).get.count() == 1)
+    assert(api.Layout.readCurrent(spark, root, kv).get.count() == 1)
     // idempotent: nothing left to retire
     assert(api.Layout.vacuum(root, keepLast = 1).isEmpty)
   }

@@ -25,6 +25,26 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       (5L, 5L) -> 0, (5L, 4L) -> 1, (5L, 3L) -> 2))
   }
 
+  test("rankEdges: the layout is hash-partitioned on src with AQE on") {
+    val sp = spark
+    import sp.implicits._
+    // The session keeps AQE on; the cut runs in the rounds' AQE-off
+    // scope, so the layout pageRank's edge join reuses keeps its
+    // partitioning instead of a coalesced shuffle read's none.
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val e = graft.api.Graph.rankEdges(
+      Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 2L)).toDF("s", "d"),
+      col("s"), col("d"))
+    val parts = e.df.queryExecution.analyzed.collectLeaves().map {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.outputPartitioning.toString
+      case l => l.nodeName
+    }
+    assert(parts.size == 1 && parts.head.startsWith("hashpartitioning(src"),
+      parts)
+    assert(e.rows == 3)
+  }
+
   test("graph_closeness: one row per seed, closeness in (0, 1]") {
     val rows = SparkEntry.queries("graph_closeness")(spark, sf0001).collect()
     assert(rows.length == 5)

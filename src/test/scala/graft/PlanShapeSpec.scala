@@ -11,6 +11,18 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
 
+  private lazy val byName = SparkEntry.allQueries.map(q => q.name -> q).toMap
+
+  /** The key's own plan, before the registry funnel re-plans it. */
+  private def ownPlan(name: String): String =
+    byName(name).run(spark, sf0001).queryExecution.executedPlan.toString
+
+  /** "taken" when the funnel plans `df` as one task, else the guard that
+    * keeps it out.
+    */
+  private def verdict(df: org.apache.spark.sql.DataFrame): String =
+    SparkEntry.oneTask(df).left.getOrElse("taken")
+
   test("sim_quantized_topk keeps the integer-dot kernel in codegen (no UDF)") {
     val p = plan("sim_quantized_topk")
     assert(p.contains("graft_qdot"), "custom expression missing from plan")
@@ -67,7 +79,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_group partial-aggregates before the shuffle") {
-    val p = plan("agg_group")
+    // The key's own plan: at sf0.001 the funnel runs it as one task.
+    val p = ownPlan("agg_group")
     assert(p.contains("partial_sum") || p.contains("HashAggregate"))
     assert(p.contains("Exchange hashpartitioning"))
   }
@@ -337,7 +350,6 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
                                 // once); size-histogram agg + two
                                 // 1-row/3-row SinglePartition steps +
                                 // final sort — never a key-set sort
-    val byName = SparkEntry.allQueries.map(q => q.name -> q).toMap
     budgets.foreach { case (name, maxEx) =>
       val p = byName(name).run(spark, sf0001).queryExecution.executedPlan.toString
       // Shuffle exchanges only: BroadcastExchange moves a dim table to
@@ -479,7 +491,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // sort_global sorts a projection of the orders scan, estimated below
     // spark.sql.files.openCostInBytes at sf0.001: no sampling job, no
     // range shuffle, and a scan that small is one task per file anyway.
-    val p = plan("sort_global")
+    // The final-sort rule alone: the funnel plans the key as one task.
+    val p = SparkEntry.oneTaskFinalSort(byName("sort_global").run(spark, sf0001))
+      .queryExecution.executedPlan.toString
     assert(!p.toLowerCase.contains("rangepartitioning"), p)
     assert(p.contains("Coalesce 1"), p)
   }
@@ -487,8 +501,12 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   test("final sort: a small input behind a shuffle sorts in one task") {
     // agg_group's sort input is a hash aggregate over a parquet scan: the
     // coalesce folds only the post-aggregate stage into the sort's task,
-    // and the scan below the aggregate's shuffle keeps its tasks.
-    val p = plan("agg_group")
+    // and the scan below the aggregate's shuffle keeps its tasks. A file
+    // open cost of 1 byte keeps the key out of the one-task plan, so the
+    // funnel hands it to the final-sort rule.
+    val p = Session.withConf(spark, "spark.sql.files.openCostInBytes" -> "1") {
+      plan("agg_group")
+    }
     assert(!p.toLowerCase.contains("rangepartitioning"), p)
     assert(p.contains("Coalesce 1"), p)
     assert(p.contains("Exchange hashpartitioning"), p)
@@ -515,15 +533,17 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     "the file open cost over a scan") {
     // Each key sorts in one task at sf0.001 (cases above); shrinking its
     // own bound below the estimate brings the range exchange back, and
-    // shrinking the other bound does not.
-    def rangeSorted(key: String, conf: String): Boolean =
-      Session.withConf(spark, conf -> "1") {
+    // shrinking the other bound does not. The file open cost also bounds
+    // the one-task plan, which takes both keys at the default bounds.
+    def rangeSorted(key: String, confs: String*): Boolean =
+      Session.withConf(spark, confs.map(_ -> "1"): _*) {
         plan(key).toLowerCase.contains("rangepartitioning")
       }
     val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val openCost = "spark.sql.files.openCostInBytes"
-    assert(rangeSorted("agg_group", advisory))
+    assert(rangeSorted("agg_group", advisory, openCost))
     assert(!rangeSorted("agg_group", openCost))
+    assert(!rangeSorted("agg_group", advisory))
     assert(rangeSorted("sort_global", openCost))
     assert(!rangeSorted("sort_global", advisory))
   }
@@ -543,7 +563,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
 
   test("final sort: the rewrite is idempotent") {
     import org.apache.spark.sql.catalyst.plans.logical.Repartition
-    val once = SparkEntry.queries("agg_group")(spark, sf0001)
+    val once = SparkEntry.oneTaskFinalSort(byName("agg_group").run(spark, sf0001))
     val plan1 = once.queryExecution.analyzed
     assert(SparkEntry.rootSort(plan1).exists(_._1.child match {
       case Repartition(1, false, _) => true
@@ -551,5 +571,99 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     }), plan1.treeString)
     val plan2 = SparkEntry.oneTaskFinalSort(once).queryExecution.analyzed
     assert(plan2 == plan1, s"second rewrite changed the plan:\n$plan2")
+  }
+
+  test("one-task plan: a second pass leaves the plan unchanged") {
+    val once = SparkEntry.funnel(byName("agg_group").run(spark, sf0001))
+    val plan1 = once.queryExecution.optimizedPlan
+    val plan2 = SparkEntry.funnel(once).queryExecution.optimizedPlan
+    assert(plan2 == plan1, s"second pass changed the plan:\n$plan2")
+  }
+
+  test("one-task plan: a small scan keeps its pushdowns and runs unshuffled") {
+    // The coalesce goes into the optimized plan, under the final sort,
+    // after the filters and the projection reached the scan.
+    val df = SparkEntry.queries("filter_in_between_like")(spark, sf0001)
+    assert(verdict(byName("filter_in_between_like").run(spark, sf0001)) ==
+      "taken")
+    val nodes = SparkEntry.planNodes(df.queryExecution.executedPlan)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("Coalesce 1"), p)
+    val scan = nodes.collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metadata
+    }.getOrElse(fail(s"no file scan:\n$p"))
+    assert(scan("PushedFilters").contains("In(o_orderpriority") &&
+      scan("PushedFilters").contains("GreaterThanOrEqual(o_totalprice"), scan)
+    assert(!scan("ReadSchema").contains("o_clerk"), scan)
+    assert(!p.contains("Exchange "), p)
+  }
+
+  test("one-task plan: the inputs' size bound is the file open cost") {
+    import org.apache.spark.sql.functions._
+    // A Range leaf of n rows is estimated at 8n bytes and a one-row
+    // relation at 1: 4 MiB exactly is taken, 4 MiB + 1 byte is not.
+    def input(n: Long) =
+      spark.range(n).toDF("id").union(spark.sql("SELECT 1L AS id"))
+        .groupBy(col("id") % 7).count()
+    assert(verdict(input(524287L)) == "taken")
+    assert(verdict(input(524288L)) == "size")
+  }
+
+  test("one-task plan: leaves that pick their partitions or have no size " +
+    "stay out") {
+    import org.apache.spark.sql.functions._
+    assert(verdict(byName("scan_dsv2_limit_pushdown").run(spark, sf0001)) ==
+      "leaf", "a V2 scan picks its own partitions")
+    assert(verdict(byName("udf_foreign_pipe").run(spark, sf0001)) == "leaf",
+      "an RDD leaf without statistics is estimated at Long.MaxValue")
+    assert(verdict(byName("scan_projection").run(spark, sf0001)) == "taken")
+    // A cut keeps its origin's statistics, so its leaf is sized.
+    val cut = Cut(spark.range(100).toDF("id")).df
+    assert(verdict(cut.groupBy(col("id") % 3).count()) == "taken")
+  }
+
+  test("one-task plan: partition-dependent values stay out") {
+    import org.apache.spark.sql.functions._
+    val base = spark.range(100).toDF("id")
+    assert(verdict(base.select(col("id"), rand(7).as("r"))) ==
+      "nondeterministic")
+    assert(verdict(base.select(col("id"), (col("id") * 7 % 5).as("r"))) ==
+      "taken")
+    assert(verdict(base.sample(0.5, 7)) == "sample")
+    assert(verdict(base.filter(col("id") % 2 === 0)) == "taken")
+  }
+
+  test("one-task plan: an explicit repartition, a cached input and a " +
+    "stream stay out") {
+    import org.apache.spark.sql.functions._
+    val base = spark.range(100).toDF("id")
+    assert(verdict(base.repartition(4).groupBy("id").count()) ==
+      "repartition")
+    assert(verdict(base.repartition(4, col("id"))) == "repartition")
+    assert(verdict(base.coalesce(4).groupBy("id").count()) == "taken")
+    val cached = spark.range(101).toDF("id").cache()
+    try {
+      assert(verdict(cached.groupBy("id").count()) == "cached")
+    } finally cached.unpersist(blocking = true)
+    assert(verdict(spark.range(101).toDF("id").groupBy("id").count()) ==
+      "taken")
+    val stream = spark.readStream.format("rate").load()
+    assert(verdict(stream.select(col("value"))) == "streaming")
+  }
+
+  test("one-task plan: a join Spark re-shuffles for its size estimate " +
+    "stays out") {
+    import org.apache.spark.sql.functions._
+    // A cross product's estimate is the product of its sides': over
+    // spark.sql.maxSinglePartitionBytes (128 MiB by default) Spark
+    // shuffles both sides of an equi-join even when each is one task.
+    // The aggregates keep the optimizer from reordering the joins.
+    def counts(n: Long) = {
+      def side(k: String) = spark.range(n).toDF(k)
+        .crossJoin(spark.range(n).toDF(k + "2")).groupBy(k).count()
+      side("a").join(side("c"), col("a") === col("c"))
+    }
+    assert(verdict(counts(3000L)) == "exchange") // (23 KiB)^2: 549 MiB
+    assert(verdict(counts(1000L)) == "taken")    // (7.8 KiB)^2: 61 MiB
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import java.math.MathContext
+
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every declared query must run end-to-end on sf0.001 and the flagship
@@ -17,6 +20,22 @@ class RegistrySmokeSpec extends AnyFunSuite with SparkFixture {
     assert(keys.size == SparkEntry.allQueries.size)
   }
 
+  /** A value with its doubles rounded to 8 significant digits (-0.0 as
+    * 0.0), so the summation order of another partitioning does not read
+    * as a different row; binary values compare by content.
+    */
+  private def norm(v: Any): Any = v match {
+    case d: Double if d.isNaN || d.isInfinite || d == 0.0 => d + 0.0
+    case d: Double => BigDecimal(d).round(new MathContext(8)).toDouble
+    case f: Float => norm(f.toDouble)
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(norm)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => norm(k) -> norm(x) }
+    case s: scala.collection.Seq[_] => s.map(norm)
+    case x => x
+  }
+
   SparkEntry.allQueries.foreach { q =>
     test(s"${q.name} runs on sf0.001") {
       val df = q.run(spark, sf0001)
@@ -24,18 +43,29 @@ class RegistrySmokeSpec extends AnyFunSuite with SparkFixture {
       // Deterministic smoke: the query must execute without throwing.
       val n = df.count()
       assert(n >= 0)
-      // The registry funnel may sort in one partition instead of through
-      // a range exchange (SparkEntry.oneTaskFinalSort); an oracle-bearing
-      // sorted result must keep its rows and their order. Stream and sink
-      // keys are skipped: they cannot run twice.
-      if (q.oracle.nonEmpty && !q.name.startsWith("stream_") &&
-        !q.name.startsWith("sink_") &&
-        SparkEntry.rootSort(df.queryExecution.analyzed).nonEmpty) {
-        val raw = df.collect().toSeq
-        val funnel = SparkEntry.queries(q.name)(spark, sf0001).collect().toSeq
-        assert(funnel == raw, s"${q.name}: registry rows differ from q.run's " +
-          s"at row ${funnel.zip(raw).indexWhere { case (a, b) => a != b }} " +
-          s"(${funnel.size} vs ${raw.size} rows)")
+      // The registry funnel (SparkEntry.funnel) may run the whole frame
+      // as one task, or its final sort in one partition; either way it
+      // must keep the rows, and their order where the key sorts. A frame
+      // the one-task plan takes must run with no shuffle at all. Stream
+      // and sink keys are skipped: they cannot run twice.
+      if (!q.name.startsWith("stream_") && !q.name.startsWith("sink_")) {
+        val raw = df.collect().toSeq.map(norm)
+        val funneled = SparkEntry.funnel(df)
+        val got = funneled.collect().toSeq.map(norm)
+        if (SparkEntry.rootSort(df.queryExecution.analyzed).nonEmpty)
+          assert(got == raw, s"${q.name}: funnel rows differ from q.run's " +
+            s"at row ${got.zip(raw).indexWhere { case (a, b) => a != b }} " +
+            s"(${got.size} vs ${raw.size} rows)")
+        else
+          assert(got.groupBy(identity).view.mapValues(_.size).toMap ==
+            raw.groupBy(identity).view.mapValues(_.size).toMap,
+            s"${q.name}: funnel rows differ from q.run's as a multiset " +
+              s"(${got.size} vs ${raw.size} rows)")
+        if (SparkEntry.oneTask(df).isRight) {
+          val p = funneled.queryExecution.executedPlan
+          assert(Bench.planClass(p).startsWith("e0"),
+            s"${q.name}: the one-task plan still shuffles:\n$p")
+        }
       }
     }
   }
