@@ -19,15 +19,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * funnel ([[SparkEntry.funnel]], behind [[SparkEntry.queries]]) decides
   * how the frame executes. A batch frame whose leaves are plain file or
   * local relations, ranges or sized RDD leaves, whose inputs sum to at
-  * most `spark.sql.files.openCostInBytes`, and that holds no cached
-  * input, explicit shuffle repartition, sample or nondeterministic
-  * expression runs as one task: a coalesce to one partition under every
-  * operator that needs its input clustered, so no exchange is planned
-  * and the query is one job plus its broadcasts (a frame whose one-task
-  * plan would still shuffle, a join Spark sizes over
-  * `spark.sql.maxSinglePartitionBytes`, is not taken). Any other frame keeps
-  * its plan, except that its final sort runs in one task over its input
-  * coalesced without a shuffle when that input is small: behind a
+  * most `spark.sql.files.openCostInBytes`, whose every operator Spark
+  * estimates to output at most the AQE advisory partition size (a
+  * join's estimate is the product of its sides'), and that holds no
+  * cached input, explicit shuffle repartition, sample or
+  * nondeterministic expression runs as one task: a coalesce to one
+  * partition under every operator that needs its input clustered, so
+  * no exchange is planned and the query is one job plus its broadcasts
+  * (a frame whose one-task plan would still shuffle is not taken). Any
+  * other frame keeps its plan, except that its final sort runs in one
+  * task over its input coalesced without a shuffle when that input is
+  * small: behind a
   * shuffle on every path to a scan, at most the session's
   * `spark.sql.adaptive.advisoryPartitionSizeInBytes`; where a file scan
   * would run in the sort's task, at most the file open cost. Other

@@ -75,8 +75,9 @@ object SparkEntry {
     * it out: one of [[oneTaskRefusal]]'s, or `exchange` when the one-task
     * plan still shuffles. Spark shuffles both sides of a join, one task
     * each or not, when it estimates either side over
-    * `spark.sql.maxSinglePartitionBytes` (a join product's estimate is
-    * the product of its sides'), and then the plan saves no job.
+    * `spark.sql.maxSinglePartitionBytes`, and then the plan saves no job;
+    * the `output` guard keeps such a side out first unless that bound is
+    * set below the advisory partition size.
     */
   private[graft] def oneTask(df: DataFrame): Either[String, DataFrame] =
     oneTaskRefusal(df).toLeft(oneTaskPlan(df)).filterOrElse(
@@ -110,7 +111,14 @@ object SparkEntry {
     *  - `nondeterministic`, `sample`: values that depend on the partition
     *    index;
     *  - `size`: leaves whose summed `stats.sizeInBytes` is over
-    *    `spark.sql.files.openCostInBytes`.
+    *    `spark.sql.files.openCostInBytes`;
+    *  - `output`: an operator of the optimized plan whose output Spark
+    *    estimates over the AQE advisory partition size, the bytes AQE
+    *    gives one task. A join's estimate is the product of its sides',
+    *    so a cross or theta join of small inputs, which may make many
+    *    times their rows, stays out. A generator or an object flatMap is
+    *    estimated at its input's size, so the rows it makes are not seen
+    *    here.
     * Subquery plans count as part of the frame.
     */
   private def oneTaskRefusal(df: DataFrame): Option[String] = {
@@ -132,6 +140,10 @@ object SparkEntry {
     else if (!Try(leaves.map(l => l.stats.sizeInBytes).sum <=
         Bridge.fileOpenCostBytes(df.sparkSession)).getOrElse(false))
       Some("size")
+    else if (!Try(qe.optimizedPlan.collectWithSubqueries {
+      case n => n.stats.sizeInBytes
+    }.max <= Bridge.advisoryPartitionBytes(df.sparkSession)).getOrElse(false))
+      Some("output")
     else None
   }
 

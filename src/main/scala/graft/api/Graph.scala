@@ -123,10 +123,12 @@ object Graph {
     * in-partition and the edge set shuffles exactly ONCE. The cut keeps
     * the physical layout (hash-partitioned and sorted on src), so every
     * round's share join reuses it: only the node-sized shares side moves
-    * per iteration, never the edges. The cut runs in the rounds' scope
-    * ([[quietRounds]], AQE off, width by the optimizer's row estimate:
-    * the edges are not counted yet): with AQE on, the coalesced shuffle
-    * read would leave the cut with no partitioning.
+    * per iteration, never the edges. The cut runs with AQE off, at the
+    * session's shuffle width: with AQE on, the coalesced shuffle read
+    * would leave the cut with no partitioning. [[pageRank]] joins the
+    * layout without a broadcast only above 50M nodes, where its rounds
+    * run at the session's conf too ([[quietRounds]]), so the shares side
+    * shuffles to the layout's width and the edges stay put.
     */
   def rankEdges(edges: DataFrame, src: Column, dst: Column,
       undirected: Boolean = false): RankEdges = {
@@ -134,7 +136,8 @@ object Graph {
     val both = if (undirected)
       raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
     else raw
-    new RankEdges(quietRounds(edges.sparkSession, estimatedRows(both)) {
+    new RankEdges(graft.Session.withConf(edges.sparkSession,
+        "spark.sql.adaptive.enabled" -> "false") {
       Cut(both.repartition(col("src")).distinct().sortWithinPartitions("src"))
     }, undirected)
   }

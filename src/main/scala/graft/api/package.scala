@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Public operator API: the engine's dedup / similarity / text / sketch
   * primitives as functions over arbitrary DataFrames and Columns, not just
@@ -54,18 +53,6 @@ package object api {
       graft.Session.withConf(sp, "spark.sql.adaptive.enabled" -> "false",
         shufKey -> math.min(cap, math.max(4L, nRows / 50000L)).toString)(body)
     }
-
-  /** The optimizer's row estimate for `df`: its row count when Spark
-    * has one, else its size estimate over the size of one of its rows.
-    */
-  private[graft] def estimatedRows(df: DataFrame): Long = {
-    val plan = df.queryExecution.optimizedPlan
-    val stats = plan.stats
-    stats.rowCount.getOrElse(stats.sizeInBytes /
-      org.apache.spark.sql.catalyst.plans.logical.statsEstimation
-        .EstimationUtils.getSizePerRow(plan.output))
-      .min(Long.MaxValue).toLong
-  }
 
   /** Training-data deduplication primitives. */
   object Dedup {
@@ -1283,14 +1270,15 @@ package object api {
       * conditional-PUT or a real table format instead; the version-dir
       * layout carries over unchanged.) Old versions are left for
       * time-travel/rollback; retention of them is the caller's policy.
-      * Returns the published version directory.
+      * The version keeps `df`'s schema ([[graft.Stored]]), so reading it
+      * back infers none. Returns the published version directory.
       */
     def publish(df: DataFrame, tableRoot: String): String = {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       Files.createDirectories(Paths.get(tableRoot))
       val next = 1 + currentVersion(tableRoot).getOrElse(0L)
       val vdir = s"$tableRoot/v$next"
-      df.write.mode("error").parquet(vdir)
+      graft.Stored.write(df, vdir)(_.mode("error"))
       val tmp = Paths.get(tableRoot, s"_CURRENT.tmp$next")
       Files.writeString(tmp, s"v$next")
       Files.move(tmp, Paths.get(tableRoot, "_CURRENT"),
@@ -1299,16 +1287,15 @@ package object api {
       vdir
     }
 
-    /** Resolve the `_CURRENT` pointer and read that version directory
-      * with `schema`, the schema the table was published with (inferring
-      * it would run a job to read a file footer). Returns None when
-      * nothing has been published yet.
+    /** Resolve the `_CURRENT` pointer and read that version directory,
+      * with the schema [[publish]] kept beside it ([[graft.Stored]]; a
+      * version written without it is read with an inferred schema).
+      * Returns None when nothing has been published yet.
       */
     def readCurrent(
         s: org.apache.spark.sql.SparkSession,
-        tableRoot: String, schema: StructType): Option[DataFrame] =
-      currentVersion(tableRoot).map(v =>
-        s.read.schema(schema).parquet(s"$tableRoot/v$v"))
+        tableRoot: String): Option[DataFrame] =
+      currentVersion(tableRoot).map(v => graft.Stored.read(s, s"$tableRoot/v$v"))
 
     private def currentVersion(tableRoot: String): Option[Long] = {
       val p = java.nio.file.Paths.get(tableRoot, "_CURRENT")
@@ -1426,15 +1413,14 @@ package object api {
       * `v<N>` convention of [[publish]]). Immutable version dirs + the
       * monotone pointer make every historical version readable until
       * [[vacuum]] retires it — the rollback/debug/repro accessor every
-      * versioned table format exposes. `schema` as in [[readCurrent]].
+      * versioned table format exposes. Read as in [[readCurrent]].
       */
     def readVersion(
         s: org.apache.spark.sql.SparkSession,
-        tableRoot: String, version: Long,
-        schema: StructType): Option[DataFrame] = {
+        tableRoot: String, version: Long): Option[DataFrame] = {
       val d = java.nio.file.Paths.get(tableRoot, s"v$version")
       if (java.nio.file.Files.isDirectory(d))
-        Some(s.read.schema(schema).parquet(d.toString))
+        Some(graft.Stored.read(s, d.toString))
       else None
     }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Scratch, Tables, Warm}
+import graft.{Q, QueryModule, Scratch, Stored, Tables, Warm}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -379,8 +379,7 @@ object DsV2 extends QueryModule {
         // dp must be a STORED column of the dim file, not an expression:
         // the pruning rule only builds a runtime filter from a join key
         // it can tie to the filtered scan's output attribute
-        val dim = s.read.schema(dppDimRows(s, dir).schema)
-          .parquet(dppDim(s, dir))
+        val dim = Stored.read(s, dppDim(s, dir))
           .filter(col("c_custkey").isin(4L, 9L))
         fact.join(broadcast(dim), col("partition") === col("dp"))
           .groupBy("partition", "c_custkey", "c_name")
@@ -483,15 +482,11 @@ object DsV2 extends QueryModule {
   private[graft] def dppDim(s: SparkSession, dir: String): String =
     Warm.disk("dsv2_dpp_dim", dir) { root =>
       val out = s"$root/dim"
-      dppDimRows(s, dir).write.parquet(out)
+      Stored.write(Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_name"),
+          pmod(col("c_custkey"), lit(4)).cast("int").as("dp")), out)(identity)
       out
     }
-
-  /** The rows [[dppDim]] writes. */
-  private def dppDimRows(s: SparkSession, dir: String): DataFrame =
-    Tables.customer(s, dir)
-      .select(col("c_custkey"), col("c_name"),
-        pmod(col("c_custkey"), lit(4)).cast("int").as("dp"))
 
   /** Purchase-slice topic: the same events, filtered to purchases, keyed
     * and PARTITIONED identically to [[topic]] (user_id mod 4, key-sorted

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Tables, Warm}
+import graft.{Stored, Tables, Warm}
 import org.apache.spark.sql.SparkSession
 
 /** Derived table layouts (partitioned / bucketed copies of the corpus),
@@ -15,8 +15,8 @@ private[graft] object LayoutCache {
   /** lineitem partitioned by l_returnflag; returns the layout path. */
   def partitionedLineitem(s: SparkSession, dir: String): String =
     Warm.disk("layout_partitioned", dir) { out =>
-      Tables.lineitem(s, dir)
-        .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+      Stored.write(Tables.lineitem(s, dir), out)(
+        _.mode("overwrite").partitionBy("l_returnflag"))
       out
     }
 
@@ -30,9 +30,9 @@ private[graft] object LayoutCache {
   def zorderedLineitem(s: SparkSession, dir: String): String =
     Warm.disk("layout_zordered", dir) { out =>
       import org.apache.spark.sql.functions.col
-      graft.api.Layout.zorderBy(Tables.lineitem(s, dir),
-          col("l_partkey"), col("l_suppkey"), numFiles = 16)
-        .write.mode("overwrite").parquet(out)
+      Stored.write(graft.api.Layout.zorderBy(Tables.lineitem(s, dir),
+          col("l_partkey"), col("l_suppkey"), numFiles = 16), out)(
+        _.mode("overwrite"))
       out
     }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Cut, Q, QueryModule, Scratch, Tables, Warm}
+import graft.{Cut, Q, QueryModule, Scratch, Stored, Tables, Warm}
 import graft.api.Graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1787,8 +1787,8 @@ object Pipeline extends QueryModule {
         val assigned = packed.withColumn("training_shard",
           conv(substring(md5(binKey), 1, 15), 16, 10).cast("long") % 8L)
         val sink = s"${Scratch.fresh("pipeline_write_shards")}/shards"
-        assigned.write.partitionBy("training_shard").parquet(sink)
-        s.read.schema(assigned.schema).parquet(sink)
+        Stored.write(assigned, sink)(_.partitionBy("training_shard"))
+        Stored.read(s, sink)
           .groupBy("training_shard")
           .agg(count(lit(1)).as("n_docs"),
             countDistinct(concat_ws("/", col("group"), col("shard"),

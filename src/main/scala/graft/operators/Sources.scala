@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Scratch, Tables}
+import graft.{Q, QueryModule, Scratch, Stored, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2.A — batch scans, format ingestion, and sinks.
@@ -42,11 +42,11 @@ object Sources extends QueryModule {
           .select(col("c_custkey"), lit("UPGRADED").as("c_mktsegment"),
             (col("c_acctbal") + 1000.0).as("c_acctbal"))
           .withColumn("version", lit(1))
-        val table = base.unionByName(updates)
-        val staged = graft.api.Layout.publish(table, s"$out/table")
+        val staged = graft.api.Layout.publish(
+          base.unionByName(updates), s"$out/table")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("c_custkey").orderBy(desc("version"))
-        s.read.schema(table.schema).parquet(staged)
+        Stored.read(s, staged)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("c_custkey"), col("c_mktsegment"),
@@ -221,8 +221,7 @@ object Sources extends QueryModule {
     Q(
       "scan_partition_pruned",
       (s, dir) => {
-        val out = LayoutCache.partitionedLineitem(s, dir)
-        s.read.schema(Tables.lineitem(s, dir).schema).parquet(out)
+        Stored.read(s, LayoutCache.partitionedLineitem(s, dir))
           .filter(col("l_returnflag") === "R")
           .groupBy("l_linestatus")
           .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 4).as("sum_price"))
@@ -246,8 +245,7 @@ object Sources extends QueryModule {
     Q(
       "scan_zorder_pruned",
       (s, dir) => {
-        val out = LayoutCache.zorderedLineitem(s, dir)
-        s.read.schema(Tables.lineitem(s, dir).schema).parquet(out)
+        Stored.read(s, LayoutCache.zorderedLineitem(s, dir))
           .filter(col("l_partkey").between(50, 150) &&
             col("l_suppkey").between(3, 8))
           .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
@@ -269,12 +267,11 @@ object Sources extends QueryModule {
     Q(
       "join_dpp",
       (s, dir) => {
-        val out = LayoutCache.partitionedLineitem(s, dir)
         val dim = s.createDataFrame(Seq(
           ("A", "returned_a"), ("N", "kept"), ("R", "returned_r")))
           .toDF("flag", "flag_desc")
           .filter(col("flag_desc").startsWith("returned"))
-        s.read.schema(Tables.lineitem(s, dir).schema).parquet(out)
+        Stored.read(s, LayoutCache.partitionedLineitem(s, dir))
           .join(dim, col("l_returnflag") === col("flag"))
           .groupBy("flag_desc")
           .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 4).as("sum_qty"))
@@ -330,9 +327,9 @@ object Sources extends QueryModule {
       "sink_parquet",
       (s, dir) => {
         val out = Scratch.fresh("sink_parquet")
-        val li = Tables.lineitem(s, dir)
-        li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-        s.read.schema(li.schema).parquet(out)
+        Stored.write(Tables.lineitem(s, dir), out)(
+          _.mode("overwrite").partitionBy("l_returnflag"))
+        Stored.read(s, out)
           .groupBy("l_returnflag")
           .agg(
             count(lit(1)).as("n_rows"),
@@ -534,9 +531,9 @@ object Sources extends QueryModule {
         val table = s"$root/table"
         val ev = Tables.events(s, dir)
         val frag = graft.api.Layout.publish(ev.repartition(32), table)
-        val before = s.read.schema(ev.schema).parquet(frag)
+        val before = Stored.read(s, frag)
         val compact = graft.api.Layout.publish(before.repartition(2), table)
-        val after = graft.api.Layout.readCurrent(s, table, ev.schema).get
+        val after = graft.api.Layout.readCurrent(s, table).get
         // Files.list holds a directory handle until closed — Using closes.
         val nFiles = (p: String) => scala.util.Using.resource(
             java.nio.file.Files.list(java.nio.file.Paths.get(p)))(
@@ -581,7 +578,7 @@ object Sources extends QueryModule {
         graft.api.Layout.publish(ev.filter(col("value") >= 10), table) // v2
         graft.api.Layout.publish(ev.filter(col("value") >= 50), table) // v3
         val aggs = (1L to 3L).map { v =>
-          val df = graft.api.Layout.readVersion(s, table, v, ev.schema).get
+          val df = graft.api.Layout.readVersion(s, table, v).get
           val r = df.agg(count(lit(1)),
             round(sum(col("value").cast("decimal(12,2)")), 4)
               .cast("double")).first()
@@ -592,8 +589,7 @@ object Sources extends QueryModule {
         val sp2 = s
         import sp2.implicits._
         aggs.map { case (v, n, sv) =>
-          (v, n, sv,
-            graft.api.Layout.readVersion(s, table, v, ev.schema).isDefined)
+          (v, n, sv, graft.api.Layout.readVersion(s, table, v).isDefined)
         }.toDF("version", "n", "sum_value", "readable_after_vacuum")
           .orderBy("version")
       },
@@ -636,7 +632,7 @@ object Sources extends QueryModule {
         val sink = s"$root/sink"
         val batch = Tables.events(s, dir)
           .withColumn("day", expr("unix_micros(ts) div 86400000000"))
-        batch.write.partitionBy("day").parquet(sink)
+        Stored.write(batch, sink)(_.partitionBy("day"))
         // TTL anchored to the data's own horizon (keep the newest 17 days),
         // not a wall-clock literal — a date-shifted corpus regeneration
         // moves the cutoff with it. One scalar aggregate, driver-side.
@@ -665,8 +661,7 @@ object Sources extends QueryModule {
         val surviving = graft.api.Layout.currentManifest(sink)
         val kept =
           if (surviving.nonEmpty)
-            s.read.schema(batch.schema).option("basePath", sink)
-              .parquet(surviving: _*)
+            Stored.reader(s, sink).option("basePath", sink).parquet(surviving: _*)
           else s.createDataFrame(
             s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         kept
@@ -710,13 +705,12 @@ object Sources extends QueryModule {
         val root = Scratch.fresh("sink_quarantine_route")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("l_orderkey", "l_linenumber")
-        val routed = Tables.lineitem(s, dir)
+        Stored.write(Tables.lineitem(s, dir)
           .withColumn("reason",
             when(count(lit(1)).over(w) > 1, "duplicate_pk")
               .when(col("l_quantity") > 45, "quantity_range")
-              .otherwise("clean"))
-        routed.write.partitionBy("reason").parquet(s"$root/routed")
-        s.read.schema(routed.schema).parquet(s"$root/routed")
+              .otherwise("clean")), s"$root/routed")(_.partitionBy("reason"))
+        Stored.read(s, s"$root/routed")
           .groupBy("reason").agg(count(lit(1)).as("n_rows"))
           .orderBy("reason")
       },
@@ -750,7 +744,7 @@ object Sources extends QueryModule {
         val sink = s"$root/sink"
         val ev = Tables.events(s, dir)
           .withColumn("day", expr("unix_micros(ts) div 86400000000"))
-        ev.write.partitionBy("day").parquet(sink)
+        Stored.write(ev, sink)(_.partitionBy("day"))
         // The backfill day is anchored to the data's own horizon
         // (max - 19), not a wall-clock literal, so a date-shifted corpus
         // regeneration moves the target with it. One scalar aggregate.
@@ -758,10 +752,9 @@ object Sources extends QueryModule {
         // The backfill: that day re-derived with corrected values (2x).
         val fixed = ev.filter(col("day") === backfillDay)
           .withColumn("value", col("value") * 2)
-        fixed.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("day").parquet(sink)
-        s.read.schema(ev.schema).parquet(sink)
+        Stored.write(fixed, sink)(_.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").partitionBy("day"))
+        Stored.read(s, sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             // cents-exact double digest (the diffSnapshots contract):

@@ -5,7 +5,7 @@ import java.nio.file.attribute.FileTime
 
 import scala.util.Using
 
-import graft.{Q, QueryModule, Scratch, Session, Tables, Warm}
+import graft.{Q, QueryModule, Scratch, Session, Stored, Tables, Warm}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate,
@@ -325,9 +325,9 @@ object Streaming extends QueryModule {
         val sink = s"$root/sink"
         drive(ev, s"$root/ckpt")(_.foreachBatch {
           (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(sink)
+            Stored.write(batch, sink)(_.mode("append"))
         })
-        s.read.schema(ev.schema).parquet(sink)
+        Stored.read(s, sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             countDistinct("user_id").as("n_users"))
@@ -363,18 +363,16 @@ object Streaming extends QueryModule {
           "type_not_error" -> (col("event_type") =!= "error"),
           "user_present" -> col("user_id").isNotNull,
           "value_max_100" -> (col("value") <= lit(100.0)))
-        def audited(batch: DataFrame, bid: Long): DataFrame =
-          graft.api.Quality.expectations(batch, rules)
-            .withColumn("batch_id", lit(bid))
         drive(ev, s"$root/ckpt")(_.foreachBatch {
           (batch: DataFrame, bid: Long) =>
-            audited(batch, bid).write.mode("append").parquet(audit)
+            Stored.write(graft.api.Quality.expectations(batch, rules)
+              .withColumn("batch_id", lit(bid)), audit)(_.mode("append"))
             batch.filter(col("event_type") =!= "error")
               .write.mode("append").parquet(good)
             batch.filter(col("event_type") === "error")
               .write.mode("append").parquet(quarantine)
         })
-        s.read.schema(audited(ev, 0L).schema).parquet(audit)
+        Stored.read(s, audit)
           .groupBy("rule")
           .agg(
             countDistinct(when(col("n_checked") > 0, col("batch_id")))
@@ -419,13 +417,14 @@ object Streaming extends QueryModule {
         val ev = Tables.events(s, dir)
         val sink = s"$root/sink"
         // No file limit: each run takes every file present in one batch.
-        def perDay: DataFrame =
-          s.readStream.schema(ev.schema).parquet(s"$root/in")
-            .withWatermark("ts", "24 hours")
-            .groupBy(window(col("ts"), "1 day").as("w"))
-            .agg(count(lit(1)).as("n"))
-            .select(col("w.start").cast("timestamp_ntz").as("day_start"),
-              col("n"))
+        // Lazy: the file source needs its directory, which the first
+        // slice creates.
+        lazy val perDay = s.readStream.schema(ev.schema).parquet(s"$root/in")
+          .withWatermark("ts", "24 hours")
+          .groupBy(window(col("ts"), "1 day").as("w"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("w.start").cast("timestamp_ntz").as("day_start"),
+            col("n"))
         def runOnce(): Unit =
           drive(perDay, s"$root/ckpt")(
             _.format("parquet").option("path", sink).outputMode("append"))
@@ -434,7 +433,8 @@ object Streaming extends QueryModule {
         runOnce()
         writeSlice(ev.filter(cuts(1)), root, "c_late", 2)
         runOnce()
-        s.read.schema(perDay.schema).parquet(sink).orderBy("day_start")
+        Stored.note(sink, perDay.schema)
+        Stored.read(s, sink).orderBy("day_start")
       },
       oracle = Some("""
         WITH wm AS (
@@ -465,14 +465,13 @@ object Streaming extends QueryModule {
         val sink = s"$root/sink"
         def runOnce(ckpt: String): Unit =
           drive(ev, ckpt)(_.foreachBatch { (batch: DataFrame, id: Long) =>
-            batch.withColumn("batch_id", lit(id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(sink)
+            Stored.write(batch.withColumn("batch_id", lit(id)), sink)(
+              _.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id"))
           })
         runOnce(s"$root/ckpt")
         runOnce(s"$root/ckpt_replay") // full replay: same data, fresh offsets
-        s.read.schema(ev.withColumn("batch_id", lit(0L)).schema).parquet(sink)
+        Stored.read(s, sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), countDistinct("user_id").as("n_users"))
           .orderBy("event_type")
@@ -496,7 +495,8 @@ object Streaming extends QueryModule {
         val sink = s"$root/sink"
         drive(ev, s"$root/ckpt")(_.format("parquet")
           .partitionBy("event_type").option("path", sink))
-        s.read.schema(ev.schema).parquet(sink)
+        Stored.note(sink, ev.schema)
+        Stored.read(s, sink)
           .filter(col("event_type").isin("click", "purchase"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
@@ -553,7 +553,7 @@ object Streaming extends QueryModule {
         def run(): Unit =
           drive(fileStream(s, dir, s"$root/in"), s"$root/ckpt")(_.foreachBatch {
             (batch: DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(sink)
+              Stored.write(batch, sink)(_.mode("append"))
           })
         // Phase 1: two slices land, query runs to completion and stops.
         land(0); land(1)
@@ -562,7 +562,7 @@ object Streaming extends QueryModule {
         // the same checkpoint and processes only the unseen file.
         land(2)
         run()
-        s.read.schema(Tables.events(s, dir).schema).parquet(sink)
+        Stored.read(s, sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"),
             countDistinct("event_id").as("n_distinct_events"))
@@ -779,13 +779,12 @@ object Streaming extends QueryModule {
         // Emit-on-arrival: dropDuplicates emits survivors as they arrive,
         // so `settingsFor` skips the trailing no-data batch (it would only
         // evict state) and the oracle's 3-batch replay stays exact.
-        val kept = ev.withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("user_id", "event_type")
-        drive(kept, s"$root/ckpt")(_.foreachBatch {
-          (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(sink)
-        })
-        s.read.schema(kept.schema).parquet(sink)
+        drive(ev.withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("user_id", "event_type"),
+          s"$root/ckpt")(_.foreachBatch { (batch: DataFrame, _: Long) =>
+            Stored.write(batch, sink)(_.mode("append"))
+          })
+        Stored.read(s, sink)
           .groupBy("event_type").agg(count(lit(1)).as("n_kept"))
           .orderBy("event_type")
       },
@@ -883,7 +882,7 @@ object Streaming extends QueryModule {
         val sp = s
         import sp.implicits._
         val sink = s"$root/sink"
-        val updates = ev.filter(col("event_type") === "purchase")
+        drive(ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
           .mapGroupsWithState[(Long, Double), (Long, Long, Double)](
@@ -895,22 +894,19 @@ object Streaming extends QueryModule {
               rows.foreach { r => n += 1; t += r._2 }
               state.update((n, t))
               (uid, n, t)
-          }
-        def stamped(batch: Dataset[(Long, Long, Double)], id: Long) =
-          batch.toDF("user_id", "n_purchases", "total")
-            .withColumn("batch_id", lit(id))
-        drive(updates, s"$root/ckpt")(_.outputMode("update")
+          }, s"$root/ckpt")(_.outputMode("update")
           // Update-mode batches append to a batchId-stamped parquet sink
           // (executor-side, distributed); the final per-key update is then
           // the max-batch row on re-read — no data ever visits the driver.
           .foreachBatch { (batch: Dataset[(Long, Long, Double)], batchId: Long) =>
-            stamped(batch, batchId).write.mode("append").parquet(sink)
+            Stored.write(batch.toDF("user_id", "n_purchases", "total")
+              .withColumn("batch_id", lit(batchId)), sink)(_.mode("append"))
           })
         // One row per (user, batch) ⇒ the latest batch per user is the
         // final state — a standard last-update-per-key window on re-read.
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy(desc("batch_id"))
-        s.read.schema(stamped(updates, 0L).schema).parquet(sink)
+        Stored.read(s, sink)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("user_id"), col("n_purchases"),
@@ -935,25 +931,22 @@ object Streaming extends QueryModule {
         val sink = s"$root/sink"
         // `settingsFor` sets the RocksDB state store provider that
         // transformWithState requires.
-        val updates = ev.select(col("user_id"), col("value")).as[(Long, Double)]
+        drive(ev.select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
           .transformWithState(new UserStatsProcessor,
-            TimeMode.None(), OutputMode.Update())
-        def stamped(batch: Dataset[(Long, Long, Double)], id: Long) =
-          batch.toDF("user_id", "n_events", "max_value")
-            .withColumn("batch_id", lit(id))
-        drive(updates, s"$root/ckpt")(
+            TimeMode.None(), OutputMode.Update()), s"$root/ckpt")(
           _.outputMode("update")
           // Same distributed last-update-per-key pattern as
           // stream_stateful_custom: append batchId-stamped updates to
           // parquet, resolve the final row per key on re-read.
           .foreachBatch {
             (batch: Dataset[(Long, Long, Double)], batchId: Long) =>
-              stamped(batch, batchId).write.mode("append").parquet(sink)
+              Stored.write(batch.toDF("user_id", "n_events", "max_value")
+                .withColumn("batch_id", lit(batchId)), sink)(_.mode("append"))
           })
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy(desc("batch_id"))
-        s.read.schema(stamped(updates, 0L).schema).parquet(sink)
+        Stored.read(s, sink)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("user_id"), col("n_events"),
@@ -991,9 +984,9 @@ object Streaming extends QueryModule {
         // flush emits the null-padded unmatched rows).
         drive(joined, s"$root/ckpt")(_.foreachBatch {
           (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(sink)
+            Stored.write(batch, sink)(_.mode("append"))
         })
-        s.read.schema(joined.schema).parquet(sink)
+        Stored.read(s, sink)
           .groupBy(col("s_user").as("user_id"))
           .agg(count(lit(1)).as("n_matches"),
             round(sum("p_value"), 4).as("sum_purchase_value"))
@@ -1055,9 +1048,9 @@ object Streaming extends QueryModule {
         // batch (unlike the inner join).
         drive(joined, s"$root/ckpt")(_.foreachBatch {
           (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(sink)
+            Stored.write(batch, sink)(_.mode("append"))
         })
-        s.read.schema(joined.schema).parquet(sink)
+        Stored.read(s, sink)
           .groupBy(col("s_user").as("user_id"))
           .agg(count(lit(1)).as("n_rows"),
             count(col("p_value")).as("n_matched"),

@@ -330,9 +330,8 @@ class ApiSpec extends AnyFunSuite with SparkFixture {
     val sp = spark
     import sp.implicits._
     val root = Scratch.fresh("publish_spec")
-    val kv = Seq((1L, "one")).toDF("k", "v")
-    api.Layout.publish(kv, root)
-    def current() = api.Layout.readCurrent(spark, root, kv.schema).get
+    api.Layout.publish(Seq((1L, "one")).toDF("k", "v"), root)
+    def current() = api.Layout.readCurrent(spark, root).get
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(current() == Seq(1L))
     // Simulate an IN-FLIGHT second publish: the new version's data is on
@@ -352,6 +351,27 @@ class ApiSpec extends AnyFunSuite with SparkFixture {
     // And a subsequent publish() picks up after the manual v2.
     val v3 = api.Layout.publish(Seq((4L, "four")).toDF("k", "v"), root)
     assert(v3.endsWith("/v3") && current() == Seq(4L))
+  }
+
+  test("Layout.publish keeps the schema: a version reads back with no " +
+    "inference job") {
+    val sp = spark
+    import sp.implicits._
+    val root = Scratch.fresh("publish_schema")
+    val kv = Seq((1L, "one")).toDF("k", "v")
+    api.Layout.publish(kv, root)
+    def typed(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    // Inferring a parquet schema runs a job that reads a file footer.
+    val (kept, jobs, _) =
+      Probe.schedulerWork(spark)(api.Layout.readCurrent(spark, root).get)
+    assert(jobs == 0 && typed(kept) == typed(kv))
+    assert(kept.as[(Long, String)].collect().toSeq == Seq((1L, "one")))
+    // A version written without the kept schema is read with inference.
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "v1", "_schema.json"))
+    val (inferred, inferJobs, _) =
+      Probe.schedulerWork(spark)(api.Layout.readCurrent(spark, root).get)
+    assert(inferJobs > 0 && typed(inferred) == typed(kv))
   }
 
   test("Layout.publishManifest: retention swaps complete generations, never a mixture") {
@@ -414,27 +434,27 @@ class ApiSpec extends AnyFunSuite with SparkFixture {
     val sp = spark
     import sp.implicits._
     val root = s"${Scratch.fresh("layout_vacuum")}/table"
-    def gen(i: Int) = Seq((i.toLong, s"gen$i")).toDF("k", "v")
-    val kv = gen(0).schema
-    (1 to 4).foreach(i => api.Layout.publish(gen(i), root))
+    (1 to 4).foreach { i =>
+      api.Layout.publish(Seq((i.toLong, s"gen$i")).toDF("k", "v"), root)
+    }
     // time travel: every published version readable, content intact
     (1 to 4).foreach { i =>
-      val df = api.Layout.readVersion(spark, root, i.toLong, kv)
+      val df = api.Layout.readVersion(spark, root, i.toLong)
       assert(df.isDefined, s"v$i missing before vacuum")
       assert(df.get.select("v").first().getString(0) == s"gen$i")
     }
-    assert(api.Layout.readVersion(spark, root, 99L, kv).isEmpty)
+    assert(api.Layout.readVersion(spark, root, 99L).isEmpty)
     // vacuum keeps the newest 2 (v3, v4) and deletes v1, v2
     assert(api.Layout.vacuum(root, keepLast = 2) == Seq(1L, 2L))
-    assert(api.Layout.readVersion(spark, root, 1L, kv).isEmpty)
-    assert(api.Layout.readVersion(spark, root, 2L, kv).isEmpty)
-    assert(api.Layout.readVersion(spark, root, 3L, kv).isDefined)
-    assert(api.Layout.readCurrent(spark, root, kv).get
+    assert(api.Layout.readVersion(spark, root, 1L).isEmpty)
+    assert(api.Layout.readVersion(spark, root, 2L).isEmpty)
+    assert(api.Layout.readVersion(spark, root, 3L).isDefined)
+    assert(api.Layout.readCurrent(spark, root).get
       .select("v").first().getString(0) == "gen4")
     // the current pointer target survives even a keepLast=1 vacuum that
     // would otherwise be tempted past it
     assert(api.Layout.vacuum(root, keepLast = 1) == Seq(3L))
-    assert(api.Layout.readCurrent(spark, root, kv).get.count() == 1)
+    assert(api.Layout.readCurrent(spark, root).get.count() == 1)
     // idempotent: nothing left to retire
     assert(api.Layout.vacuum(root, keepLast = 1).isEmpty)
   }

@@ -533,8 +533,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     "the file open cost over a scan") {
     // Each key sorts in one task at sf0.001 (cases above); shrinking its
     // own bound below the estimate brings the range exchange back, and
-    // shrinking the other bound does not. The file open cost also bounds
-    // the one-task plan, which takes both keys at the default bounds.
+    // shrinking the other bound does not. The one-task plan takes both
+    // keys at the default bounds and is bounded by both: the file open
+    // cost on its inputs, the advisory size on every operator's output.
     def rangeSorted(key: String, confs: String*): Boolean =
       Session.withConf(spark, confs.map(_ -> "1"): _*) {
         plan(key).toLowerCase.contains("rangepartitioning")
@@ -543,7 +544,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     val openCost = "spark.sql.files.openCostInBytes"
     assert(rangeSorted("agg_group", advisory, openCost))
     assert(!rangeSorted("agg_group", openCost))
-    assert(!rangeSorted("agg_group", advisory))
+    assert(rangeSorted("agg_group", advisory))
     assert(rangeSorted("sort_global", openCost))
     assert(!rangeSorted("sort_global", advisory))
   }
@@ -651,19 +652,28 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     assert(verdict(stream.select(col("value"))) == "streaming")
   }
 
-  test("one-task plan: a join Spark re-shuffles for its size estimate " +
-    "stays out") {
+  test("one-task plan: an operator estimated over the advisory size, or a " +
+    "join Spark re-shuffles, stays out") {
     import org.apache.spark.sql.functions._
-    // A cross product's estimate is the product of its sides': over
-    // spark.sql.maxSinglePartitionBytes (128 MiB by default) Spark
-    // shuffles both sides of an equi-join even when each is one task.
-    // The aggregates keep the optimizer from reordering the joins.
-    def counts(n: Long) = {
-      def side(k: String) = spark.range(n).toDF(k)
-        .crossJoin(spark.range(n).toDF(k + "2")).groupBy(k).count()
+    // A cross product's estimate is the product of its sides': a Range of
+    // n rows is 8n bytes, so n = 1024 is the 64 MiB advisory size exactly.
+    def cross(n: Long) =
+      spark.range(n).toDF("a").crossJoin(spark.range(n).toDF("b"))
+    assert(verdict(cross(1024L)) == "taken")
+    assert(verdict(cross(1025L)) == "output")
+    // Over spark.sql.maxSinglePartitionBytes Spark shuffles both sides of
+    // a sort-merge join even when each is one task. The aggregates keep
+    // the optimizer from reordering the join; each side is 1200 bytes.
+    def counts = {
+      def side(k: String) = spark.range(100).toDF(k).groupBy(k).count()
       side("a").join(side("c"), col("a") === col("c"))
     }
-    assert(verdict(counts(3000L)) == "exchange") // (23 KiB)^2: 549 MiB
-    assert(verdict(counts(1000L)) == "taken")    // (7.8 KiB)^2: 61 MiB
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(verdict(counts) == "taken")
+      Session.withConf(spark, "spark.sql.maxSinglePartitionBytes" -> "1000") {
+        assert(verdict(counts) == "exchange")
+      }
+    }
   }
+
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.math.MathContext
-
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,19 +18,17 @@ class RegistrySmokeSpec extends AnyFunSuite with SparkFixture {
     assert(keys.size == SparkEntry.allQueries.size)
   }
 
-  /** A value with its doubles rounded to 8 significant digits (-0.0 as
-    * 0.0), so the summation order of another partitioning does not read
-    * as a different row; binary values compare by content.
+  /** A row as a comparable value, with Row's equality: binary values by
+    * content and NaN equal to NaN. Doubles compare exactly.
     */
-  private def norm(v: Any): Any = v match {
-    case d: Double if d.isNaN || d.isInfinite || d == 0.0 => d + 0.0
-    case d: Double => BigDecimal(d).round(new MathContext(8)).toDouble
-    case f: Float => norm(f.toDouble)
+  private def comparable(v: Any): Any = v match {
+    case d: Double if d.isNaN => "NaN"
+    case f: Float if f.isNaN => "NaN"
     case b: Array[Byte] => b.toSeq
-    case r: Row => r.toSeq.map(norm)
+    case r: Row => r.toSeq.map(comparable)
     case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => norm(k) -> norm(x) }
-    case s: scala.collection.Seq[_] => s.map(norm)
+      m.map { case (k, x) => comparable(k) -> comparable(x) }
+    case s: scala.collection.Seq[_] => s.map(comparable)
     case x => x
   }
 
@@ -49,9 +45,9 @@ class RegistrySmokeSpec extends AnyFunSuite with SparkFixture {
       // the one-task plan takes must run with no shuffle at all. Stream
       // and sink keys are skipped: they cannot run twice.
       if (!q.name.startsWith("stream_") && !q.name.startsWith("sink_")) {
-        val raw = df.collect().toSeq.map(norm)
+        val raw = df.collect().toSeq.map(comparable)
         val funneled = SparkEntry.funnel(df)
-        val got = funneled.collect().toSeq.map(norm)
+        val got = funneled.collect().toSeq.map(comparable)
         if (SparkEntry.rootSort(df.queryExecution.analyzed).nonEmpty)
           assert(got == raw, s"${q.name}: funnel rows differ from q.run's " +
             s"at row ${got.zip(raw).indexWhere { case (a, b) => a != b }} " +
